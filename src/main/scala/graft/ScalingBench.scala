@@ -337,8 +337,8 @@ object ScalingBench {
         s"""
            |## Copy pipeline N -> 4N (tools/copy_ladder.sh)
            |
-           |`Pipeline.copyJob` end-to-end (enumerate -> resume anti-join
-           |-> winners rollup -> byte attach -> format convert -> sink),
+           |`Pipeline.copyJob` end-to-end (region winners -> resume
+           |anti-join -> byte attach -> format convert -> sink),
            |800k-image corpus, zooms 4..10, 897k tiles / ~9.9 GB parquet
            |written. Kill/resume protocol + per-pass metrics:
            |BENCH/COPYJOB.md.

@@ -8,8 +8,9 @@ import graft.sql.TileFunctions
 import graft.sql.TileFunctions._
 
 /** The flagship pipelines: raster<->vector tile assignment, the
-  * enumerate -> anti-join -> lookup-join -> filter -> sink copy job
-  * (reference scripts/tc_copy.py:25-121 / examples/download.py:15-34),
+  * winners -> region filter -> resume anti-join -> payload attach ->
+  * convert -> sink copy job (reference scripts/tc_copy.py:25-121 /
+  * examples/download.py:15-34),
   * and the data-dependent BFS subdivision
   * (reference store/renderingtheworld.py:8-46).
   *
@@ -18,11 +19,12 @@ import graft.sql.TileFunctions._
   *    shuffle until the per-tile aggregation;
   *  - the per-tile render groups by cell id, which the sink then sorts
   *    by, so one shuffle serves both aggregation and layout;
-  *  - the pyramid side of region joins is a generator relation: tiny at
-  *    low z (broadcast), index-decomposed spark.range at high z (never
-  *    driver-materialized);
-  *  - resume is a left_anti join against sink coords only (column-pruned
-  *    scan of (z,x,y), no blobs).
+  *  - region joins never enumerate the pyramid: the winner coords are
+  *    filtered by the `inPyramid` predicate (or the per-level bounds
+  *    range join, `regionSemiJoin`), so region work follows the occupied
+  *    tiles, not the region's area;
+  *  - resume is a left_anti join of those winner coords against sink
+  *    coords only (column-pruned scan of (z,x,y), no blobs).
   */
 object Pipeline {
 
@@ -226,10 +228,17 @@ object Pipeline {
           lit("image_id"), col("image_id"),
           lit("img_count"), col("img_count").cast("string")).as("metadata"))
 
-  /** The copy/seed pipeline (reference examples/download.py:15-34 shape):
-    * enumerate the region pyramid, resume-anti-join against the sink,
-    * join rendered tiles from the corpus, convert format, write, record
-    * per-partition metrics. Returns (tiles written, metrics). */
+  /** The copy/seed pipeline (reference examples/download.py:15-34 and
+    * tc_copy.py's enumerate -> anti-join -> lookup, driven by the tiles
+    * that exist instead of the region's area): the region-restricted
+    * winner coords, resume-anti-joined against the sink's coords, get
+    * their payloads attached, converted, written, and per-partition
+    * metrics recorded. It writes winners ∩ region ∖ sink — the same set
+    * as the enumerated form, since a region coord without a source tile
+    * writes nothing — but no region coord is ever generated, so the work
+    * follows the occupied tiles (a z4..18 region is ~9e10 coords; its
+    * winners are at most one per image per zoom). Returns the sink's
+    * tile count after the write. */
   def copyJob(
       spark: SparkSession,
       corpus: DataFrame,
@@ -237,25 +246,15 @@ object Pipeline {
       sinkPath: String,
       metricsPath: String,
       jobId: String,
-      targetCt: String = "image/png",
-      broadcastThreshold: Long = 1000000L): Long = {
-    val zooms = bp.zs.toSeq
-    val region0 = enumeratePyramid(spark, bp)
-    // small regions broadcast into the join against the big corpus side
-    val region =
-      if (bp.size <= broadcastThreshold) broadcast(region0) else region0
-    val todo = Checkpoint.resume(region, sinkPath)
-
-    // coordinate-phase joins first (region restriction + resume
-    // anti-join against 32-byte winner rows), payload attach last —
-    // image bytes never ride a coordinate shuffle
-    val winners = tileWinners(corpus, zooms, region = Some(bp))
-      .join(todo, Seq("z", "x", "y"), "left_semi")
-    val joined = attachBytes(corpus, winners)
-    val converted = Filters.formatConverter(targetCt)(joined)
-    val instrumented =
-      Checkpoint.instrument(converted, jobId, "sink", metricsPath)
-    TileTable.write(instrumented, sinkPath)
+      targetCt: String = "image/png"): Long = {
+    // coordinate-phase joins first (region predicate + resume anti-join
+    // against 32-byte winner rows), payload attach last — image bytes
+    // never ride a coordinate shuffle
+    val todo = Checkpoint.resume(
+      tileWinners(corpus, bp.zs.toSeq, region = Some(bp)), sinkPath)
+    val converted = Filters.formatConverter(targetCt)(attachBytes(corpus, todo))
+    TileTable.write(
+      Checkpoint.instrument(converted, jobId, "sink", metricsPath), sinkPath)
     Checkpoint.flush(jobId, "sink")
     TileTable.read(spark, sinkPath).count()
   }

@@ -2,75 +2,21 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: makes the engine's native
   * expressions available in ANY session created with
   * `--conf spark.sql.extensions=graft.sql.GraftExtensions`
   * (the spark-submit path on a real cluster; tests use
-  * TileExpressions.register on an existing session instead).
+  * TileExpressions.register on an existing session instead). Both read
+  * the one table, `TileExpressions.functions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("tc_quadkey"),
-      new ExpressionInfo(classOf[QuadKeyExpr].getName, "tc_quadkey"),
-      (exprs: Seq[Expression]) =>
-        QuadKeyExpr(
-          Cast(exprs(0), IntegerType),
-          Cast(exprs(1), LongType),
-          Cast(exprs(2), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_cellid"),
-      new ExpressionInfo(classOf[CellIdExpr].getName, "tc_cellid"),
-      (exprs: Seq[Expression]) =>
-        CellIdExpr(
-          Cast(exprs(0), IntegerType),
-          Cast(exprs(1), LongType),
-          Cast(exprs(2), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_hilbert"),
-      new ExpressionInfo(classOf[HilbertIdExpr].getName, "tc_hilbert"),
-      (exprs: Seq[Expression]) =>
-        HilbertIdExpr(
-          Cast(exprs(0), IntegerType),
-          Cast(exprs(1), LongType),
-          Cast(exprs(2), LongType))))
-    // the cell-id readers MUST ship with the writers: a cluster session
-    // that wrote tc_cellid/tc_hilbert keys needs tc_cellz/x/y (and the
-    // hilbert inverses) to read them back — TileExpressions.register
-    // exposes all ten, and a spark.sql.extensions session must match
-    ext.injectFunction((
-      FunctionIdentifier("tc_cellz"),
-      new ExpressionInfo(classOf[CellZExpr].getName, "tc_cellz"),
-      (exprs: Seq[Expression]) => CellZExpr(Cast(exprs(0), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_cellx"),
-      new ExpressionInfo(classOf[CellXExpr].getName, "tc_cellx"),
-      (exprs: Seq[Expression]) => CellXExpr(Cast(exprs(0), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_celly"),
-      new ExpressionInfo(classOf[CellYExpr].getName, "tc_celly"),
-      (exprs: Seq[Expression]) => CellYExpr(Cast(exprs(0), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_hilbertx"),
-      new ExpressionInfo(classOf[HilbertXExpr].getName, "tc_hilbertx"),
-      (exprs: Seq[Expression]) => HilbertXExpr(Cast(exprs(0), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_hilberty"),
-      new ExpressionInfo(classOf[HilbertYExpr].getName, "tc_hilberty"),
-      (exprs: Seq[Expression]) => HilbertYExpr(Cast(exprs(0), LongType))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_sorted_intersect_count"),
-      new ExpressionInfo(
-        classOf[SortedIntersectCountExpr].getName,
-        "tc_sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCountExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("tc_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "tc_minhash_sig"),
-      (exprs: Seq[Expression]) =>
-        MinHashSigExpr(exprs(0), TileExpressions.literalInt(exprs, 1, 16))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    TileExpressions.functions.foreach { case (name, build) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        build))
+    }
 }

@@ -1,9 +1,9 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Quadkey / quadtree-cell codecs as native codegen-capable Catalyst
@@ -427,64 +427,38 @@ object TileExpressions {
           s"argument ${idx + 1} must be an integer literal, got $other")
     }
 
-  /** Register `tc_quadkey` / `tc_cellid` / `tc_sorted_intersect_count` /
-    * `tc_minhash_sig` in the session's function registry so they are
-    * usable from SQL and `call_function`. */
+  /** Every engine SQL function as one `(name, builder)` table, read by
+    * both registration paths: `register` on a live session and
+    * [[GraftExtensions]] for `spark.sql.extensions` sessions. The
+    * cell-id readers ship with the writers: a session that wrote
+    * tc_cellid/tc_hilbert keys needs tc_cellz/x/y and the hilbert
+    * inverses to read them back. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = {
+    type Build = Seq[Expression] => Expression
+    def zxy(f: (Expression, Expression, Expression) => Expression): Build =
+      e => f(Cast(e(0), IntegerType), Cast(e(1), LongType), Cast(e(2), LongType))
+    def cell(f: Expression => Expression): Build = e => f(Cast(e(0), LongType))
+    Seq(
+      "tc_quadkey" -> zxy(QuadKeyExpr(_, _, _)),
+      "tc_cellid" -> zxy(CellIdExpr(_, _, _)),
+      "tc_hilbert" -> zxy(HilbertIdExpr(_, _, _)),
+      "tc_cellz" -> cell(CellZExpr(_)),
+      "tc_cellx" -> cell(CellXExpr(_)),
+      "tc_celly" -> cell(CellYExpr(_)),
+      "tc_hilbertx" -> cell(HilbertXExpr(_)),
+      "tc_hilberty" -> cell(HilbertYExpr(_)),
+      "tc_sorted_intersect_count" ->
+        ((e: Seq[Expression]) => SortedIntersectCountExpr(e(0), e(1))),
+      "tc_minhash_sig" ->
+        ((e: Seq[Expression]) => MinHashSigExpr(e(0), literalInt(e, 1, 16))))
+  }
+
+  /** Register [[functions]] in the session's function registry so they
+    * are usable from SQL and `call_function`. */
   def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.IntegerType
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "tc_quadkey",
-      exprs =>
-        QuadKeyExpr(
-          Cast(exprs(0), IntegerType),
-          Cast(exprs(1), LongType),
-          Cast(exprs(2), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_cellid",
-      exprs =>
-        CellIdExpr(
-          Cast(exprs(0), IntegerType),
-          Cast(exprs(1), LongType),
-          Cast(exprs(2), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_cellx",
-      exprs => CellXExpr(Cast(exprs(0), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_celly",
-      exprs => CellYExpr(Cast(exprs(0), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_cellz",
-      exprs => CellZExpr(Cast(exprs(0), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_hilbert",
-      exprs =>
-        HilbertIdExpr(
-          Cast(exprs(0), IntegerType),
-          Cast(exprs(1), LongType),
-          Cast(exprs(2), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_hilbertx",
-      exprs => HilbertXExpr(Cast(exprs(0), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_hilberty",
-      exprs => HilbertYExpr(Cast(exprs(0), LongType)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_sorted_intersect_count",
-      exprs => SortedIntersectCountExpr(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "tc_minhash_sig",
-      exprs => MinHashSigExpr(exprs(0), literalInt(exprs, 1, 16)),
-      "built-in")
+    functions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -12,9 +12,9 @@ import graft.engine.{Checkpoint, Pipeline, TileTable}
   * semantics, scripts/tc_copy.py:70-71):
   *
   *   - `leg <cpus> <rows> <outTag>` — one COLD full copyJob (fresh
-  *     sink) on the standard phash-bucketed corpus: enumerate region
-  *     pyramid -> resume anti-join -> winners rollup -> byte attach ->
-  *     format convert -> instrumented sink write. Emits one JSON line
+  *     sink) on the standard phash-bucketed corpus: region winners ->
+  *     resume anti-join against sink coords -> byte attach -> format
+  *     convert -> instrumented sink write. Emits one JSON line
   *     with wall seconds + tiles written; run it once at N and once at
   *     4N cores (taskset-pinned, separate JVMs — tools/copy_ladder.sh)
   *     for the scaling ladder.
@@ -109,13 +109,11 @@ object CopyLadder {
         // scales with nodes and THIS number is the one that transfers.
         val outTag = if (args.length > 3) args(3) else s"nosink$cpus"
         val bp = BoundingPyramid.full(zMin, zMax)
-        val region = org.apache.spark.sql.functions.broadcast(
-          graft.sql.TileFunctions.enumeratePyramid(spark, bp))
-        val todo = Checkpoint.resume(region, sink) // empty sink: full region
         new ProcessBuilder("sync").inheritIO().start().waitFor()
         val t0 = System.nanoTime()
-        val winners = Pipeline.tileWinners(corpus, bp.zs.toSeq, region = Some(bp))
-          .join(todo, Seq("z", "x", "y"), "left_semi")
+        // empty sink: every region winner is todo
+        val winners = Checkpoint.resume(
+          Pipeline.tileWinners(corpus, bp.zs.toSeq, region = Some(bp)), sink)
         val converted = graft.engine.Filters.formatConverter("image/png")(
           Pipeline.attachBytes(corpus, winners))
         converted.write.mode("overwrite").format("noop").save()
@@ -164,9 +162,9 @@ object CopyLadder {
         val md =
           s"""# BENCH — copy pipeline: kill-and-resume at partition granularity
              |
-             |`Pipeline.copyJob` (enumerate region pyramid -> resume
-             |anti-join -> winners rollup -> byte attach -> format
-             |convert -> instrumented sink write), $rows-image corpus,
+             |`Pipeline.copyJob` (region winners -> resume anti-join
+             |against sink coords -> byte attach -> format convert ->
+             |instrumented sink write), $rows-image corpus,
              |zooms $zMin..$zMax, local[$cpus]. The kill is emulated at a
              |partition-complete boundary (pass 1 covers z$zMin..z$zMid
              |only) — exactly the granularity the checkpoint model

@@ -33,13 +33,8 @@ object CopyProfile {
     corpus.count()
 
     val bp = BoundingPyramid.full(zMin, zMax)
-    val zooms = bp.zs.toSeq
-    val region0 = graft.sql.TileFunctions.enumeratePyramid(spark, bp)
-    val region = if (bp.size <= 1000000L) broadcast(region0) else region0
-    val todo = Checkpoint.resume(region, s"$base/sink")
-
-    def winners = Pipeline.tileWinners(corpus, zooms, region = Some(bp))
-      .join(todo, Seq("z", "x", "y"), "left_semi")
+    def winners = Checkpoint.resume(
+      Pipeline.tileWinners(corpus, bp.zs.toSeq, region = Some(bp)), s"$base/sink")
     def joined = Pipeline.attachBytes(corpus, winners)
     def converted = Filters.formatConverter("image/png")(joined)
 
@@ -53,7 +48,7 @@ object CopyProfile {
         ToolUtil.deleteRec(s"$base/$s"))
     }
 
-    t("coords(winners+semi)") { winners.count() }
+    t("coords(winners+anti)") { winners.count() }
     t("attach(no convert)") {
       joined.agg(sum(length(col("data")))).head().getLong(0)
     }

@@ -47,10 +47,8 @@ object CopySinkDiag {
 
     val bp = BoundingPyramid.full(4, 10)
     def presink() = {
-      val region = broadcast(graft.sql.TileFunctions.enumeratePyramid(spark, bp))
-      val todo = Checkpoint.resume(region, sink)
-      val winners = Pipeline.tileWinners(corpus, bp.zs.toSeq, region = Some(bp))
-        .join(todo, Seq("z", "x", "y"), "left_semi")
+      val winners = Checkpoint.resume(
+        Pipeline.tileWinners(corpus, bp.zs.toSeq, region = Some(bp)), sink)
       Filters.formatConverter("image/png")(Pipeline.attachBytes(corpus, winners))
     }
 

@@ -49,17 +49,21 @@ class WmtsCapabilitiesSpec extends AnyFunSuite {
     val golden = dir.resolve("golden.xml")
     Files.writeString(
       ours, render(layers, tms, "http://wmts.example.org/wmts"))
+    // the checkout under test runs its own scripts: the build passes its
+    // base directory (build.sbt), a bare JVM falls back to its cwd
+    val base = new java.io.File(sys.props.getOrElse("graft.baseDir", sys.props("user.dir")))
     def run(cmd: String*): (Int, String) = {
       val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      pb.directory(new java.io.File("/root/repo"))
+      pb.directory(base)
       val p = pb.start()
       val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
       (p.waitFor(), out)
     }
-    val (gc, gout) = run("python3", "tools/wmts_caps_golden.py", golden.toString)
+    val tool = (name: String) => new java.io.File(base, s"tools/$name").getPath
+    val (gc, gout) = run("python3", tool("wmts_caps_golden.py"), golden.toString)
     assert(gc == 0, s"golden render failed: $gout")
     val (cc, cout) =
-      run("python3", "tools/wmts_caps_check.py", golden.toString, ours.toString)
+      run("python3", tool("wmts_caps_check.py"), golden.toString, ours.toString)
     assert(cc == 0, s"tree diff: $cout")
   }
 }

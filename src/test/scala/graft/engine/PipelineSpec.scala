@@ -9,9 +9,9 @@ import graft.core.{BoundingPyramid, TileCoord, TileGrids}
 import graft.image.ImageCodec
 
 /** End-to-end slice (SURVEY.md §7.2): the download.py-shaped job over
-  * the synthetic corpus — enumerate -> anti-join -> assignment join ->
-  * convert -> sink; re-run proves idempotent resume; captions and pixels
-  * survive row-for-row.
+  * the synthetic corpus — region winners -> resume anti-join -> payload
+  * attach -> convert -> sink; re-runs prove idempotent and partial
+  * resume; captions and pixels survive row-for-row.
   */
 class PipelineSpec extends SparkTestBase {
 
@@ -99,6 +99,85 @@ class PipelineSpec extends SparkTestBase {
     assert(
       secondRun.count() == 0 ||
         secondRun.agg(sum("rows")).collect().head.getLong(0) == 0)
+  }
+
+  /** A 200-image corpus read back from parquet, so no plan over it
+    * carries the generator's own `Range` node. */
+  private lazy val storedCorpus = {
+    val dir = tmp() + "/corpus"
+    Corpus.generate(spark, 200).toDF().write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def perZoom(df: org.apache.spark.sql.DataFrame): Map[Int, Long] =
+    df.groupBy("z").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  private def coordSet(df: org.apache.spark.sql.DataFrame): Set[(Int, Long, Long)] =
+    df.select("z", "x", "y").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("copy job over a sparse deep pyramid follows the occupied tiles") {
+    // z2..14 is ~3.6e8 region coords for 200 images: the job must never
+    // generate the region, only filter and resume the winner coords
+    val bp = BoundingPyramid.full(2, 14)
+    assert(bp.size > 300000000L)
+    val sink = tmp() + "/deep"
+    val metrics = tmp() + "/deep-m"
+    // the tile-sink write: TileTable.write's (z, cell) sort under WriteFiles
+    def isSinkWrite(p: String) = p.contains("WriteFiles") && p.contains("cell#")
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val written =
+      try Pipeline.copyJob(spark, storedCorpus, bp, sink, metrics, "job-deep")
+      finally {
+        // the execution listener fires async; poll briefly for delivery
+        val deadline = System.nanoTime() + 10000000000L
+        while (!plans.synchronized(plans.exists(isSinkWrite)) &&
+            System.nanoTime() < deadline)
+          Thread.sleep(50)
+        spark.listenerManager.unregister(listener)
+      }
+    val expected = perZoom(Pipeline.tileWinnersDirect(storedCorpus, bp.zs.toSeq))
+    assert(perZoom(TileTable.read(spark, sink)) == expected)
+    assert(written == expected.values.sum)
+    val writePlans = plans.synchronized(plans.toList).filter(isSinkWrite)
+    assert(writePlans.nonEmpty, "tile-sink write plan not captured")
+    writePlans.foreach { p =>
+      assert(!p.linesIterator.exists(_.matches(".*\\bRange \\(.*")),
+        s"write plan enumerates the region:\n$p")
+    }
+    // re-run: nothing left to do
+    assert(Pipeline.copyJob(spark, storedCorpus, bp, sink, metrics, "job-deep-2") == written)
+  }
+
+  test("copy job resume: a partial pass then the full pass writes exactly the missing tiles") {
+    val sink = tmp() + "/resume"
+    val metrics = tmp() + "/resume-m"
+    val full = BoundingPyramid.full(2, 4)
+    val first = Pipeline.copyJob(
+      spark, storedCorpus, BoundingPyramid.full(2, 3), sink, metrics, "job-p1")
+    val afterFirst = coordSet(TileTable.read(spark, sink))
+    val winners = coordSet(Pipeline.tileWinnersDirect(storedCorpus, full.zs.toSeq))
+    assert(afterFirst == winners.filter(_._1 <= 3))
+    assert(first == afterFirst.size)
+
+    val second = Pipeline.copyJob(spark, storedCorpus, full, sink, metrics, "job-p2")
+    val missing = winners -- afterFirst
+    assert(missing.nonEmpty && missing.forall(_._1 == 4))
+    assert(second - first == missing.size, s"pass 2 wrote ${second - first}")
+    // no coord written twice, and together the passes cover the region
+    assert(coordSet(TileTable.read(spark, sink)) == winners)
+    assert(second == winners.size)
+    val pass2Rows = Checkpoint.readMetrics(spark, metrics)
+      .where(col("job_id") === "job-p2").agg(sum("rows")).collect().head.getLong(0)
+    assert(pass2Rows == missing.size)
   }
 
   test("cheap bounding pyramid and tms view round-trip") {
