@@ -275,7 +275,7 @@ object ScalingBench {
          |
          |The full-job number includes the payload-streaming stage
          |(bucketed scan -> hash-join probe -> xxhash64 over every image
-         |byte; ZERO byte shuffles or sorts — see PlanAudit). On one
+         |byte; ZERO byte shuffles or sorts — see the plan `Profile flagship` prints). On one
          |shared box that stage is DRAM-bandwidth-bound: the isolated
          |cross-check above (a bare parquet scan + hash with no joins,
          |no aggregations, no tile math) scales at only 0.68-0.71 by itself, so

@@ -21,7 +21,7 @@ object AnnRecall {
     val n = if (args.nonEmpty) args(0).toInt else 5000
     if (args.length > 1 && args(1) == "ladder") { ladder(n); return }
     val nClusters = 16
-    val spark = graft.Bench.mkSession(16)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     import spark.implicits._
 
     // clustered corpus: 16 deterministic centers + per-vector noise —
@@ -181,7 +181,7 @@ object AnnRecall {
     * `runMain graft.tools.AnnRecall 1000000 ladder`. */
   def ladder(n: Int): Unit = {
     val nClusters = 16
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val vecs = spark.range(n).map { i =>

@@ -16,7 +16,7 @@ import graft.dedup.Dedup
 object BurstScale {
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -60,7 +60,7 @@ object BurstScale {
 
     val sb = new StringBuilder
     sb ++= "# Burst sessionization at scale (Dedup.burstSessionize)\n\n"
-    sb ++= "Generated by `sbt \"runMain graft.tools.BurstScale\"` on local[32];\n"
+    sb ++= s"Generated by `sbt \"runMain graft.tools.BurstScale\"` on local[${ToolUtil.cpus}];\n"
     sb ++= "input (device, media_id, ts) materialized before the timed window.\n"
     sb ++= "Capture times are planted (runs of five 4s-apart shots separated\n"
     sb ++= "by 64s), so the burst count has a closed form the run must hit\n"

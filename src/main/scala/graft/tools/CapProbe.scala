@@ -15,7 +15,7 @@ object CapProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 10000000L
     val hot = args.length <= 1 || args(1).toBoolean
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val cap = 1000L
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.GraftColumnBridge.{column => c, expression => e}
 object CoverProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 600000L
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

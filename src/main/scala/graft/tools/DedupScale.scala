@@ -90,7 +90,7 @@ object DedupScale {
     // reruns print their rows for hand-merging into the md table
     val families = (if (args.length > 2) args(2) else "docs,sigs,wide,keep")
       .split(",").map(_.trim).toSet
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val rungs = scala.collection.mutable.ArrayBuffer[Rung]()
 
@@ -247,7 +247,7 @@ object DedupScale {
 
     val sb = new StringBuilder
     sb.append("# Dedup / near-dup scale ladder\n\n")
-    sb.append(s"Generated by `sbt \"runMain graft.tools.DedupScale\"` on local[32]\n")
+    sb.append(s"Generated by `sbt \"runMain graft.tools.DedupScale\"` on local[${ToolUtil.cpus}]\n")
     sb.append(s"(baseDocs=$baseDocs, baseSigs=$baseSigs; deterministic generators,\n")
     sb.append("single cold run per rung after one warmup; the timed window covers\n")
     sb.append("ONLY the operator pipeline — planted-recall and capped-bucket\n")

@@ -40,7 +40,7 @@ object HilbertScale {
   def main(args: Array[String]): Unit = {
     val zoom = if (args.length > 0) args(0).toInt else 10
     val ps = (if (args.length > 1) args(1) else "64,100,1000").split(",").map(_.trim.toInt)
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

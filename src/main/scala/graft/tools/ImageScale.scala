@@ -23,7 +23,7 @@ object ImageScale {
   def main(args: Array[String]): Unit = {
     val sizes = (if (args.nonEmpty) args(0) else "100000,1000000")
       .split(",").map(_.trim.toLong).toSeq
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     case class Rung(algo: String, n: Long, secs: Double, errors: Long, load: String)
@@ -56,7 +56,7 @@ object ImageScale {
 
     val sb = new StringBuilder
     sb ++= "# Image-hash decode+hash throughput (Multimodal.imageHash64)\n\n"
-    sb ++= "Generated by `sbt \"runMain graft.tools.ImageScale\"` on local[32];\n"
+    sb ++= s"Generated by `sbt \"runMain graft.tools.ImageScale\"` on local[${ToolUtil.cpus}];\n"
     sb ++= "corpus = deterministic 64px PNG/JPEG mix (Corpus.generate),\n"
     sb ++= "materialized before the timed window — the numbers cover decode +\n"
     sb ++= "hash only (the count also scans the error column: zero errors\n"
@@ -64,7 +64,7 @@ object ImageScale {
     sb ++= "numbers as +-30%.\n\n"
     sb ++= "| algo | images | wall s | images/s | per-core img/s | errors |\n|---|---|---|---|---|---|\n"
     rungs.foreach { r =>
-      sb ++= f"| ${r.algo} | ${r.n} | ${r.secs}%.2f | ${r.n / r.secs}%.0f | ${r.n / r.secs / 32}%.0f | ${r.errors} (load ${r.load}) |\n"
+      sb ++= f"| ${r.algo} | ${r.n} | ${r.secs}%.2f | ${r.n / r.secs}%.0f | ${r.n / r.secs / ToolUtil.cpus}%.0f | ${r.errors} (load ${r.load}) |\n"
     }
     sb ++= """
 Reading it:

@@ -53,7 +53,7 @@ object KnnScale {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0).toLong else 1000000L
     val mults = (if (args.length > 1) args(1) else "1,10,100").split(",").map(_.trim.toLong)
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import graft.sql.TileFunctions.{tileOfPointX, tileOfPointY}
     val rungs = scala.collection.mutable.ArrayBuffer[Rung]()

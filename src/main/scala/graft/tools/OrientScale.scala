@@ -22,7 +22,7 @@ import graft.multimodal.Multimodal
 object OrientScale {
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -84,13 +84,13 @@ object OrientScale {
 
     val sb = new StringBuilder
     sb ++= "# EXIF + orientation-stage throughput (Multimodal.exifMeta / orientNormalize)\n\n"
-    sb ++= "Generated by `sbt \"runMain graft.tools.OrientScale\"` on local[32];\n"
+    sb ++= s"Generated by `sbt \"runMain graft.tools.OrientScale\"` on local[${ToolUtil.cpus}];\n"
     sb ++= "inputs materialized before each timed window (localCheckpoint), so\n"
     sb ++= "windows cover the operator only. 1-min loadavg per rung; shared\n"
     sb ++= "box, treat numbers as +-30%.\n\n"
     sb ++= "| stage | rows | wall s | rows/s | per-core rows/s | errors |\n|---|---|---|---|---|---|\n"
     rungs.foreach { r =>
-      sb ++= f"| ${r.stage} | ${r.n} | ${r.secs}%.2f | ${r.n / r.secs}%.0f | ${r.n / r.secs / 32}%.0f | ${r.errors} (load ${r.load}) |\n"
+      sb ++= f"| ${r.stage} | ${r.n} | ${r.secs}%.2f | ${r.n / r.secs}%.0f | ${r.n / r.secs / ToolUtil.cpus}%.0f | ${r.errors} (load ${r.load}) |\n"
     }
     sb ++= """
 Reading it:

@@ -14,7 +14,7 @@ object PayloadScale {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("gen")) {
       val rows = if (args.length > 1) args(1).toLong else 800000L
-      val spark = graft.Bench.mkSession(32)
+      val spark = graft.Bench.mkSession(ToolUtil.cpus)
       graft.Bench.bucketedCorpus(spark, rows)
       println(s"[payloadscale] table written: $rows rows")
       spark.stop()

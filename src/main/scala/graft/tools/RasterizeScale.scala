@@ -36,7 +36,7 @@ object RasterizeScale {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0).toLong else 10000L
     val mults = (if (args.length > 1) args(1) else "1,10,100").split(",").map(_.trim.toLong)
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val rungs = scala.collection.mutable.ArrayBuffer[Rung]()
 

@@ -20,7 +20,7 @@ import graft.dedup.Dedup
 object SharedKeyScale {
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     case class Rung(name: String, rows: Long, videos: Long, secs: Double,
@@ -63,7 +63,7 @@ object SharedKeyScale {
 
     val sb = new StringBuilder
     sb ++= "# Shared-key pair mining at scale (Dedup.sharedKeyPairs)\n\n"
-    sb ++= "Generated by `sbt \"runMain graft.tools.SharedKeyScale\"` on local[32];\n"
+    sb ++= s"Generated by `sbt \"runMain graft.tools.SharedKeyScale\"` on local[${ToolUtil.cpus}];\n"
     sb ++= "input (media_id, fh) materialized before the timed lattice. Every\n"
     sb ++= "tenth video shares exactly 8 frame keys with its successor, so the\n"
     sb ++= "pair count has a closed form the run must hit exactly (V/10 pairs,\n"

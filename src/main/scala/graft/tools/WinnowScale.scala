@@ -62,7 +62,7 @@ object WinnowScale {
   def main(args: Array[String]): Unit = {
     val baseDocs = if (args.length > 0) args(0).toLong else 5000L
     val mults = (if (args.length > 1) args(1) else "1,10").split(",").map(_.trim.toLong)
-    val spark = graft.Bench.mkSession(32)
+    val spark = graft.Bench.mkSession(ToolUtil.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val rungs = scala.collection.mutable.ArrayBuffer[Rung]()
 
