@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.BoundingPyramid
-import graft.sql.TileFunctions
+import graft.sql.{Jobs, TileFunctions}
 import graft.sql.TileFunctions._
 
 /** The operator inventory as (Spark query, DuckDB oracle SQL) pairs over
@@ -17,8 +17,9 @@ import graft.sql.TileFunctions._
   */
 object GraftQueries {
 
+  // the read's schema inference is an eager job
   private def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Jobs.described(s, "GraftQueries.table")(s.read.parquet(s"$dir/$name.parquet"))
 
   /** The three-polygon test scene shared by the raster↔vector pair
     * (q68 point-in-polygon, q70 rasterize): a pentagon, a CONCAVE L

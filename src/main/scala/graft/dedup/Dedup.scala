@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.Corpus
+import graft.sql.Jobs
 import graft.text.TextOps
 
 /** Deduplication operators for the training-data pipeline: exact
@@ -244,8 +245,9 @@ object Dedup {
     // the big cached sets relation before returning: callers get a
     // lineage-free relation and the cacheManager is left unpinned (the
     // same leak contract clusters' distributed branch keeps)
-    try jaccardScore(cands, sets, minJaccardE6).localCheckpoint()
-    finally sets.unpersist()
+    try Jobs.described(df.sparkSession, "Dedup.jaccardPairs") {
+      jaccardScore(cands, sets, minJaccardE6).localCheckpoint()
+    } finally sets.unpersist()
   }
 
   /** Deterministic MinHash permutation coefficients (odd a). */
@@ -379,7 +381,16 @@ object Dedup {
       pairs: DataFrame,
       idA: String = "da",
       idB: String = "db",
-      localEdgeLimit: Long = 1L << 22): DataFrame = {
+      localEdgeLimit: Long = 1L << 22): DataFrame =
+    // its count, collect, label loop and localCheckpoint are eager jobs
+    Jobs.described(pairs.sparkSession, "Dedup.clusters")(
+      connectedComponents(pairs, idA, idB, localEdgeLimit))
+
+  private def connectedComponents(
+      pairs: DataFrame,
+      idA: String,
+      idB: String,
+      localEdgeLimit: Long): DataFrame = {
     val spark = pairs.sparkSession
     // the union-find shortcut has typed fast paths for integral and
     // string ids (string min/least follows UTF8String binary order —

@@ -1,11 +1,15 @@
 package graft.engine
 
-import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.{GraftBus, SparkContext, Success}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.AccumulatorV2
+
+import graft.sql.{Jobs, TileMetrics, TileMetricsProbe}
 
 /** Partition-granular checkpoint + lineage/metrics tables — the Spark
   * re-expression of the reference's queue checkpointing (Redis
@@ -19,6 +23,17 @@ import org.apache.spark.util.AccumulatorV2
   * missing work is redone. Spark task retry covers intra-job failure
   * (the reference's pending-claim steal); the anti-join covers cross-run
   * failure (the reference's resumable queue).
+  *
+  * Counting: a pass-through [[graft.sql.TileMetrics]] node counts rows
+  * on `InternalRow` (no `Row` encoder round trip) into SQL metrics, and
+  * a listener on graft's own event queue of the session's SparkContext
+  * reads each partition's values from the task-end event of a
+  * successful attempt, keeping the first per partition id: retries and
+  * speculative duplicates cannot double-count. The same node, counting
+  * only, sits on the sink scan of `Pipeline.copyJob`'s resume join, so
+  * the sink's size after a write is rows scanned + rows written,
+  * without reading the sink again — when both nodes heard from every
+  * one of their partitions; otherwise the sink is counted explicitly.
   */
 object Checkpoint {
 
@@ -31,13 +46,11 @@ object Checkpoint {
     StructField("nanos", LongType),
     StructField("status", StringType)))
 
-  private val pending =
-    new ConcurrentHashMap[(String, String), (MetricsAccumulator, String, SparkSession)]()
-
-  /** Instrument a tile DataFrame: counts rows/errors per task partition
-    * into an accumulator; `flush` writes one metrics row per partition
-    * after the action. Data flows through unchanged (reference
-    * filter/benchmark.py:13-79 Statistics, made partition-granular).
+  /** Instrument a tile DataFrame: counts rows/errors per task partition;
+    * `flush` writes one metrics row per partition after the action. Data
+    * flows through unchanged (reference filter/benchmark.py:13-79
+    * Statistics, made partition-granular). Instrumenting the same
+    * (jobId, stage) again replaces the earlier registration.
     *
     * CONTRACT: a partition's metric row is emitted when its iterator is
     * drained. An operator that abandons the iterator early (`limit`,
@@ -49,58 +62,49 @@ object Checkpoint {
       jobId: String,
       stage: String,
       metricsPath: String): DataFrame = {
-    val spark = df.sparkSession
-    val acc = new MetricsAccumulator()
-    spark.sparkContext.register(acc, s"graft-metrics-$jobId-$stage")
-    val errIdx = df.schema.fieldNames.indexOf("error")
-    val out = df.mapPartitions { it =>
-      val t0 = System.nanoTime()
-      val pid = TaskContext.getPartitionId()
-      var rows = 0L
-      var errors = 0L
-      new Iterator[Row] {
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && rows >= 0) {
-            acc.add(PartitionMetric(pid, rows, errors, System.nanoTime() - t0))
-            rows = -1 // emit once
-          }
-          h
-        }
-        def next(): Row = {
-          val r = it.next()
-          rows += 1
-          if (errIdx >= 0 && !r.isNullAt(errIdx)) errors += 1
-          r
-        }
-      }
-    }(Encoders.row(df.schema))
-    pending.put((jobId, stage), (acc, metricsPath, spark))
+    val sc = df.sparkSession.sparkContext
+    unregister(sc, jobId, stage)
+    val (out, probe) = TileMetrics.over(df, countErrors = true)
+    GraftBus.listen(sc, new Registered(probe, jobId, stage, metricsPath, df.sparkSession))
     out
   }
 
-  /** Flush accumulated per-partition metrics (call after the action). */
-  def flush(jobId: String, stage: String): Unit =
-    Option(pending.remove((jobId, stage))).foreach { case (acc, path, spark) =>
-      // Accumulator updates from TRANSFORMATIONS are not deduplicated by
-      // Spark across task attempts: a speculative duplicate or a
-      // stage-retry re-execution adds a second PartitionMetric for the
-      // same partition, which would double-count its rows in report().
-      // Keep one metric per partition (max nanos = the attempt that did
-      // the full drain; row/error counts are identical across attempts
-      // of a deterministic partition).
-      val rows = acc.value
-        .groupBy(_.partitionId)
-        .values.map(_.maxBy(_.nanos))
-        .toSeq.sortBy(_.partitionId)
-        .map { m =>
+  /** Append the per-partition metrics of an instrumented (jobId, stage)
+    * to its metrics table (call after the action) and stop collecting
+    * them. Returns the number of metric rows appended. */
+  def flush(jobId: String, stage: String): Long = flushAll(jobId, stage).map(_._1).sum
+
+  /** [[flush]], returning the rows the stage's node passed when every
+    * one of its partitions reported ([[PartitionMetrics.total]]). */
+  private[engine] def flushTotal(jobId: String, stage: String): Option[Long] =
+    flushAll(jobId, stage).headOption.flatMap(_._2)
+
+  // (metric rows appended, node total) per flushed registration
+  private def flushAll(jobId: String, stage: String): Seq[(Long, Option[Long])] = {
+    val sc = SparkSession.active.sparkContext
+    // a lagging bus makes the drain time out: the partitions whose
+    // events are still queued then report no row, as the contract allows
+    try GraftBus.drain(sc) catch { case _: TimeoutException => }
+    unregister(sc, jobId, stage).map { r =>
+      val ms = r.drained
+      if (ms.nonEmpty) Jobs.described(r.spark, "Checkpoint.flush") {
+        val rows = ms.map { m =>
           Row(jobId, stage, m.partitionId, m.rows, m.errors, m.nanos, "done")
         }
-      if (rows.nonEmpty)
-        spark
-          .createDataFrame(spark.sparkContext.parallelize(rows, 1), metricsSchema)
-          .write.mode("append").parquet(path)
+        r.spark
+          .createDataFrame(r.spark.sparkContext.parallelize(rows, 1), metricsSchema)
+          .write.mode("append").parquet(r.metricsPath)
+      }
+      (ms.size.toLong, r.total)
     }
+  }
+
+  /** Stop collecting the metrics of an instrumented (jobId, stage). */
+  private[engine] def unregister(sc: SparkContext, jobId: String, stage: String): Seq[Registered] = {
+    val rs = GraftBus.listeners[Registered](sc).filter(r => r.jobId == jobId && r.stage == stage)
+    rs.foreach(sc.removeSparkListener)
+    rs
+  }
 
   def readMetrics(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(metricsSchema).parquet(path)
@@ -131,31 +135,78 @@ object Checkpoint {
 
   /** Cross-run resume: drop coords already present in the sink
     * (reference tc_copy.py:70-71, examples/download.py:26). */
-  def resume(todo: DataFrame, sinkPath: String): DataFrame = {
+  def resume(todo: DataFrame, sinkPath: String): DataFrame =
+    resumeCounting(todo, sinkPath, count = false)._1
+
+  /** [[resume]]; with `count`, a counting-only metrics node sits on the
+    * sink scan and its collector comes back too. The collector is not
+    * listening yet: the caller adds it (`GraftBus.listen`) before the
+    * action and removes it after. No collector when the sink is absent.
+    * The node keeps the join's inferred filters above it, so the scan
+    * reads every zoom of the sink. */
+  private[engine] def resumeCounting(
+      todo: DataFrame,
+      sinkPath: String,
+      count: Boolean): (DataFrame, Option[PartitionMetrics]) = {
     val spark = todo.sparkSession
-    if (!TileTable.exists(spark, sinkPath)) todo
-    else
-      todo.join(
-        TileTable.read(spark, sinkPath).select("z", "x", "y"),
-        Seq("z", "x", "y"),
-        "left_anti")
+    if (!TileTable.exists(spark, sinkPath)) (todo, None)
+    else {
+      val sink = TileTable.read(spark, sinkPath)
+      val (scan, collector) =
+        if (!count) (sink, None)
+        else {
+          val (out, probe) = TileMetrics.over(sink, countErrors = false)
+          (out, Some(new PartitionMetrics(probe)))
+        }
+      (todo.join(scan.select("z", "x", "y"), Seq("z", "x", "y"), "left_anti"), collector)
+    }
   }
 }
 
 final case class PartitionMetric(partitionId: Int, rows: Long, errors: Long, nanos: Long)
 
-/** Accumulator collecting one metric record per task partition. */
-class MetricsAccumulator extends AccumulatorV2[PartitionMetric, List[PartitionMetric]] {
-  private var list: List[PartitionMetric] = Nil
-  override def isZero: Boolean = list.isEmpty
-  override def copy(): MetricsAccumulator = {
-    val c = new MetricsAccumulator()
-    c.list = list
-    c
+/** One [[PartitionMetric]] per partition of a [[graft.sql.TileMetrics]]
+  * node, read from task-end events: only successful attempts count, a
+  * task counts only if it drained the node's input, and the first
+  * attempt reported per partition id is kept. */
+class PartitionMetrics(val probe: TileMetricsProbe) extends SparkListener {
+  // per task partition id: its metric and how many of the node's
+  // partitions it drained (more than one under a coalesce)
+  private val byPartition =
+    new java.util.concurrent.ConcurrentHashMap[Int, (PartitionMetric, Long)]()
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (e.reason == Success && e.taskInfo != null) {
+      def update(id: Long): Long = e.taskInfo.accumulables.collectFirst {
+        case a if a.id == id && a.update.isDefined => a.update.get.asInstanceOf[Number].longValue
+      }.getOrElse(0L)
+      val drained = update(probe.drained.id)
+      if (drained > 0) {
+        val pid = e.taskInfo.partitionId
+        byPartition.putIfAbsent(pid, (PartitionMetric(pid,
+          update(probe.rows.id), update(probe.errors.id), update(probe.nanos.id)), drained))
+      }
+    }
+
+  /** Drained partitions, by partition id. */
+  def drained: Seq[PartitionMetric] =
+    byPartition.values.asScala.toSeq.map(_._1).sortBy(_.partitionId)
+
+  /** Rows over every partition, if the node ran and each of its
+    * partitions reported drained; None when part of its input went
+    * unread (or the node never ran). */
+  def total: Option[Long] = {
+    val seen = byPartition.values.asScala.toSeq
+    if (probe.partitions >= 0 && seen.map(_._2).sum == probe.partitions)
+      Some(seen.map(_._1.rows).sum)
+    else None
   }
-  override def reset(): Unit = list = Nil
-  override def add(v: PartitionMetric): Unit = synchronized { list = v :: list }
-  override def merge(other: AccumulatorV2[PartitionMetric, List[PartitionMetric]]): Unit =
-    synchronized { list = other.value ++ list }
-  override def value: List[PartitionMetric] = list
 }
+
+/** The collector of an instrumented (jobId, stage) until its `flush`. */
+private final class Registered(
+    probe: TileMetricsProbe,
+    val jobId: String,
+    val stage: String,
+    val metricsPath: String,
+    val spark: SparkSession) extends PartitionMetrics(probe)

@@ -206,7 +206,10 @@ object Filters {
 
   /** ImageFormatConverter (reference filter/image.py:17-41): re-encode
     * to the target content type; conversion failures land in the error
-    * column, not as exceptions. */
+    * column, not as exceptions. One projection over the input's columns
+    * (same names and order); the converted value is one common
+    * subexpression of `data`, `error` and `content_type`, so each row
+    * is converted once. */
   def formatConverter(targetCt: String)(df: DataFrame): DataFrame = {
     val convUdf = udf { (data: Array[Byte], ct: String) =>
       if (data == null) null
@@ -214,21 +217,19 @@ object Filters {
         try ImageCodec.convert(data, if (ct == null) "" else ct, targetCt)
         catch { case _: Exception => null }
     }
-    df.withColumn(
-        "converted",
-        when(col("content_type") === targetCt, col("data"))
-          .otherwise(convUdf(col("data"), col("content_type"))))
-      .withColumn(
-        "error",
+    val converted = when(col("content_type") === targetCt, col("data"))
+      .otherwise(convUdf(col("data"), col("content_type")))
+    df.select(df.columns.toSeq.map {
+      case "data" => converted.as("data")
+      case "error" =>
         when(
-          col("error").isNull && col("data").isNotNull && col("converted").isNull,
+          col("error").isNull && col("data").isNotNull && converted.isNull,
           lit(s"conversion to $targetCt failed"))
-          .otherwise(col("error")))
-      .withColumn("data", col("converted"))
-      .drop("converted")
-      .withColumn(
-        "content_type",
-        when(col("data").isNotNull, lit(targetCt)).otherwise(col("content_type")))
+          .otherwise(col("error")).as("error")
+      case "content_type" =>
+        when(converted.isNotNull, lit(targetCt)).otherwise(col("content_type")).as("content_type")
+      case c => col(c)
+    }: _*)
   }
 
   /** OptiPNG (reference filter/optipng.py): lossless PNG byte-size

@@ -1,10 +1,11 @@
 package graft.engine
 
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{BoundingPyramid, QuadTileGrid, TileGrids}
-import graft.sql.TileFunctions
+import graft.sql.{Jobs, TileFunctions}
 import graft.sql.TileFunctions._
 
 /** The flagship pipelines: raster<->vector tile assignment, the
@@ -24,7 +25,9 @@ import graft.sql.TileFunctions._
   *    range join, `regionSemiJoin`), so region work follows the occupied
   *    tiles, not the region's area;
   *  - resume is a left_anti join of those winner coords against sink
-  *    coords only (column-pruned scan of (z,x,y), no blobs).
+  *    coords only (column-pruned scan of (z,x,y), no blobs); that one
+  *    sink scan also yields the sink's count, so a copy job reads its
+  *    sink once.
   */
 object Pipeline {
 
@@ -237,8 +240,19 @@ object Pipeline {
     * as the enumerated form, since a region coord without a source tile
     * writes nothing — but no region coord is ever generated, so the work
     * follows the occupied tiles (a z4..18 region is ~9e10 coords; its
-    * winners are at most one per image per zoom). Returns the sink's
-    * tile count after the write. */
+    * winners are at most one per image per zoom).
+    *
+    * Returns the sink's tile count after the write without reading the
+    * sink again: a counting-only metrics node sits on the resume join's
+    * sink scan, and the result is rows scanned + rows written (the
+    * anti-join makes them disjoint). The node keeps the join's inferred
+    * zoom filter from pruning the sink's `z=` directories, so it is used
+    * only when the sink holds no zoom outside the region (the scan reads
+    * every sink row anyway). The sink is counted explicitly instead when
+    * it holds other zooms, or when either node did not hear from every
+    * one of its partitions: adaptive execution can drop the sink side of
+    * an anti-join whose winners side is empty, and a lagging listener
+    * bus can leave task-end events undelivered. */
   def copyJob(
       spark: SparkSession,
       corpus: DataFrame,
@@ -247,16 +261,28 @@ object Pipeline {
       metricsPath: String,
       jobId: String,
       targetCt: String = "image/png"): Long = {
+    val sc = spark.sparkContext
     // coordinate-phase joins first (region predicate + resume anti-join
     // against 32-byte winner rows), payload attach last — image bytes
     // never ride a coordinate shuffle
-    val todo = Checkpoint.resume(
-      tileWinners(corpus, bp.zs.toSeq, region = Some(bp)), sinkPath)
-    val converted = Filters.formatConverter(targetCt)(attachBytes(corpus, todo))
-    TileTable.write(
-      Checkpoint.instrument(converted, jobId, "sink", metricsPath), sinkPath)
-    Checkpoint.flush(jobId, "sink")
-    TileTable.read(spark, sinkPath).count()
+    val winners = tileWinners(corpus, bp.zs.toSeq, region = Some(bp))
+    val sinkZooms = TileTable.zooms(spark, sinkPath)
+    val (todo, scan) =
+      Checkpoint.resumeCounting(winners, sinkPath, count = sinkZooms.forall(bp.zs.toSet))
+    val written =
+      try {
+        scan.foreach(GraftBus.listen(sc, _))
+        val converted = Filters.formatConverter(targetCt)(attachBytes(corpus, todo))
+        TileTable.write(
+          Checkpoint.instrument(converted, jobId, "sink", metricsPath), sinkPath)
+        Checkpoint.flushTotal(jobId, "sink")
+      } finally {
+        scan.foreach(sc.removeSparkListener)
+        Checkpoint.unregister(sc, jobId, "sink")
+      }
+    val scanned = if (sinkZooms.isEmpty) Some(0L) else scan.flatMap(_.total)
+    (for (s <- scanned; w <- written) yield s + w).getOrElse(
+      Jobs.described(spark, "Pipeline.copyJob")(TileTable.read(spark, sinkPath).count()))
   }
 
   /** Deterministic work-order randomization (reference

@@ -1,10 +1,14 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.{Bounds, BoundingPyramid}
-import graft.sql.TileFunctions
+import graft.sql.{Jobs, TileFunctions}
 
 /** The engine's canonical tile table — MBTiles-parity schema
   * `(z INT, x BIGINT, y BIGINT, n INT, data BINARY, content_type STRING,
@@ -53,8 +57,45 @@ object TileTable {
       .partitionBy("z")
       .parquet(path)
 
+  /** Read a tile table without a schema-inference job: the data schema
+    * comes from one file footer, read on the driver (the schema Spark
+    * recorded under `org.apache.spark.sql.parquet.row.metadata`, the
+    * same key its own inference reads), `z` from the directory layout.
+    * Footers without that key fall back to `spark.read.parquet`. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(s: FileStatus) = Seq("_", ".").exists(s.getPath.getName.startsWith)
+    // depth-first to the first data file: z=<n>/part-*.parquet
+    def firstFile(dir: Path): Option[FileStatus] = {
+      val (dirs, files) = fs.listStatus(dir).filterNot(hidden).partition(_.isDirectory)
+      files.find(_.getLen > 0).orElse(dirs.iterator.map(d => firstFile(d.getPath)).collectFirst {
+        case Some(f) => f
+      })
+    }
+    if (!fs.exists(root)) None
+    else firstFile(root).flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
+  }
+
+  /** The zooms a tile table holds: its `z=<n>` directories (none when
+    * the table does not exist). */
+  private[engine] def zooms(spark: SparkSession, path: String): Seq[Int] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName).collect {
+      case s"z=$n" if n.nonEmpty && n.forall(_.isDigit) => n.toInt
+    }
+  }
 
   /** Bucketed variant (managed table): hash-bucketed and sorted by
     * (x, y) inside each z partition. Two tables written with the same
@@ -142,8 +183,7 @@ object TileTable {
   def deleteRegion(
       spark: SparkSession,
       path: String,
-      bp: graft.core.BoundingPyramid): Unit = {
-    import graft.sql.TileFunctions
+      bp: graft.core.BoundingPyramid): Unit = Jobs.described(spark, "TileTable.deleteRegion") {
     val affected = bp.zs.toSeq
     val current = read(spark, path)
     // localCheckpoint severs lineage from the source files: the dynamic

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.sql.Jobs
 
 /** Training-corpus assembly operators: the steps between "cleaned
   * documents" and "training batches" in an LLM data pipeline —
@@ -80,11 +81,13 @@ object CorpusOps {
     // localCheckpoint materializes the sample→dedup→quality→chunk
     // pipeline once: both the packer and the final join read it, and a
     // lazy relation would recompute the corpus-wide window twice.
-    val chunks = chunkByTokens(quality, "doc_id", "text", window, stride)
-      .select(
-        col("id").as("doc_id"), col("chunk_idx"), col("chunk_text"),
-        col("n_tokens"))
-      .localCheckpoint()
+    val chunks = Jobs.described(docs.sparkSession, "CorpusOps.buildCorpus") {
+      chunkByTokens(quality, "doc_id", "text", window, stride)
+        .select(
+          col("id").as("doc_id"), col("chunk_idx"), col("chunk_text"),
+          col("n_tokens"))
+        .localCheckpoint()
+    }
     val forPack =
       if (packShards > 0)
         chunks.repartition(packShards, col("doc_id"), col("chunk_idx"))

@@ -14,7 +14,8 @@ import graft.engine.{Checkpoint, Pipeline, TileTable}
   *   - `leg <cpus> <rows> <outTag>` — one COLD full copyJob (fresh
   *     sink) on the standard phash-bucketed corpus: region winners ->
   *     resume anti-join against sink coords -> byte attach -> format
-  *     convert -> instrumented sink write. Emits one JSON line
+  *     convert -> instrumented sink write (the sink count taken from
+  *     the resume join's one sink scan). Emits one JSON line
   *     with wall seconds + tiles written; run it once at N and once at
   *     4N cores (taskset-pinned, separate JVMs — tools/copy_ladder.sh)
   *     for the scaling ladder.
@@ -164,7 +165,8 @@ object CopyLadder {
              |
              |`Pipeline.copyJob` (region winners -> resume anti-join
              |against sink coords -> byte attach -> format convert ->
-             |instrumented sink write), $rows-image corpus,
+             |instrumented sink write; the sink count comes from the
+             |resume join's one sink scan), $rows-image corpus,
              |zooms $zMin..$zMax, local[$cpus]. The kill is emulated at a
              |partition-complete boundary (pass 1 covers z$zMin..z$zMid
              |only) — exactly the granularity the checkpoint model

@@ -14,7 +14,10 @@ import graft.engine.{Checkpoint, Filters, Pipeline, TileTable}
   * image re-encode vs parquet sink). Run at N and 4N cores like the
   * copy legs; each phase's action subsumes the previous phases'
   * work (Spark has no free materialization boundary), so the
-  * per-stage cost is the DELTA between consecutive rows.
+  * per-stage cost is the DELTA between consecutive rows. The pipeline
+  * is rebuilt through `Checkpoint.resume`, the uncounted resume join
+  * (`copyJob` puts a counting node on the sink scan); over the absent
+  * sink the two are the same plan.
   */
 object CopyProfile {
 

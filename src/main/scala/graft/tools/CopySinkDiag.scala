@@ -21,6 +21,11 @@ import graft.engine.{Checkpoint, Filters, Pipeline}
   *
   * Prints the per-partition table (rows, MB, write s, noop s) and the
   * max/mean ratios per leg. Args: [cpus] [rows].
+  *
+  * The dry and noop legs rebuild the pre-sink relation through
+  * `Checkpoint.resume`, the uncounted resume join: unlike `copyJob`'s,
+  * their sink scan carries no counting node, so the join's inferred
+  * zoom filter prunes it. Only the write leg runs `copyJob` itself.
   */
 object CopySinkDiag {
 
@@ -88,11 +93,12 @@ object CopySinkDiag {
     val writeM = perPid("diag-pass2")
     val noopM = perPid("diag-noop")
 
-    // NOTE: writeWall covers the whole copyJob INCLUDING its post-write
-    // verification scan of the full sink (Pipeline.copyJob's read-back
-    // count), which the noop leg does not perform — compare the legs by
-    // the per-partition task seconds below, never by these walls.
-    println(f"[sinkdiag] cpus=$cpus rows=$rows  write wall=$writeWall%.2f s (incl. post-write sink count)  noop wall=$noopWall%.2f s")
+    // NOTE: writeWall covers the whole copyJob INCLUDING its resume
+    // anti-join's scan of the sink's coords (which also yields the
+    // job's sink count), which the noop leg does not perform — compare
+    // the legs by the per-partition task seconds below, never by these
+    // walls.
+    println(f"[sinkdiag] cpus=$cpus rows=$rows  write wall=$writeWall%.2f s (incl. resume sink scan)  noop wall=$noopWall%.2f s")
     println("pid | rows | MB | write_s | noop_s")
     val pids = writeM.keys.toSeq.sorted
     for (pid <- pids) {

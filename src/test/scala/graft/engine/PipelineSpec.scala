@@ -152,6 +152,11 @@ class PipelineSpec extends SparkTestBase {
     writePlans.foreach { p =>
       assert(!p.linesIterator.exists(_.matches(".*\\bRange \\(.*")),
         s"write plan enumerates the region:\n$p")
+      // the sink is metered on InternalRow: no Row encoder round trip
+      assert(p.contains("TileMetrics"), s"no metrics node in the write plan:\n$p")
+      Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject").foreach { op =>
+        assert(!p.contains(op), s"$op in the write plan:\n$p")
+      }
     }
     // re-run: nothing left to do
     assert(Pipeline.copyJob(spark, storedCorpus, bp, sink, metrics, "job-deep-2") == written)
@@ -178,6 +183,83 @@ class PipelineSpec extends SparkTestBase {
     val pass2Rows = Checkpoint.readMetrics(spark, metrics)
       .where(col("job_id") === "job-p2").agg(sum("rows")).collect().head.getLong(0)
     assert(pass2Rows == missing.size)
+  }
+
+  test("copy job returns the sink count read from its one sink scan") {
+    val sink = tmp() + "/count"
+    val metrics = tmp() + "/count-m"
+    def sinkCount = TileTable.read(spark, sink).count()
+    // the sink does not exist yet
+    assert(countedCopy(BoundingPyramid.full(2, 4), sink, metrics, "count-1") ==
+      ((sinkCount, false)))
+    // the sink holds zooms outside the region: the scan is pruned to the
+    // region's zooms, so the sink is counted explicitly
+    assert(countedCopy(BoundingPyramid.full(2, 3), sink, metrics, "count-2") ==
+      ((sinkCount, true)))
+    // the sink's zooms are the region's: its scan alone gives the count
+    assert(countedCopy(BoundingPyramid.full(2, 4), sink, metrics, "count-3") ==
+      ((sinkCount, false)))
+    // the region has no winners over a non-empty sink
+    val occupied = coordSet(Pipeline.tileWinnersDirect(storedCorpus, Seq(14)))
+    val vacant = (0L until 1000L).map(x => TileCoord(14, x, 0L))
+      .find(c => !occupied((c.z, c.x, c.y))).get
+    assert(countedCopy(BoundingPyramid.empty.add(vacant), sink, metrics, "count-4")._1 ==
+      sinkCount)
+    assert(sinkCount == coordSet(
+      Pipeline.tileWinnersDirect(storedCorpus, Seq(2, 3, 4))).size)
+  }
+
+  test("copy job counts the sink explicitly when the write's task-end events never arrive") {
+    val sink = tmp() + "/lost"
+    val metrics = tmp() + "/lost-m"
+    countedCopy(BoundingPyramid.full(2, 3), sink, metrics, "lost-1")
+    // a listener ahead of the collectors on graft's event queue stops at
+    // the first task end of the write's metrics node: the flush's drain
+    // times out and no write partition reports
+    val sc = spark.sparkContext
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val ids = Option(e.taskInfo).toSeq.flatMap(_.accumulables.map(_.id)).toSet
+        if (org.apache.spark.GraftBus.listeners[Registered](sc).exists(r => ids(r.probe.drained.id)))
+          release.await()
+      }
+    }
+    org.apache.spark.GraftBus.listen(sc, holder)
+    val (n, recounted) =
+      try countedCopy(BoundingPyramid.full(2, 4), sink, metrics, "lost-2", release.countDown())
+      finally {
+        release.countDown()
+        sc.removeSparkListener(holder)
+      }
+    assert(recounted)
+    assert(n == TileTable.read(spark, sink).count())
+    assert(n == coordSet(Pipeline.tileWinnersDirect(storedCorpus, Seq(2, 3, 4))).size)
+  }
+
+  /** `copyJob` of `storedCorpus`: its count, and whether it counted the
+    * sink after the write. `after` runs once the call returns. */
+  private def countedCopy(
+      bp: BoundingPyramid,
+      sink: String,
+      metrics: String,
+      job: String,
+      after: => Unit = ()): (Long, Boolean) = {
+    val sc = spark.sparkContext
+    var recounts = 0
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "graft:Pipeline.copyJob"))
+          synchronized(recounts += 1)
+    }
+    sc.addSparkListener(l)
+    try {
+      val n = Pipeline.copyJob(spark, storedCorpus, bp, sink, metrics, job)
+      after
+      org.apache.spark.GraftBus.drain(sc)
+      (n, l.synchronized(recounts) > 0)
+    } finally sc.removeSparkListener(l)
   }
 
   test("cheap bounding pyramid and tms view round-trip") {
