@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.BoundingPyramid
+import graft.core.{BoundingPyramid, CellIndex}
 import graft.sql.{Jobs, TileFunctions}
 import graft.sql.TileFunctions._
 
@@ -2014,7 +2014,7 @@ object GraftQueries {
     // points vs three literal polygons (a pentagon, a CONCAVE L whose
     // notch defeats any convex shortcut, and an overlapping triangle)
     // over a 1000x1000 planar extent. The Spark side runs the scale
-    // shape — cell-index equi-join at zoom 4, then the HOF ray-cast
+    // shape — equi-join on the zoom-4 quad cell index, then the ray-cast
     // refine; the oracle runs the naive cross join with the identical
     // even-odd crossing arithmetic in DuckDB list lambdas (same IEEE
     // expression order, so the two engines agree bit-for-bit on every
@@ -2026,7 +2026,7 @@ object GraftQueries {
           ((col("l_orderkey") % 1000) + 0.5).as("px"),
           ((col("l_partkey") % 1000) + 0.5).as("py"),
           col("l_orderkey").as("k"))
-        graft.engine.Spatial.polygonJoin(pts, spatialSceneDf(s), 4, 0, 0, 1000, 1000)
+        graft.engine.Spatial.join(pts, spatialSceneDf(s), CellIndex.Quad(4, 0, 0, 1000, 1000))
           .groupBy("polygon_id")
           .agg(count(lit(1)).as("n_pts"), sum("k").as("sum_key"))
           .orderBy("polygon_id")
@@ -2077,11 +2077,12 @@ $spatialSceneSql
     // Vector→raster tile assignment (the other half of q68's
     // raster↔vector pair): burn each polygon onto the zoom-6 tile
     // grid under the center-sample rule — every tile whose center
-    // ray-casts inside. Engine side is Spatial.rasterize: bbox cell
-    // explode + pure-column refine, NO join and NO shuffle (the spec
-    // asserts the plan). The oracle enumerates ALL 4096 cells × every
-    // polygon — deliberately ignorant of the bbox prefilter — so a
-    // hash match also proves the prefilter drops nothing.
+    // ray-casts inside. Engine side is Spatial.rasterize: tight-cover
+    // explode on the zoom-6 quad index + center refine, NO join and NO
+    // shuffle (the spec asserts the plan). The oracle enumerates ALL
+    // 4096 cells × every polygon — deliberately ignorant of the cover
+    // prefilter — so a hash match also proves the prefilter drops
+    // nothing.
     ("q70_rasterize",
       (s: SparkSession, dir: String) => {
         graft.engine.Spatial.rasterize(spatialSceneDf(s), 6, 0, 0, 1000, 1000)
@@ -2239,22 +2240,22 @@ $spatialSceneSql
         |SELECT doc_id, 2097151 - (hk & 2097151) AS pos, hk >> 21 AS fp
         |FROM fps ORDER BY doc_id, pos""".stripMargin)),
 
-    // Hex-indexed point-in-polygon join (engine/Spatial.hexPolygonJoin)
-    // on the q68 scene: points meet polygons on the packed hex cell id
-    // (points → hexCellOfPoint, polygons → hexCover bbox parallelogram
-    // explode), exact ray-cast refine above the join. The oracle is
-    // q68's index-IGNORANT naive cross join, so hash equality proves
-    // the hex cover is a lossless prefilter — including the axial
-    // shear and the ±1 cube-rounding margin — on top of the already-
-    // proven crossing arithmetic. Hex size 62.5 ≈ the zoom-4 quad cell
-    // q68 uses.
+    // Hex-indexed point-in-polygon join (engine/Spatial.join on the hex
+    // index) on the q68 scene: points meet polygons on the packed hex
+    // cell id (points → hexCellOfPoint, polygons → the tight cover of
+    // the bbox axial parallelogram), exact ray-cast refine above the
+    // join. The oracle is q68's index-IGNORANT naive cross join, so
+    // hash equality proves the hex cover is a lossless prefilter —
+    // including the axial shear and the ±1 cube-rounding margin — on
+    // top of the already-proven crossing arithmetic. Hex size 62.5 ≈
+    // the zoom-4 quad cell q68 uses.
     ("q74_hex_polygon_join",
       (s: SparkSession, dir: String) => {
         val pts = table(s, dir, "lineitem").select(
           ((col("l_orderkey") % 1000) + 0.5).as("px"),
           ((col("l_partkey") % 1000) + 0.5).as("py"),
           col("l_orderkey").as("k"))
-        graft.engine.Spatial.hexPolygonJoin(pts, spatialSceneDf(s), 62.5)
+        graft.engine.Spatial.join(pts, spatialSceneDf(s), CellIndex.Hex(62.5))
           .groupBy("polygon_id")
           .agg(count(lit(1)).as("n_pts"), sum("k").as("sum_key"))
           .orderBy("polygon_id")

@@ -348,7 +348,8 @@ object ScalingBench {
            || compute only, noop sink (no disk I/O) | ${f"$ntN%.2f"} s | ${f"$nt4%.2f"} s | ${f"$computeEff%.3f"} |
            || full job incl. 9.9 GB single-disk sink write | ${f"$tN%.2f"} s | ${f"$t4%.2f"} s | ${f"$fullEff%.3f"} |
            |
-           |Attribution (tools/CopyProfile phase deltas + cross-checks):
+           |Attribution (history: phase deltas from tools/CopyProfile, a
+           |tool since deleted, + cross-checks):
            |the noop-sink job is dominated by the byte stream (10 GB
            |bucketed scan -> hash probe -> image re-encode), which is
            |DRAM-bandwidth-bound on one box — the SAME ceiling the

@@ -111,12 +111,6 @@ object Dedup {
       .drop("__bucket_size")
   }
 
-  /** Distinct (id, shingle) pairs. */
-  def shingleSet(df: DataFrame, idCol: String, textCol: String, n: Int = 2): DataFrame =
-    parallelize(df)
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), n)).as("s"))
-      .distinct()
-
   /** Per-doc distinct hashed-shingle array (hash32 of each shingle —
     * the same 32-bit md5 hash the MinHash kernel and every oracle use),
     * sorted by (global document frequency asc, hash asc) — the

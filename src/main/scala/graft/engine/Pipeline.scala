@@ -58,40 +58,18 @@ object Pipeline {
       .withColumn("y", tileOfPointY(col("py"), col("z"), grid))
       .withColumn("cell", TileFunctions.cellId(col("z"), col("x"), col("y")))
 
-  /** Per-tile render: deterministic representative image per tile (the
-    * min-phash member — phash is unique per image by corpus contract),
-    * image count, and carried caption.
-    *
-    * Two-phase for scale, and image BYTES flow exactly ONCE:
-    * (1) assignment coordinates are derived from a BYTELESS projection
-    * (`phash` only), so the zoom explode and the fixed-width
-    * `(min(phash), count)` HashAggregate (map-side partials, ~32
-    * bytes/tile through the exchange) never touch the payload;
-    * (2) the winners relation joins back to the ORIGINAL corpus on
-    * `phash = win_phash` — one byte-carrying probe row per image, not
-    * one per (image x zoom). At small tile counts AQE broadcasts the
-    * winners side so bytes never shuffle at all; at huge tile counts the
-    * shuffle key is phash with at most `zooms.size` winner rows per
-    * image — bounded fan-out, no skew. The previous formulation joined
-    * winners to the byte-carrying EXPLODED assignment (x |zooms| payload
-    * duplication through the probe); a `min_by(struct(bytes...))`
-    * formulation is worse still — it drags the payload through a
-    * SortAggregate, measured 10x slower and negatively scaling at 32
-    * threads. */
-  def renderTiles(
-      corpus: DataFrame,
-      zooms: Seq[Int],
-      grid: QuadTileGrid = TileGrids.Google,
-      region: Option[BoundingPyramid] = None): DataFrame =
-    attachBytes(corpus, tileWinners(corpus, zooms, grid, region))
-
-  /** Phase 1 of the render: the byteless winner-coordinate relation —
-    * one ~24-byte row per output tile `(z, x, y, win_phash,
-    * img_count)`. ALL spatial filtering and joining (region semi-joins,
-    * resume anti-joins) should happen against THIS relation, not
-    * against the byte-carrying output: joining coordinates first and
-    * attaching payloads last is what keeps image bytes off every
-    * shuffle.
+  /** Phase 1 of the per-tile render (then [[attachBytes]]): the
+    * byteless winner-coordinate relation — one ~24-byte row per output
+    * tile `(z, x, y, win_phash, img_count)`, the winner being the
+    * min-phash member (phash is unique per image by corpus contract).
+    * Image BYTES flow exactly once: assignment derives from a byteless
+    * `phash` projection, and [[attachBytes]] joins the winners back to
+    * the original corpus, one byte-carrying probe row per image rather
+    * than one per (image x zoom). ALL spatial filtering and joining
+    * (region semi-joins, resume anti-joins) should happen against THIS
+    * relation, not against the byte-carrying output: joining
+    * coordinates first and attaching payloads last is what keeps image
+    * bytes off every shuffle.
     *
     * Computed as a TWO-PHASE HIERARCHICAL ROLLUP, not a per-zoom
     * re-aggregation of the point set: (1) points aggregate ONCE at the

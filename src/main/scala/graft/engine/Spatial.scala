@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CellIndex
+
 /** Point-in-polygon joins — the vector half of raster↔vector tile
   * assignment (SURVEY.md §2.6: the reference's point→tile kernel
   * grid/quad.py:78-83 assigns points to CELLS; this module assigns
@@ -10,32 +12,30 @@ import org.apache.spark.sql.functions._
   *
   * Two layers, both declarative:
   *
-  *  1. [[pointInPolygon]] — even-odd ray casting as a pure column
-  *     expression over an `array<struct<x,y>>` vertex column, built
-  *     entirely from higher-order functions (`zip_with` pairs each
-  *     vertex with its successor, `aggregate` XORs the per-edge
-  *     crossing tests). No UDF: the lambda stays inside Tungsten
-  *     evaluation, and the vertex arrays ride the row, so the test
-  *     works for ANY polygon — convex, concave, per-row different.
+  *  1. [[pointInPolygon]] — even-odd ray casting as a codegen column
+  *     expression over an `array<struct<x,y>>` vertex column. The
+  *     vertex arrays ride the row, so the test works for ANY polygon —
+  *     convex, concave, per-row different.
   *
-  *  2. [[polygonJoin]] — the scale shape. A naive points×polygons
-  *     test is a cartesian product (10^12 × 10^6 = game over). Instead
-  *     both sides meet on a quadtree cell index at a caller-chosen
-  *     zoom over a caller-declared planar extent: points map to their
-  *     single containing cell (one row each — the q02 kernel),
-  *     polygons explode to the cells covering their bounding box
-  *     (area-proportional, bounded by the zoom choice), and the join
-  *     is a plain equi-join on the cell id — shuffles on cell, AQE
-  *     handles skew (or compose Skew.saltedJoin for a pathological
-  *     hot cell), then the exact ray cast refines. Each point owns
-  *     exactly one cell, so a (point, polygon) pair can meet at most
-  *     once — no post-join dedup.
+  *  2. [[join]] — the scale shape. A naive points×polygons test is a
+  *     cartesian product (10^12 × 10^6 = game over). Instead both sides
+  *     meet on a [[graft.core.CellIndex]] — the quadtree grid at a zoom
+  *     over a declared planar extent, or the hex grid at a size — as the
+  *     reference's operators meet on one abstract TileGrid. Points map
+  *     to their single containing cell ([[cellOf]]), polygons explode to
+  *     their [[tightCover]], and the join is a plain equi-join on the
+  *     cell id — shuffles on cell, AQE handles skew (or compose
+  *     Skew.saltedJoin for a pathological hot cell), then the exact ray
+  *     cast refines. Each point owns exactly one cell, so a (point,
+  *     polygon) pair can meet at most once — no post-join dedup. The
+  *     index is the only thing that differs between the quad join (q68)
+  *     and the hex join (q74).
   *
-  * Zoom tuning is the classic space-filling-index tradeoff: finer
-  * zoom → more cells per polygon (explode cost), coarser → more
-  * false candidates per cell (refine cost). The right setting makes
-  * mean cell occupancy a small constant; polygons far larger than a
-  * cell should be range-partitioned by cell instead of broadcast.
+  * Resolution tuning is the classic space-filling-index tradeoff: finer
+  * cells → more cells per polygon (explode cost), coarser → more false
+  * candidates per cell (refine cost). The right setting makes mean cell
+  * occupancy a small constant; polygons far larger than a cell should
+  * be range-partitioned by cell instead of broadcast.
   */
 object Spatial {
 
@@ -96,14 +96,14 @@ object Spatial {
     * compose without seams (up to the shared half-open boundary
     * rule).
     *
-    * Scale shape: NO join and NO shuffle — a per-polygon bbox cell
-    * explode (area-proportional; `sequence` bounds the blowup to the
-    * zoom choice) followed by the pure-column ray-cast refine, so the
-    * operator is embarrassingly parallel over polygon rows and
-    * pipelines inside one codegen stage. cx/cy are recovered from the
+    * Scale shape: NO join and NO shuffle — a per-polygon
+    * [[tightCover]] explode on the quad index (area-proportional,
+    * bounded by the zoom choice) followed by the ray-cast refine of
+    * each cell center, so the operator is embarrassingly parallel over
+    * polygon rows and pipelines inside one codegen stage. cx/cy are recovered from the
     * row-major id by mask/shift (exact at any zoom; no double
     * division). For a polygon spanning a large share of the grid at a
-    * fine zoom, the bbox explode is Θ(area/cellArea) rows — by
+    * fine zoom, the cover explode is Θ(area/cellArea) rows — by
     * design, since that IS the output size for a filled polygon; if
     * only the boundary is needed, descend hierarchically instead
     * (the [[graft.engine.Pipeline]] BFS-subdivision shape).
@@ -115,36 +115,69 @@ object Spatial {
       zoom: Int,
       minX: Double, minY: Double, width: Double, height: Double,
       verticesCol: String = "vertices"): DataFrame = {
-    val n = 1L << zoom
-    val cellW = width / n
-    val cellH = height / n
-    // tight-cover kernel explode (same row-major ids and bbox clamp
-    // arithmetic as polygonCells, minus cells that cannot contain the
-    // polygon): lossless for the center refine below — a center-inside
-    // cell always passes cellMayIntersect — and one codegen loop per
-    // polygon instead of the interpreted 4-fold bbox aggregate + nested
-    // transform(sequence) cover enumeration (KernelParitySpec pins
-    // tight ⊆ bbox and the refined output equal on the slivered scene).
+    val index = CellIndex.Quad(zoom, minX, minY, width, height)
+    // tight cover: lossless for the center refine below — a
+    // center-inside cell always passes cellMayIntersect
     polygons
-      .withColumn("_cell",
-        explode(org.apache.spark.sql.GraftColumnBridge.column(
-          graft.sql.QuadTightCoverExpr(
-            org.apache.spark.sql.GraftColumnBridge.expression(col(verticesCol)),
-            zoom, minX, minY, width, height))))
-      .withColumn("cx", col("_cell").bitwiseAND(lit(n - 1)))
+      .withColumn("_cell", explode(tightCover(col(verticesCol), index)))
+      .withColumn("cx", col("_cell").bitwiseAND(lit(index.n - 1)))
       .withColumn("cy", shiftright(col("_cell"), zoom))
       .where(pointInPolygon(
-        lit(minX) + (col("cx") + lit(0.5)) * lit(cellW),
-        lit(minY) + (col("cy") + lit(0.5)) * lit(cellH),
+        lit(minX) + (col("cx") + lit(0.5)) * lit(index.cellW),
+        lit(minY) + (col("cy") + lit(0.5)) * lit(index.cellH),
         col(verticesCol)))
       .drop("_cell", verticesCol)
+  }
+
+  /** The cell of a point on `index`: [[cellOfPoint]] on the quad grid,
+    * [[hexCellOfPoint]] on the hex grid. */
+  def cellOf(px: Column, py: Column, index: CellIndex): Column = index match {
+    case CellIndex.Quad(zoom, minX, minY, width, height) =>
+      cellOfPoint(px, py, zoom, minX, minY, width, height)
+    case CellIndex.Hex(size) => hexCellOfPoint(px, py, size)
+  }
+
+  /** The cells of `index` that may hold a point of the polygon, as an
+    * array column to explode: the bbox cell range filtered to cells
+    * whose center is inside the polygon or whose circumradius reaches
+    * its boundary (lossless by the triangle inequality), plus the
+    * cells the index always keeps. One codegen kernel loop per polygon
+    * ([[graft.sql.SpatialKernels.tightCover]]). */
+  def tightCover(vertices: Column, index: CellIndex): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(graft.sql.CellCoverExpr(
+      org.apache.spark.sql.GraftColumnBridge.expression(vertices), index))
+
+  /** Every cell of `index` in the polygon's bbox cell range: the
+    * interpreted reference covers [[polygonCells]] and [[hexCover]],
+    * which [[tightCover]] refines. */
+  def bboxCover(vertices: Column, index: CellIndex): Column = index match {
+    case CellIndex.Quad(zoom, minX, minY, width, height) =>
+      polygonCells(vertices, zoom, minX, minY, width, height)
+    case CellIndex.Hex(size) => hexCover(vertices, size)
   }
 
   /** The scalable point-in-polygon join: every (point row, polygon
     * row) pair where the point lies inside the polygon. `points`
     * needs double columns `pxCol`/`pyCol`; `polygons` needs
-    * `verticesCol: array<struct<x,y>>`. Output: all point columns +
-    * all polygon columns except the vertex array. */
+    * `verticesCol: array<struct<x,y>>`. Points meet polygons on
+    * `index`'s cell id; the output does not depend on the index.
+    * Output: all point columns + all polygon columns except the vertex
+    * array. */
+  def join(
+      points: DataFrame,
+      polygons: DataFrame,
+      index: CellIndex,
+      pxCol: String = "px",
+      pyCol: String = "py",
+      verticesCol: String = "vertices"): DataFrame = {
+    val p = points.withColumn("_cell", cellOf(col(pxCol), col(pyCol), index))
+    val g = polygons.withColumn("_cell", explode(tightCover(col(verticesCol), index)))
+    p.join(g, "_cell")
+      .where(pointInPolygon(col(pxCol), col(pyCol), col(verticesCol)))
+      .drop("_cell", verticesCol)
+  }
+
+  /** [[join]] on the quad grid at `zoom` over the extent. */
   def polygonJoin(
       points: DataFrame,
       polygons: DataFrame,
@@ -152,24 +185,19 @@ object Spatial {
       minX: Double, minY: Double, width: Double, height: Double,
       pxCol: String = "px",
       pyCol: String = "py",
-      verticesCol: String = "vertices"): DataFrame = {
-    val p = points.withColumn("_cell",
-      cellOfPoint(col(pxCol), col(pyCol), zoom, minX, minY, width, height))
-    // tight cover: the same clamped bbox cell range, filtered to cells
-    // that can actually hold an in-polygon point (center inside, or
-    // boundary within the cell's circumradius — lossless by the
-    // triangle inequality; grid-border cells kept unconditionally for
-    // the out-of-extent clamp). Cuts the candidate fan-out of every
-    // bbox-interior-but-outside-polygon cell before the join.
-    val g = polygons.withColumn("_cell",
-      explode(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.QuadTightCoverExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(verticesCol)),
-          zoom, minX, minY, width, height))))
-    p.join(g, "_cell")
-      .where(pointInPolygon(col(pxCol), col(pyCol), col(verticesCol)))
-      .drop("_cell", verticesCol)
-  }
+      verticesCol: String = "vertices"): DataFrame =
+    join(points, polygons, CellIndex.Quad(zoom, minX, minY, width, height),
+      pxCol, pyCol, verticesCol)
+
+  /** [[join]] on the hex grid of circumradius `size`. */
+  def hexPolygonJoin(
+      points: DataFrame,
+      polygons: DataFrame,
+      size: Double,
+      pxCol: String = "px",
+      pyCol: String = "py",
+      verticesCol: String = "vertices"): DataFrame =
+    join(points, polygons, CellIndex.Hex(size), pxCol, pyCol, verticesCol)
 
   // ---------------------------------------------------------------------
   // Hexagonal cell index — the H3-style planar analogue.
@@ -191,12 +219,7 @@ object Spatial {
   // on every rounding decision — the same discipline as the q68 ray
   // cast.
 
-  /** sqrt(3)/3, 1/3, 2/3 as the literal doubles both engines parse. */
-  private val HexC1 = 0.5773502691896258
-  private val HexC2 = 0.3333333333333333
-  private val HexC3 = 0.6666666666666666
-
-  private val HexOff = 1048576L // 2^20: axial coords packed at 21 bits
+  import CellIndex.{C1 => HexC1, C2 => HexC2, C3 => HexC3, HexOff}
 
   /** Axial (q, r) hex coordinates of a point on the pointy-top hex grid
     * with circumradius `size` (hex centers at distance size*sqrt(3)
@@ -297,42 +320,5 @@ object Spatial {
     val r1 = rOf(yMax) + lit(1)
     flatten(transform(sequence(q0.cast("long"), q1.cast("long")), q =>
       transform(sequence(r0.cast("long"), r1.cast("long")), r => hexPack(q, r))))
-  }
-
-  /** [[polygonJoin]] on the hexagonal index: points map to their hex
-    * cell, polygons explode to their [[hexCover]], the pair meets on
-    * a plain equi-join over the packed cell id, and the exact ray
-    * cast refines — identical output to the quad-indexed join (the
-    * cell index is a lossless prefilter either way; q74 pins that
-    * with the same oracle as q68), identical scale shape (shuffle on
-    * the cell id, never cartesian; each point owns one cell so no
-    * post-join dedup). `size` plays the role zoom plays for the quad
-    * join: hexes comparable to typical polygon diameter keep both the
-    * cover explode and the per-cell fan-out small. */
-  def hexPolygonJoin(
-      points: DataFrame,
-      polygons: DataFrame,
-      size: Double,
-      pxCol: String = "px",
-      pyCol: String = "py",
-      verticesCol: String = "vertices"): DataFrame = {
-    val p = points.withColumn("_cell",
-      hexCellOfPoint(col(pxCol), col(pyCol), size))
-    // tight cover: [[hexCover]]'s axial parallelogram filtered to hexes
-    // that can hold an in-polygon point (center inside, or boundary
-    // within the hex circumradius `size` — lossless: every point of a
-    // hex is within `size` of its center). Drops both the ~2x bbox
-    // shear slack and the inside-bbox-but-outside-polygon cells, so
-    // the per-cell point fan-out below only pays for cells the polygon
-    // actually touches (round-6 optimization; HexSpec still proves
-    // join output == the index-ignorant cross join).
-    val g = polygons.withColumn("_cell",
-      explode(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.HexTightCoverExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(verticesCol)),
-          size))))
-    p.join(g, "_cell")
-      .where(pointInPolygon(col(pxCol), col(pyCol), col(verticesCol)))
-      .drop("_cell", verticesCol)
   }
 }

@@ -208,17 +208,4 @@ object TileTable {
     }
     kept.unpersist()
   }
-
-  /** Real `.mbtiles` interchange for the tile table (reference
-    * store/mbtiles.py round trip): export one archive (driver-streamed;
-    * use [[graft.sources.MBTiles.writeSharded]] for the distributed
-    * one-archive-per-partition form) / import a directory of archives. */
-  def toMbtiles(
-      tiles: DataFrame,
-      path: String,
-      metadata: Map[String, String] = Map.empty): Unit =
-    graft.sources.MBTiles.write(tiles, path, metadata)
-
-  def fromMbtiles(spark: SparkSession, path: String): DataFrame =
-    graft.sources.MBTiles.read(spark, path)
 }

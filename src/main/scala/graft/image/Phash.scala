@@ -226,10 +226,6 @@ object Phash {
     sig
   }
 
-  /** Decode-then-hash; the partition-batch column form lives in
-    * [[graft.multimodal.Multimodal.imagePhash]]. */
-  def phashOf(bytes: Array[Byte]): Long = phash64(ImageCodec.decode(bytes))
-
   /** Decode-then-wide-hash ([[phash256]]). */
   def phash256Of(bytes: Array[Byte]): Array[Long] = phash256(ImageCodec.decode(bytes))
 

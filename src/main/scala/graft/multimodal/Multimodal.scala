@@ -20,12 +20,6 @@ import graft.image.ImageCodec
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", StringType),
-    StructField("kind", StringType), // image | audio | video
-    StructField("bytes", BinaryType),
-    StructField("meta", MapType(StringType, StringType))))
-
   val imageMetaSchema: StructType = StructType(Seq(
     StructField("media_id", StringType),
     StructField("w", IntegerType),

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.CellIndex
+
 /** Hot-path kernels behind the round-6 optimization pass (guide §1.2
   * step 2, §4.1): the per-row work of the dedup/winnow/spatial/ANN
   * operators was dominated by interpreted higher-order-function lambdas
@@ -726,11 +728,6 @@ object SpatialKernels {
     boundaryDist2(cx, cy, vs) <= r * r
   }
 
-  private val HexC1 = 0.5773502691896258 // sqrt(3)/3
-  private val HexC2 = 0.3333333333333333
-  private val HexC3 = 0.6666666666666666
-  private val Sqrt3 = math.sqrt(3.0)
-
   /** Packed hex cell id of a point — the
     * [[graft.engine.Spatial.hexAxial]] fractional transform + cube
     * rounding + [[graft.engine.Spatial.hexPack]] in one call, with the
@@ -741,8 +738,8 @@ object SpatialKernels {
     * across the conditional branches) — the dominant per-point cost of
     * the hex join's probe side. */
   def hexCell(px: Double, py: Double, size: Double): Long = {
-    val qf = (HexC1 * px - HexC2 * py) / size
-    val rf = (HexC3 * py) / size
+    val qf = (CellIndex.C1 * px - CellIndex.C2 * py) / size
+    val rf = (CellIndex.C3 * py) / size
     val yf = -qf - rf
     val rx = math.floor(qf + 0.5).toLong
     val ry = math.floor(yf + 0.5).toLong
@@ -753,60 +750,19 @@ object SpatialKernels {
     val fixQ = dx > dy && dx > dz
     val q = if (fixQ) -ry - rz else rx
     val r = if (!fixQ && !(dy > dz)) -rx - ry else rz
-    (q + 1048576L) * 2097152L + (r + 1048576L)
+    CellIndex.hexPack(q, r)
   }
 
-  /** Tight hex cover: the bbox axial parallelogram of
-    * [[graft.engine.Spatial.hexCover]] (identical range arithmetic,
-    * same ±1 ring) filtered to cells that can actually hold an
-    * in-polygon point ([[cellMayIntersect]] at the hex circumradius).
-    * Strict subset of the parallelogram cover, still a lossless
-    * prefilter; drops the ~2x axial shear slack plus every
-    * inside-bbox-but-outside-polygon cell. */
-  def hexTightCover(vs: ArrayData, size: Double): ArrayData = {
-    var xMin = Double.MaxValue; var xMax = Double.MinValue
-    var yMin = Double.MaxValue; var yMax = Double.MinValue
-    val n = vs.numElements()
-    var i = 0
-    while (i < n) {
-      val v = vs.getStruct(i, 2)
-      val x = v.getDouble(0); val y = v.getDouble(1)
-      if (x < xMin) xMin = x
-      if (x > xMax) xMax = x
-      if (y < yMin) yMin = y
-      if (y > yMax) yMax = y
-      i += 1
-    }
-    val q0 = math.floor((HexC1 * xMin - HexC2 * yMax) / size).toLong - 1
-    val q1 = math.floor((HexC1 * xMax - HexC2 * yMin) / size).toLong + 1
-    val r0 = math.floor((HexC3 * yMin) / size).toLong - 1
-    val r1 = math.floor((HexC3 * yMax) / size).toLong + 1
-    val out = new java.util.ArrayList[Any]()
-    var q = q0
-    while (q <= q1) {
-      var r = r0
-      while (r <= r1) {
-        val cx = size * (Sqrt3 * q + Sqrt3 / 2.0 * r)
-        val cy = size * 1.5 * r
-        if (cellMayIntersect(cx, cy, size, vs))
-          out.add((q + 1048576L) * 2097152L + (r + 1048576L))
-        r += 1
-      }
-      q += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  /** Tight quad cover: the clamped bbox cell range of
-    * [[graft.engine.Spatial.polygonCells]] (identical clamp/floor
-    * arithmetic) filtered by [[cellMayIntersect]] at the cell's
-    * half-diagonal. Border cells of the grid are kept unconditionally:
-    * out-of-extent points clamp into them, so their effective region
-    * is unbounded and the distance filter does not apply. */
-  def quadTightCover(
-      vs: ArrayData, zoom: Int,
-      minX: Double, minY: Double, width: Double, height: Double): ArrayData = {
-    val n = 1L << zoom
+  /** Tight polygon cover on a cell index: the cells of the polygon
+    * bbox's [[CellIndex.range]] that can hold an in-polygon point —
+    * kept unconditionally ([[CellIndex.alwaysKept]]) or passing
+    * [[cellMayIntersect]] at the cell's circumradius — as packed ids,
+    * in range order (a outer, b inner). A subset of the bbox cover
+    * ([[graft.engine.Spatial.bboxCover]]) and still a lossless join
+    * prefilter: it drops the cells inside the bbox but away from the
+    * polygon, and on the hex grid the axial shear slack of the
+    * parallelogram range. */
+  def tightCover(vs: ArrayData, index: CellIndex): ArrayData = {
     var xMin = Double.MaxValue; var xMax = Double.MinValue
     var yMin = Double.MaxValue; var yMax = Double.MinValue
     val m = vs.numElements()
@@ -820,27 +776,19 @@ object SpatialKernels {
       if (y > yMax) yMax = y
       i += 1
     }
-    def clamp(c: Long): Long = math.max(0L, math.min(n - 1, c))
-    val x0 = clamp(math.floor((xMin - minX) / width * n).toLong)
-    val x1 = clamp(math.floor((xMax - minX) / width * n).toLong)
-    val y0 = clamp(math.floor((yMin - minY) / height * n).toLong)
-    val y1 = clamp(math.floor((yMax - minY) / height * n).toLong)
-    val cellW = width / n
-    val cellH = height / n
-    val halfDiag = 0.5 * math.sqrt(cellW * cellW + cellH * cellH)
+    val g = index.range(xMin, yMin, xMax, yMax)
+    val radius = index.radius
     val out = new java.util.ArrayList[Any]()
-    var cy = y0
-    while (cy <= y1) {
-      var cx = x0
-      while (cx <= x1) {
-        val border = cx == 0 || cx == n - 1 || cy == 0 || cy == n - 1
-        val ccx = minX + (cx + 0.5) * cellW
-        val ccy = minY + (cy + 0.5) * cellH
-        if (border || cellMayIntersect(ccx, ccy, halfDiag, vs))
-          out.add(cy * n + cx)
-        cx += 1
+    var a = g.a0
+    while (a <= g.a1) {
+      var b = g.b0
+      while (b <= g.b1) {
+        if (index.alwaysKept(a, b) ||
+            cellMayIntersect(index.centerX(a, b), index.centerY(a, b), radius, vs))
+          out.add(index.id(a, b))
+        b += 1
       }
-      cy += 1
+      a += 1
     }
     new GenericArrayData(out.toArray)
   }
@@ -908,32 +856,18 @@ case class HexCellExpr(left: Expression, right: Expression, size: Double)
       l: Expression, r: Expression): Expression = copy(l, r)
 }
 
-/** `hex_tight_cover(vertices, size)` — tight hex polygon cover. */
-case class HexTightCoverExpr(child: Expression, size: Double)
+/** `cell_cover(vertices)` — tight polygon cover on a cell index
+  * ([[SpatialKernels.tightCover]]). Codegen passes the index as a
+  * reference object, so one generated class serves every index. */
+case class CellCoverExpr(child: Expression, index: CellIndex)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(vs: Any): Any =
-    SpatialKernels.hexTightCover(vs.asInstanceOf[ArrayData], size)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, vs =>
-      s"graft.sql.SpatialKernels.hexTightCover($vs, $size)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `quad_tight_cover(vertices, ...)` — tight quad polygon cover. */
-case class QuadTightCoverExpr(
-    child: Expression, zoom: Int,
-    minX: Double, minY: Double, extentW: Double, extentH: Double)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(vs: Any): Any =
-    SpatialKernels.quadTightCover(
-      vs.asInstanceOf[ArrayData], zoom, minX, minY, extentW, extentH)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, vs =>
-      s"graft.sql.SpatialKernels.quadTightCover($vs, $zoom, ${minX}D, " +
-        s"${minY}D, ${extentW}D, ${extentH}D)")
+    SpatialKernels.tightCover(vs.asInstanceOf[ArrayData], index)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cellIndex", index, classOf[CellIndex].getName)
+    defineCodeGen(ctx, ev, vs => s"graft.sql.SpatialKernels.tightCover($vs, $ref)")
+  }
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

@@ -27,11 +27,6 @@ object TextOps {
       graft.sql.TokenCountExpr(
         org.apache.spark.sql.GraftColumnBridge.expression(text)))
 
-  /** A BPE-ish subword count: words plus punctuation runs count as
-    * separate tokens (approximates tokenizer inflation vs whitespace). */
-  def subwordCount(text: Column): Column =
-    size(regexp_extract_all(lower(text), lit("[a-z0-9]{1,4}|[^a-z0-9\\s]"), lit(0)))
-
   def charCount(text: Column): Column = length(text)
 
   /** Alphabetic-character ratio, floor-scaled e6 — the [a-z] count is a
@@ -44,15 +39,6 @@ object TextOps {
         graft.sql.AlphaCountExpr(
           org.apache.spark.sql.GraftColumnBridge.expression(text))) /
       greatest(length(text), lit(1))).cast("long")
-
-  /** Mean word length, floor-scaled e6 (0 for wordless text). */
-  def meanWordLenE6(text: Column): Column =
-    when(size(words(text)) === 0, 0L)
-      .otherwise(
-        floor(lit(1000000.0) *
-          aggregate(transform(words(text), w => length(w)), lit(0),
-            (acc, v) => acc + v) /
-          size(words(text))).cast("long"))
 
   private val stopwords: Seq[(String, String)] = Seq(
     "en" -> "\\b(the|and|of|to|in|is|a)\\b",

@@ -1,13 +1,17 @@
 package graft.tools
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftColumnBridge.{column => c, expression => e}
 
-/** Candidate-volume evidence for the round-6 tight polygon covers:
-  * counts (cells in cover) and (point, polygon) join candidates under
-  * the bbox cover vs the tight cover, on the q68/q74 spatial scene at
-  * n points, plus the exact in-polygon hit count (the occupancy
-  * floor no lossless prefilter can beat). Appends nothing; prints. */
+import graft.core.CellIndex
+import graft.engine.Spatial
+
+/** Candidate-volume evidence for the tight polygon covers: for each
+  * cell index of q68 (quad zoom 4) and q74 (hex size 62.5), counts
+  * (cells in cover) and (point, polygon) join candidates under the bbox
+  * cover vs the tight cover, on their spatial scene at n points, plus
+  * the exact in-polygon hit count (the occupancy floor no lossless
+  * prefilter can beat). Appends nothing; prints. */
 object CoverProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 600000L
@@ -28,31 +32,23 @@ object CoverProbe {
       (pmod(col("id") * 7919L, lit(1000L)) + 0.5).cast("double").as("px"),
       (pmod(col("id") * 104729L, lit(1000L)) + 0.5).cast("double").as("py"))
 
-    def stats(label: String, cover: org.apache.spark.sql.Column,
-        cell: org.apache.spark.sql.Column): Unit = {
+    def stats(label: String, cover: Column, cell: Column): Unit = {
       val g = polys.withColumn("_cell", explode(cover))
       val cells = g.count()
       val p = pts.withColumn("_cell", cell)
       val cands = p.join(g, "_cell").count()
       val hits = p.join(g, "_cell")
-        .where(graft.engine.Spatial.pointInPolygon(col("px"), col("py"), col("vertices")))
+        .where(Spatial.pointInPolygon(col("px"), col("py"), col("vertices")))
         .count()
-      println(f"[coverprobe] $label%-14s cells=$cells%5d candidates=$cands%9d hits=$hits%9d slack=${cands.toDouble / math.max(hits, 1)}%.2fx")
+      println(f"[coverprobe] $label%-24s cells=$cells%5d candidates=$cands%9d hits=$hits%9d slack=${cands.toDouble / math.max(hits, 1)}%.2fx")
     }
 
-    println(s"[coverprobe] n=$n points, hex size=62.5 / quad zoom=4 over 1000x1000")
-    stats("hex-bbox",
-      graft.engine.Spatial.hexCover(col("vertices"), 62.5),
-      graft.engine.Spatial.hexCellOfPoint(col("px"), col("py"), 62.5))
-    stats("hex-tight",
-      c(graft.sql.HexTightCoverExpr(e(col("vertices")), 62.5)),
-      graft.engine.Spatial.hexCellOfPoint(col("px"), col("py"), 62.5))
-    stats("quad-bbox",
-      graft.engine.Spatial.polygonCells(col("vertices"), 4, 0, 0, 1000, 1000),
-      graft.engine.Spatial.cellOfPoint(col("px"), col("py"), 4, 0, 0, 1000, 1000))
-    stats("quad-tight",
-      c(graft.sql.QuadTightCoverExpr(e(col("vertices")), 4, 0, 0, 1000, 1000)),
-      graft.engine.Spatial.cellOfPoint(col("px"), col("py"), 4, 0, 0, 1000, 1000))
+    println(s"[coverprobe] n=$n points over 1000x1000")
+    for (index <- Seq(CellIndex.Quad(4, 0, 0, 1000, 1000), CellIndex.Hex(62.5))) {
+      val cell = Spatial.cellOf(col("px"), col("py"), index)
+      stats(s"$index bbox", Spatial.bboxCover(col("vertices"), index), cell)
+      stats(s"$index tight", Spatial.tightCover(col("vertices"), index), cell)
+    }
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CellIndex
 import graft.engine.Spatial
 
 /** Scale-ladder evidence for the hexagonal cell index
@@ -52,7 +53,7 @@ object HexScale {
 
     // warmup (codegen + HOF eval caches), unrecorded
     SpatialScale.points(spark, 10000L)
-      .select(Spatial.hexCellOfPoint(col("px"), col("py"), 10.0).as("c"))
+      .select(Spatial.cellOf(col("px"), col("py"), CellIndex.Hex(10.0)).as("c"))
       .groupBy("c").count().count()
 
     for (mult <- mults) {
@@ -63,18 +64,20 @@ object HexScale {
       // quad zoom matched to the hex cell count: 4^z ≈ extent/(2.598 s²)
       val zoom = math.max(2, math.min(12, math.round(
         math.log(1000.0 / math.sqrt(2.598 * size * size)) / math.log(2)).toInt))
+      val hex = CellIndex.Hex(size)
+      val quad = CellIndex.Quad(zoom, 0, 0, 1000, 1000)
       val pts = SpatialScale.points(spark, n)
       val load = ToolUtil.loadavg()
 
       val t0 = System.nanoTime()
       val hexCells = pts
-        .select(Spatial.hexCellOfPoint(col("px"), col("py"), size).as("c"))
+        .select(Spatial.cellOf(col("px"), col("py"), hex).as("c"))
         .groupBy("c").count().count()
       val hexSecs = (System.nanoTime() - t0) / 1e9
 
       val t1 = System.nanoTime()
       val quadCells = pts
-        .select(Spatial.cellOfPoint(col("px"), col("py"), zoom, 0, 0, 1000, 1000).as("c"))
+        .select(Spatial.cellOf(col("px"), col("py"), quad).as("c"))
         .groupBy("c").count().count()
       val quadSecs = (System.nanoTime() - t1) / 1e9
 
@@ -89,10 +92,10 @@ object HexScale {
       // corpus side: the n background points + the m planted partners
       val corpus = pts.select(col("pid"), col("px"), col("py"))
         .unionByName(anchors.select((col("id") + n).as("pid"), col("bx").as("px"), col("by").as("py")))
-        .withColumn("_cell", Spatial.hexCellOfPoint(col("px"), col("py"), size))
+        .withColumn("_cell", Spatial.cellOf(col("px"), col("py"), hex))
       val queries = anchors.select(col("id"),
         explode(Spatial.hexDisk(
-          Spatial.hexCellOfPoint(col("ax"), col("ay"), size), 2)).as("_cell"))
+          Spatial.cellOf(col("ax"), col("ay"), hex), 2)).as("_cell"))
 
       val t2 = System.nanoTime()
       val joined = queries.join(corpus, "_cell").cache()

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.core.CellIndex
 import graft.engine.Spatial
 
 /** Scale-ladder evidence for vector→raster tile assignment
@@ -74,7 +75,7 @@ object RasterizeScale {
         .join(
           SpatialScale.polygons(spark, m, r)._2.select(
             col("pid").as("polygon_id"),
-            Spatial.cellOfPoint(col("px"), col("py"), zoom, 0, 0, 1000, 1000).as("_c")),
+            Spatial.cellOf(col("px"), col("py"), CellIndex.Quad(zoom, 0, 0, 1000, 1000)).as("_c")),
           Seq("polygon_id"))
         .where(col("cy") * n + col("cx") === col("_c"))
         .count()

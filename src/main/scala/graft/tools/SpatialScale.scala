@@ -3,13 +3,15 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CellIndex
 import graft.engine.Spatial
 
 /** Scale-ladder evidence for the point-in-polygon join
-  * (engine/Spatial.polygonJoin): runs the q68-shaped job at 1x / 10x /
-  * (optionally) 100x points over the SAME deterministic generator and
-  * records wall time, candidate volume (the cell equi-join's output
-  * BEFORE the exact refine), matched pairs, and planted recall.
+  * (engine/Spatial.join on the quad index): runs the q68-shaped job
+  * at 1x / 10x / (optionally) 100x points over the SAME deterministic
+  * generator and records wall time, candidate volume (the cell
+  * equi-join's output BEFORE the exact refine), matched pairs, and
+  * planted recall.
   *
   * The sizing law this measures: candidate volume for a cell-indexed
   * spatial join is
@@ -73,7 +75,7 @@ object SpatialScale {
     // warmup (codegen + HOF eval caches), unrecorded
     {
       val (polys, _) = polygons(spark, 100L, 10.0)
-      Spatial.polygonJoin(points(spark, 10000L), polys, 5, 0, 0, 1000, 1000).count()
+      Spatial.join(points(spark, 10000L), polys, CellIndex.Quad(5, 0, 0, 1000, 1000)).count()
     }
 
     for (mult <- mults) {
@@ -81,6 +83,7 @@ object SpatialScale {
       val m = math.max(100L, n / 1000L)
       val r = math.sqrt(50000.0 / (math.Pi * m))
       val zoom = math.max(2, math.min(12, math.round(math.log(1000.0 / (2 * r)) / math.log(2)).toInt))
+      val index = CellIndex.Quad(zoom, 0, 0, 1000, 1000)
       val (polys, planted) = polygons(spark, m, r)
       val pts = points(spark, n)
         .unionByName(planted.select((col("pid") + n).as("pid"), col("px"), col("py")))
@@ -88,7 +91,7 @@ object SpatialScale {
       spark.sharedState.cacheManager.clearCache()
       val load = ToolUtil.loadavg()
       val t0 = System.nanoTime()
-      val joined = Spatial.polygonJoin(pts, polys, zoom, 0, 0, 1000, 1000).cache()
+      val joined = Spatial.join(pts, polys, index).cache()
       val matches = joined.count()
       val secs = (System.nanoTime() - t0) / 1e9
 
@@ -96,9 +99,8 @@ object SpatialScale {
       val plantedHits = joined
         .where(col("pid") >= n && col("polygon_id") === col("pid") - n).count()
       joined.unpersist()
-      val p = pts.withColumn("_cell", Spatial.cellOfPoint(col("px"), col("py"), zoom, 0, 0, 1000, 1000))
-      val g = polys.withColumn("_cell",
-        explode(Spatial.polygonCells(col("vertices"), zoom, 0, 0, 1000, 1000)))
+      val p = pts.withColumn("_cell", Spatial.cellOf(col("px"), col("py"), index))
+      val g = polys.withColumn("_cell", explode(Spatial.bboxCover(col("vertices"), index)))
       val candidates = p.join(g, "_cell").count()
 
       rungs += Rung(n, m, zoom, secs, candidates, matches, plantedHits, load)
@@ -107,7 +109,7 @@ object SpatialScale {
 
     val sb = new StringBuilder
     sb.append("# SPATIAL_SCALE — point-in-polygon join ladder (tools/SpatialScale)\n\n")
-    sb.append("q68-shaped cell-indexed spatial join (engine/Spatial.polygonJoin) at\n")
+    sb.append("q68-shaped cell-indexed spatial join (engine/Spatial.join, quad index) at\n")
     sb.append("1x/10x/100x points, m = n/1000 polygons, total polygon area pinned at\n")
     sb.append("~5% of the extent (the real-world shape: more polygons partition the\n")
     sb.append("same map). Single cold run per rung after one warmup; the timed window\n")

@@ -246,6 +246,35 @@ class OpsSpec extends SparkTestBase {
     Filters.checkMaxErrors(Map("errors" -> 9L), 10)
   }
 
+  test("dropErrors keeps exactly the rows without an error (reference filter/error.py)") {
+    val s = spark
+    import s.implicits._
+    val tiles = Seq((1L, null: String), (2L, "decode failed"), (3L, null), (4L, "timeout"))
+      .toDF("id", "error")
+    assert(Filters.dropErrors(tiles).orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, null), (3L, null)))
+  }
+
+  test("contentTypeAdder sniffs unset types or forces one (reference filter/contenttype.py)") {
+    val s = spark
+    import s.implicits._
+    val png = ImageCodec.PngMagic ++ Array[Byte](1, 2)
+    val tiles = Seq(
+      (1, png, null: String, null: String),
+      (2, ImageCodec.JpegMagic ++ Array[Byte](3), null: String, null: String),
+      (3, "{\"a\": 1}".getBytes("UTF-8"), null: String, null: String),
+      (4, Array[Byte](0, 1, 2), null: String, null: String), // unknown magic
+      (5, png, "image/webp", null: String), // already typed: kept
+      (6, png, null: String, "gzip")) // encoded bytes are not sniffed
+      .toDF("id", "data", "content_type", "content_encoding")
+    def types(df: org.apache.spark.sql.DataFrame): Seq[Option[String]] =
+      df.orderBy("id").select("content_type").as[Option[String]].collect().toSeq
+    assert(types(Filters.contentTypeAdder()(tiles)) == Seq(
+      Some("image/png"), Some("image/jpeg"), Some("application/json"), None,
+      Some("image/webp"), None))
+    assert(types(Filters.contentTypeAdder(Some("image/png"))(tiles)) == Seq.fill(6)(Some("image/png")))
+  }
+
   test("per-partition consecutive-error breaker trips at n, resets on success") {
     val s = spark
     import s.implicits._

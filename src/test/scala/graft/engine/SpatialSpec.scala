@@ -7,12 +7,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
+import graft.core.CellIndex
 
 /** Point-in-polygon: the HOF ray-cast column vs the JDK's own even-odd
   * winding test (java.awt.geom.Path2D — an independent, widely-used
   * implementation), on goldens (incl. concave + per-row polygons) and
   * on 2,000 random polygon/point draws; plus the cell-prefilter join's
-  * equivalence to the naive cross-join on a planted scene. */
+  * equivalence to the naive cross-join on a planted scene, on the quad
+  * and hex indexes. */
 class SpatialSpec extends SparkTestBase {
 
   private val vertexType = ArrayType(StructType(Seq(
@@ -79,7 +81,7 @@ class SpatialSpec extends SparkTestBase {
     assert(disagreements == 0, s"$disagreements/2000 disagree with Path2D")
   }
 
-  test("cell-prefilter polygonJoin equals the naive cross join, zoom-invariant") {
+  test("join equals the naive cross join on every cell index") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)
@@ -93,32 +95,34 @@ class SpatialSpec extends SparkTestBase {
     val polyDf = spark.createDataFrame(
       spark.sparkContext.parallelize(polyRows, 1),
       StructType(Seq(StructField("polygon_id", LongType), StructField("vertices", vertexType))))
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("pid", "polygon_id").as[(Long, Long)].collect().toSet
 
-    val naive = points.crossJoin(polyDf)
-      .where(Spatial.pointInPolygon(col("px"), col("py"), col("vertices")))
-      .select("pid", "polygon_id").as[(Long, Long)].collect().toSet
+    val naive = pairs(points.crossJoin(polyDf)
+      .where(Spatial.pointInPolygon(col("px"), col("py"), col("vertices"))))
     assert(naive.nonEmpty && naive.size < 500 * 3, "scene is non-trivial")
 
-    for (zoom <- Seq(2, 4, 6)) {
-      val joined = Spatial.polygonJoin(points, polyDf, zoom, 0, 0, 100, 100)
-        .select("pid", "polygon_id").as[(Long, Long)].collect().toSet
-      assert(joined == naive, s"zoom=$zoom cell prefilter is lossless")
-    }
-
-    // points in the L's notch must be excluded even though the notch
-    // is inside the bbox cover
+    // the cover is a lossless prefilter at coarse and fine resolutions
+    // alike, including cells whose boundaries cut through the polygons
     val notch = Seq((1000L, 30.0, 60.0)).toDF("pid", "px", "py")
-    assert(Spatial.polygonJoin(notch, polyDf, 4, 0, 0, 100, 100)
-      .where(col("polygon_id") === 2).count() == 0)
-
-    // plan shape: an equi-join (hash/sort-merge/broadcast-HASH on the
-    // cell key), NEVER a cartesian / nested-loop — the property that
-    // keeps 10^12 x 10^6 feasible
-    val plan = Spatial.polygonJoin(points, polyDf, 4, 0, 0, 100, 100)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
-      s"cartesian-free plan, got:\n$plan")
-    assert(plan.contains("_cell"), "join keyed on the cell id")
+    val indexes = Seq(2, 4, 6).map(CellIndex.Quad(_, 0, 0, 100, 100)) ++
+      Seq(3.0, 7.5, 25.0).map(CellIndex.Hex(_))
+    for (index <- indexes) {
+      assert(pairs(Spatial.join(points, polyDf, index)) == naive, s"$index prefilter is lossless")
+      // points in the L's notch are excluded although the notch is
+      // inside the bbox cover
+      assert(Spatial.join(notch, polyDf, index).where(col("polygon_id") === 2).count() == 0,
+        s"$index notch excluded")
+      // plan shape: an equi-join (hash/sort-merge/broadcast-HASH on the
+      // cell key), NEVER a cartesian / nested-loop — the property that
+      // keeps 10^12 x 10^6 feasible
+      val plan = Spatial.join(points, polyDf, index).queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
+        s"$index cartesian-free plan, got:\n$plan")
+      assert(plan.contains("_cell"), s"$index join keyed on the cell id")
+    }
+    assert(pairs(Spatial.polygonJoin(points, polyDf, 4, 0, 0, 100, 100)) == naive)
+    assert(pairs(Spatial.hexPolygonJoin(points, polyDf, 7.5)) == naive)
   }
 
   test("rasterize equals brute-force center sampling, join-free plan") {
@@ -207,48 +211,6 @@ class SpatialSpec extends SparkTestBase {
       .where(col("uq") =!= col("q") || col("ur") =!= col("r") ||
         col("cq") =!= col("q") || col("cr") =!= col("r"))
     assert(bad.count() == 0, "pack/unpack bijection + center round-trip")
-  }
-
-  test("hexPolygonJoin equals the naive cross join, size-invariant") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(7)
-    val points = (0 until 500).map(i => (i.toLong, rnd.nextDouble() * 100, rnd.nextDouble() * 100))
-      .toDF("pid", "px", "py")
-    val polys = Seq(
-      (1L, Seq((10.0, 10.0), (40.0, 8.0), (50.0, 30.0), (30.0, 45.0), (8.0, 30.0))),
-      (2L, concaveL.map { case (x, y) => (x * 8, y * 8) }),
-      (3L, Seq((60.0, 60.0), (90.0, 60.0), (75.0, 90.0))))
-    val polyRows = polys.map { case (id, vs) => Row(id, vs.map { case (x, y) => Row(x, y) }) }
-    val polyDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(polyRows, 1),
-      StructType(Seq(StructField("polygon_id", LongType), StructField("vertices", vertexType))))
-
-    val naive = points.crossJoin(polyDf)
-      .where(Spatial.pointInPolygon(col("px"), col("py"), col("vertices")))
-      .select("pid", "polygon_id").as[(Long, Long)].collect().toSet
-    assert(naive.nonEmpty, "scene is non-trivial")
-
-    // size-invariant: the hex cover is a lossless prefilter at coarse
-    // and fine resolutions alike (incl. sizes that put cell boundaries
-    // through the polygons' interiors)
-    for (size <- Seq(3.0, 7.5, 25.0)) {
-      val joined = Spatial.hexPolygonJoin(points, polyDf, size)
-        .select("pid", "polygon_id").as[(Long, Long)].collect().toSet
-      assert(joined == naive, s"size=$size hex prefilter is lossless")
-    }
-
-    // the L's notch stays excluded (inside the bbox cover)
-    val notch = Seq((1000L, 30.0, 60.0)).toDF("pid", "px", "py")
-    assert(Spatial.hexPolygonJoin(notch, polyDf, 7.5)
-      .where(col("polygon_id") === 2).count() == 0)
-
-    // plan shape: equi-join on the hex id, never cartesian
-    val plan = Spatial.hexPolygonJoin(points, polyDf, 7.5)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
-      s"cartesian-free plan, got:\n$plan")
-    assert(plan.contains("_cell"), "join keyed on the hex cell id")
   }
 
   test("hex disk: size 1+3k(k+1), symmetric membership, kNN pigeonhole") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.CellIndex
 
 /** Bit-parity pins for the round-6 codegen kernels: each kernel must
   * compute EXACTLY the value of the declarative (HOF / md5-hex)
@@ -260,35 +261,24 @@ class KernelParitySpec extends SparkTestBase {
       (i.toLong, rnd.nextDouble() * 1000, rnd.nextDouble() * 1000))
       .toDF("k", "px", "py")
 
-    // subset property (tight ⊆ bbox cover), hex and quad
-    val hexSub = pdf.select(
-      c(HexTightCoverExpr(e(col("vertices")), 62.5)).as("t"),
-      graft.engine.Spatial.hexCover(col("vertices"), 62.5).as("f"))
-      .as[(Seq[Long], Seq[Long])].collect()
-    hexSub.foreach { case (t, f) =>
-      assert(t.toSet.subsetOf(f.toSet), "hex tight ⊆ bbox cover")
-      assert(t.nonEmpty)
-    }
-    val quadSub = pdf.select(
-      c(QuadTightCoverExpr(e(col("vertices")), 4, 0, 0, 1000, 1000)).as("t"),
-      graft.engine.Spatial.polygonCells(col("vertices"), 4, 0, 0, 1000, 1000).as("f"))
-      .as[(Seq[Long], Seq[Long])].collect()
-    quadSub.foreach { case (t, f) =>
-      assert(t.toSet.subsetOf(f.toSet), "quad tight ⊆ bbox cover")
-      assert(t.nonEmpty)
-    }
-
-    // lossless property: joins over the tight covers == naive cross join
-    def naive = pts.crossJoin(pdf)
+    val naive = pts.crossJoin(pdf)
       .where(graft.engine.Spatial.pointInPolygon(col("px"), col("py"), col("vertices")))
       .select("k", "polygon_id").as[(Long, Long)].collect().toSet
-    val hexGot = graft.engine.Spatial.hexPolygonJoin(pts, pdf, 62.5)
-      .select("k", "polygon_id").as[(Long, Long)].collect().toSet
-    val quadGot = graft.engine.Spatial.polygonJoin(pts, pdf, 4, 0, 0, 1000, 1000)
-      .select("k", "polygon_id").as[(Long, Long)].collect().toSet
-    val want = naive
-    assert(hexGot == want, "hex tight-cover join == naive cross join")
-    assert(quadGot == want, "quad tight-cover join == naive cross join")
+    for (index <- Seq(CellIndex.Quad(4, 0, 0, 1000, 1000), CellIndex.Hex(62.5))) {
+      // subset property: tight ⊆ bbox cover
+      pdf.select(
+        graft.engine.Spatial.tightCover(col("vertices"), index).as("t"),
+        graft.engine.Spatial.bboxCover(col("vertices"), index).as("f"))
+        .as[(Seq[Long], Seq[Long])].collect()
+        .foreach { case (t, f) =>
+          assert(t.toSet.subsetOf(f.toSet), s"$index tight ⊆ bbox cover")
+          assert(t.nonEmpty)
+        }
+      // lossless property: the join over the tight cover == naive cross join
+      val got = graft.engine.Spatial.join(pts, pdf, index)
+        .select("k", "polygon_id").as[(Long, Long)].collect().toSet
+      assert(got == naive, s"$index tight-cover join == naive cross join")
+    }
   }
 
   test("BpeEncodeExpr == spaced replace-chain encoder") {
