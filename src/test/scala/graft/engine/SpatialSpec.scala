@@ -81,7 +81,9 @@ class SpatialSpec extends SparkTestBase {
     assert(disagreements == 0, s"$disagreements/2000 disagree with Path2D")
   }
 
-  test("join equals the naive cross join on every cell index") {
+  /** The planted scene: 500 random points, three polygons (one a big
+    * concave L), and the naive cross-join's (pid, polygon_id) pairs. */
+  private def joinScene(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Set[(Long, Long)]) = {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)
@@ -95,33 +97,50 @@ class SpatialSpec extends SparkTestBase {
     val polyDf = spark.createDataFrame(
       spark.sparkContext.parallelize(polyRows, 1),
       StructType(Seq(StructField("polygon_id", LongType), StructField("vertices", vertexType))))
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select("pid", "polygon_id").as[(Long, Long)].collect().toSet
-
     val naive = pairs(points.crossJoin(polyDf)
       .where(Spatial.pointInPolygon(col("px"), col("py"), col("vertices"))))
     assert(naive.nonEmpty && naive.size < 500 * 3, "scene is non-trivial")
+    (points, polyDf, naive)
+  }
 
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+    val s = spark
+    import s.implicits._
+    df.select("pid", "polygon_id").as[(Long, Long)].collect().toSet
+  }
+
+  /** Spatial.join on `index` returns exactly the naive pairs, drops a
+    * point in the L's notch, and plans as an equi-join on the cell id. */
+  private def assertJoinMatchesNaive(index: CellIndex): Unit = {
+    val s = spark
+    import s.implicits._
+    val (points, polyDf, naive) = joinScene()
+    assert(pairs(Spatial.join(points, polyDf, index)) == naive, s"$index prefilter is lossless")
+    // points in the L's notch are excluded although the notch is
+    // inside the bbox cover
+    val notch = Seq((1000L, 30.0, 60.0)).toDF("pid", "px", "py")
+    assert(Spatial.join(notch, polyDf, index).where(col("polygon_id") === 2).count() == 0,
+      s"$index notch excluded")
+    // plan shape: an equi-join (hash/sort-merge/broadcast-HASH on the
+    // cell key), NEVER a cartesian / nested-loop — the property that
+    // keeps 10^12 x 10^6 feasible
+    val plan = Spatial.join(points, polyDf, index).queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
+      s"$index cartesian-free plan, got:\n$plan")
+    assert(plan.contains("_cell"), s"$index join keyed on the cell id")
+  }
+
+  test("cell-prefilter polygonJoin equals the naive cross join, zoom-invariant") {
     // the cover is a lossless prefilter at coarse and fine resolutions
     // alike, including cells whose boundaries cut through the polygons
-    val notch = Seq((1000L, 30.0, 60.0)).toDF("pid", "px", "py")
-    val indexes = Seq(2, 4, 6).map(CellIndex.Quad(_, 0, 0, 100, 100)) ++
-      Seq(3.0, 7.5, 25.0).map(CellIndex.Hex(_))
-    for (index <- indexes) {
-      assert(pairs(Spatial.join(points, polyDf, index)) == naive, s"$index prefilter is lossless")
-      // points in the L's notch are excluded although the notch is
-      // inside the bbox cover
-      assert(Spatial.join(notch, polyDf, index).where(col("polygon_id") === 2).count() == 0,
-        s"$index notch excluded")
-      // plan shape: an equi-join (hash/sort-merge/broadcast-HASH on the
-      // cell key), NEVER a cartesian / nested-loop — the property that
-      // keeps 10^12 x 10^6 feasible
-      val plan = Spatial.join(points, polyDf, index).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
-        s"$index cartesian-free plan, got:\n$plan")
-      assert(plan.contains("_cell"), s"$index join keyed on the cell id")
-    }
+    Seq(2, 4, 6).foreach(z => assertJoinMatchesNaive(CellIndex.Quad(z, 0, 0, 100, 100)))
+    val (points, polyDf, naive) = joinScene()
     assert(pairs(Spatial.polygonJoin(points, polyDf, 4, 0, 0, 100, 100)) == naive)
+  }
+
+  test("hexPolygonJoin equals the naive cross join, size-invariant") {
+    Seq(3.0, 7.5, 25.0).foreach(size => assertJoinMatchesNaive(CellIndex.Hex(size)))
+    val (points, polyDf, naive) = joinScene()
     assert(pairs(Spatial.hexPolygonJoin(points, polyDf, 7.5)) == naive)
   }
 
