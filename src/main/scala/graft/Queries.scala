@@ -2204,9 +2204,9 @@ $spatialSceneSql
     // generate_series is not available — the q31 lesson) compute the
     // identical single min. Verifies gram hashing, the window-min
     // selection, the tie rule, and the pos/fp unpack in one hash.
-    // md5 keys are the ORACLE-portable choice; production sweeps use
-    // winnowFingerprints(fast = true) — codegen'd xxhash64 grams,
-    // 1.4x end-to-end (tools/WinnowTime), same selection semantics.
+    // md5 keys are the ORACLE-portable choice (DuckDB has no
+    // xxhash64); winnowFingerprints computes them in one fused kernel
+    // (WinnowFpExpr), the same path winnowPairs runs.
     ("q73_winnow_fp",
       (s: SparkSession, dir: String) => {
         // explode_OUTER, then drop the null rows: a plain explode lets

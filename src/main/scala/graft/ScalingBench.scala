@@ -53,7 +53,7 @@ object ScalingBench {
   /** Best-of-`iters` cold wall of the coordinate pipeline over
     * `rows * 10` synthetic phash rows — the ONE timing loop both the
     * solo leg and the `coord` re-measure mode run, so the measurement
-    * protocol (warm-up, per-iteration debug print, best-of tracking)
+    * protocol (warm-up, best-of tracking)
     * cannot drift between them. */
   private def timeCoordLeg(spark: SparkSession, rows: Long, iters: Int): Double = {
     // full 64-bit hashes: px/py derive from bit ranges 0-29 and 30-59
@@ -63,13 +63,10 @@ object ScalingBench {
       .select(xxhash64(col("id")).as("phash"))
     coordinateDF(coordInput).count() // warm-up
     var best = Double.MaxValue
-    for (i <- 0 until iters) {
+    for (_ <- 0 until iters) {
       val t0 = System.nanoTime()
       coordinateDF(coordInput).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("GRAFT_SCALE_DEBUG"))
-        println(f"[scale] coord iter $i: $secs%.2fs")
-      best = math.min(best, secs)
+      best = math.min(best, (System.nanoTime() - t0) / 1e9)
     }
     best
   }
@@ -105,8 +102,6 @@ object ScalingBench {
       iters: Int = sys.env.getOrElse("GRAFT_SCALE_ITERS", "5").toInt): RunResult = {
     val spark = Bench.mkSession(cpus)
     try {
-      sys.env.get("GRAFT_SCALE_AQE")
-        .foreach(v => spark.conf.set("spark.sql.adaptive.enabled", v))
       // Coordinate-pipeline timing FIRST, in a pristine JVM — the
       // decomposition that shows which part of the job scales with
       // cores and which is bandwidth-bound on one box. Runs at 10x the
@@ -131,13 +126,10 @@ object ScalingBench {
       parityHash(flagshipDF(spark, corpus, Some(corpusRows))) // warm-up, untimed
       var best = Double.MaxValue
       var parity = 0L
-      for (i <- 0 until iters) {
+      for (_ <- 0 until iters) {
         val t0 = System.nanoTime()
         parity = parityHash(flagshipDF(spark, corpus, Some(corpusRows)))
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (sys.env.contains("GRAFT_SCALE_DEBUG"))
-          println(f"[scale] iter $i: $secs%.2fs")
-        best = math.min(best, secs)
+        best = math.min(best, (System.nanoTime() - t0) / 1e9)
       }
       val tiles = flagshipDF(spark, corpus, Some(corpusRows)).count()
       RunResult(cpus, best, tiles, parity, corpusRows * Zooms.size / best, coordBest)
@@ -299,76 +291,10 @@ object ScalingBench {
       } else ""
     Files.writeString(
       mdPath,
-      md + copySection() + "\n" +
+      md + "\n" +
         (if (addenda.nonEmpty) addenda else AddendaMarker + "\n"))
   }
 
   private val AddendaMarker =
     "<!-- MANUAL ADDENDA — everything below survives `combine` rewrites -->"
-
-  /** Copy-pipeline ladder section, built from the JSON legs
-    * tools/copy_ladder.sh leaves in BENCH/ (empty if absent). The full
-    * legs include writing ~9.9 GB of parquet through this box's single
-    * shared virtio disk; the nosink legs swap the sink for the `noop`
-    * datasource — identical plan through sink-boundary serialization,
-    * zero disk I/O — and are the engine-compute component that
-    * transfers to a real cluster (one shard per executor to
-    * distributed storage: aggregate sink bandwidth scales with nodes).
-    * tools/WriteProfile isolates the sink itself: identical 9.9 GB
-    * writes swing 8 -> 52 s run-to-run on both disk AND tmpfs targets,
-    * with best-case ~8 s regardless of write strategy and exactly one
-    * sort in every write plan (QueryExecutionListener check) — the
-    * sink floor is shared-host ambient, not engine code. */
-  private def copySection(): String = {
-    def leg(path: String): Option[(Int, Double)] = {
-      val p = Paths.get(path)
-      if (!Files.exists(p)) None
-      else {
-        val c = """"cpus":(\d+)""".r
-          .findFirstMatchIn(Files.readString(p)).map(_.group(1).toInt)
-        c.zip(graft.tools.ToolUtil.readLegSecs(path))
-      }
-    }
-    (leg("BENCH/copy_leg_n4.json"), leg("BENCH/copy_leg_n16.json"),
-      leg("BENCH/copy_nosink_n4.json"), leg("BENCH/copy_nosink_n16.json")) match {
-      case (Some((cN, tN)), Some((c4, t4)), Some((_, ntN)), Some((_, nt4))) =>
-        val fullEff = tN / (4.0 * t4)
-        val computeEff = ntN / (4.0 * nt4)
-        s"""
-           |## Copy pipeline N -> 4N (tools/copy_ladder.sh)
-           |
-           |`Pipeline.copyJob` end-to-end (region winners -> resume
-           |anti-join -> byte attach -> format convert -> sink),
-           |800k-image corpus, zooms 4..10, 897k tiles / ~9.9 GB parquet
-           |written. Kill/resume protocol + per-pass metrics:
-           |BENCH/COPYJOB.md.
-           |
-           || leg | @ N=$cN | @ 4N=$c4 | efficiency |
-           ||---|---|---|---|
-           || compute only, noop sink (no disk I/O) | ${f"$ntN%.2f"} s | ${f"$nt4%.2f"} s | ${f"$computeEff%.3f"} |
-           || full job incl. 9.9 GB single-disk sink write | ${f"$tN%.2f"} s | ${f"$t4%.2f"} s | ${f"$fullEff%.3f"} |
-           |
-           |Attribution (history: phase deltas from tools/CopyProfile, a
-           |tool since deleted, + cross-checks):
-           |the noop-sink job is dominated by the byte stream (10 GB
-           |bucketed scan -> hash probe -> image re-encode), which is
-           |DRAM-bandwidth-bound on one box — the SAME ceiling the
-           |isolated zero-engine-ops payload scan shows (0.68,
-           |tools/PayloadScale) — while its coordinate fraction (every
-           |engine shuffle/join/agg) scales at 0.973 (table above). The
-           |full-job gap on top of that is the physical sink:
-           |tools/WriteProfile shows the identical 9.9 GB write swinging
-           |8-52 s run-to-run (shared host) with a ~8 s best case on
-           |BOTH the virtio disk and tmpfs, independent of write
-           |strategy, and the write plan always carries exactly ONE sort
-           |(no writer re-sort; verified via QueryExecutionListener). On
-           |a real cluster every executor has its own memory channels
-           |and writes its own z-partition shard to distributed storage,
-           |so both byte-stream and sink bandwidth scale with node count
-           |— the coordinate row is the engine-coordination number, and
-           |it meets the bar.
-           |""".stripMargin
-      case _ => ""
-    }
-  }
 }

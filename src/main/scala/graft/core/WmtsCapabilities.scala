@@ -149,24 +149,4 @@ object WmtsCapabilities {
     sb ++= "</Capabilities>\n"
     sb.result()
   }
-
-  /** Convenience: the capabilities for a [[FreeTileGrid]] — the grid
-    * already carries resolutions/extent/tile size, the natural source
-    * when the engine generated the tiles being served. */
-  def forFreeGrid(
-      name: String,
-      srs: String,
-      units: String,
-      grid: FreeTileGrid,
-      layers: Seq[LayerDef],
-      wmtsGettile: String,
-      yoriginTop: Boolean = true): String =
-    render(
-      layers,
-      TileMatrixSetDef(
-        name, srs, units, grid.resolutions,
-        (grid.maxExtent.minX, grid.maxExtent.minY,
-          grid.maxExtent.maxX, grid.maxExtent.maxY),
-        grid.tileSize.toInt, yoriginTop),
-      wmtsGettile)
 }

@@ -476,9 +476,7 @@ object Dedup {
       .cache()
     var cachedHandle = labels // exact cached plan, for unpersist
     var changed = 1L
-    var rounds = 0
     while (changed > 0) {
-      rounds += 1
       val propagated = edges
         .join(labels.withColumnRenamed("id", "b").withColumnRenamed("label", "nl"), Seq("b"))
         .groupBy(col("a").as("id"))
@@ -500,7 +498,6 @@ object Dedup {
     }
     edges.unpersist()
     undirected.unpersist()
-    if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"[cc] rounds=$rounds")
     // materialize the converged labels OFF the loop cache before
     // returning, then release it — otherwise the final round's cached
     // relation stays pinned in the session's cache manager until
@@ -805,7 +802,7 @@ object Dedup {
     * through the exchange's shuffle AND sort, while moderate buckets
     * are cheap — candidate pairs are generated and filtered inside the
     * codegen'd merge join at ~25M pairs/s/core. Measured on the
-    * DedupScale ladder (64-bit sigs, maxHamming=3, local[32]): λ=153
+    * dedup scale ladder (64-bit sigs, maxHamming=3, local[32]): λ=153
     * buckets at 10M rows run FASTER under r=1 (14.5 s) than r=2's
     * 2.5x explode (53 s), and even λ=1526 at 100M rows — a ~3x10^11
     * candidate join — still favors r=1 (392 s vs r=2's 687 s): sorted
@@ -848,7 +845,7 @@ object Dedup {
     * [[hammingPairs]]' multi-index factor). Buckets within `headroom`
     * of the uniform expectation are data, buckets beyond it are
     * degenerate signature mass the cap should drop. The single source
-    * of the cap formula — [[hammingPairsAuto]] and the DedupScale
+    * of the cap formula — [[hammingPairsAuto]] and the dedup ladder's
     * diagnostics both call it. */
   def autoBucketCap(
       rows: Long,

@@ -24,7 +24,7 @@ object TileTable {
     * keeps spatially-close tiles in the same row groups — the layout
     * discipline that makes pyramid-region scans prune at 100 TB.
     *
-    * Write-path economics (WriteProfile, 897k tiles / 9.9 GB payload,
+    * Write-path economics (897k tiles / 9.9 GB payload,
     * 16 cores):
     *  - `data` is PNG/JPEG — already entropy-coded, so the session's
     *    default parquet codec burned ~2/3 of the write wall time

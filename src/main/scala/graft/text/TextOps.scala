@@ -199,29 +199,6 @@ object TextOps {
           .cast("long") * lit(2097152L) + (lit(2097151L) - i)))
   }
 
-  /** [[winnowKeys]] with xxhash64 gram hashes — the production hash:
-    * one codegen'd 64-bit hash per gram instead of md5's digest →
-    * hex-string → conv round-trip. Measured 1.4x end-to-end on the
-    * sf0.1 documents table (tools/WinnowTime, best-of-3; the rest of
-    * the wall is the window-min pass + explode, which both forms
-    * share). The tradeoff is oracle portability:
-    * DuckDB has no xxhash64, so q73 keeps the md5 keys; selection
-    * SEMANTICS are identical either way (the window-min pass never
-    * looks inside the hash — WinnowSpec proves the positions chosen
-    * from these keys match the reference selection applied to the
-    * same keys, and the k+w-1 coverage guarantee only needs equal
-    * grams → equal hashes). fp is the hash folded to 40 bits, same
-    * key layout as [[winnowKeys]]. */
-  def winnowKeysFast(text: Column, k: Int): Column = {
-    require(k >= 1, s"k=$k must be positive")
-    val n = length(text)
-    val grams = n - lit(k) + lit(1)
-    when(n < lit(k), array().cast("array<bigint>"))
-      .otherwise(transform(sequence(lit(1), greatest(lit(1), grams)), i =>
-        pmod(xxhash64(text.substr(i, lit(k))), lit(1099511627776L))
-          * lit(2097152L) + (lit(2097151L) - i)))
-  }
-
   /** Window-min selection + pos/fp unpack over a MATERIALIZED hkeys
     * array column (a bound attribute, not the [[winnowKeys]]
     * expression inline). The split matters at scale: higher-order
@@ -265,24 +242,18 @@ object TextOps {
       textCol: String,
       k: Int,
       w: Int,
-      outCol: String = "winnow",
-      fast: Boolean = false): org.apache.spark.sql.DataFrame =
-    if (fast)
-      df.withColumn("__winnow_hkeys", winnowKeysFast(col(textCol), k))
-        .withColumn(outCol, winnowWinners(col("__winnow_hkeys"), w))
-        .drop("__winnow_hkeys")
-    else
-      // fused kernel: one digest per gram + O(n) monotonic-deque window
-      // minima (graft.sql.TextKernels.winnowFingerprints), replacing the
-      // staged md5-hex transform + O(n·w) slice/array_min HOF pass.
-      // Values and selection identical (WinnowSpec pins kernel ==
-      // staged form); the staging/CSE hazards the scaladocs above
-      // describe no longer apply to this path — the kernel is a single
-      // codegen expression evaluated once per row.
-      df.withColumn(outCol,
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.sql.WinnowFpExpr(
-            org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)), k, w)))
+      outCol: String = "winnow"): org.apache.spark.sql.DataFrame =
+    // fused kernel: one digest per gram + O(n) monotonic-deque window
+    // minima (graft.sql.TextKernels.winnowFingerprints), replacing the
+    // staged md5-hex transform + O(n·w) slice/array_min HOF pass.
+    // Values and selection identical (WinnowSpec pins kernel ==
+    // staged form); the staging/CSE hazards the scaladocs above
+    // describe no longer apply to this path — the kernel is a single
+    // codegen expression evaluated once per row.
+    df.withColumn(outCol,
+      org.apache.spark.sql.GraftColumnBridge.column(
+        graft.sql.WinnowFpExpr(
+          org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)), k, w)))
 
   /** Single-Column winnowing — small-document convenience ONLY: the
     * fused expression re-hashes all grams once per window (quadratic;

@@ -30,13 +30,10 @@ object PayloadScale {
     job() // warm (page cache + JIT)
     var best = Double.MaxValue
     val iters = sys.env.getOrElse("GRAFT_SCALE_ITERS", "5").toInt
-    for (i <- 0 until iters) {
+    for (_ <- 0 until iters) {
       val t0 = System.nanoTime()
       job()
-      val secs = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("GRAFT_SCALE_DEBUG"))
-        println(f"[payloadscale] iter $i: $secs%.2fs")
-      best = math.min(best, secs)
+      best = math.min(best, (System.nanoTime() - t0) / 1e9)
     }
     println(f"[payloadscale] cpus=$cpus best=$best%.2fs")
     spark.stop()

@@ -89,7 +89,9 @@ object Profile {
       val t1 = System.nanoTime()
       val analysisMs = phaseMs(qe)
       sc.setLocalProperty(PhaseKey, "exec")
-      qe.toRdd.foreachPartition((_: Iterator[InternalRow]) => ())
+      // consume every row: the last stage does its work only as its
+      // iterator is drained
+      qe.toRdd.foreachPartition((rows: Iterator[InternalRow]) => rows.foreach(_ => ()))
       val t2 = System.nanoTime()
       GraftBus.drain(sc)
       val c = l.c
@@ -130,13 +132,36 @@ object Profile {
       s""""text":${str(text)}}"""
   }
 
+  /** `Samples` cold runs of one `build`: per-metric values, the 1-min
+    * loadavg before each run and the last run's executed query. */
+  final case class Sampled(
+      metrics: Seq[(String, Seq[Double])], loads: Seq[String], last: QueryExecution) {
+    def median(metric: String): Double = {
+      val vs = metrics.find(_._1 == metric).get._2.sorted
+      vs(vs.size / 2)
+    }
+    def json: String =
+      s""""samples":$Samples,"loadavg":${loads.map(_.toDoubleOption.fold("null")(_.toString)).mkString("[", ",", "]")},""" +
+        s""""metrics":${metrics.map { case (k, vs) =>
+          s"""${str(k)}:{"values":${vs.mkString("[", ",", "]")},"median":${median(k)}}"""
+        }.mkString("{", ",", "}")}"""
+  }
+
+  /** The one timing loop of the profiling tools: `Samples` cold runs of
+    * `build` and its action in `spark`, each after a loadavg read. */
+  private[tools] def sampled(spark: SparkSession, build: () => DataFrame): Sampled = {
+    val l = new Listener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val runs = (1 to Samples).map(_ => (ToolUtil.loadavg(), sample(spark, l, build)))
+      Sampled(runs.map(_._2._1).transpose.map(m => m.head._1 -> m.map(_._2)), runs.map(_._1), runs.last._2._2)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** The profile of one target as one JSON line; never throws. */
   def record(spark: SparkSession, sfDir: String, target: String): String = {
     val head = s""""target":${str(target)},"sf":${str(sfDir)},"nproc":${Runtime.getRuntime.availableProcessors},""" +
       s""""cores":${spark.sparkContext.defaultParallelism}"""
-    val loads = mutable.ArrayBuffer.empty[String]
-    val l = new Listener
-    spark.sparkContext.addSparkListener(l)
     try {
       val build: () => DataFrame =
         if (target == "flagship") {
@@ -149,23 +174,14 @@ object Profile {
           val fn = SparkEntry.queries(target)
           () => fn(spark, sfDir)
         }
-      val runs = (1 to Samples).map { _ =>
-        loads += ToolUtil.loadavg().toDoubleOption.fold("null")(_.toString)
-        sample(spark, l, build)
-      }
-      val metrics = runs.map(_._1).transpose.map { perSample =>
-        val vs = perSample.map(_._2)
-        s"""${str(perSample.head._1)}:{"values":${vs.mkString("[", ",", "]")},"median":${vs.sorted.apply(vs.size / 2)}}"""
-      }
-      s"""{$head,"samples":$Samples,"loadavg":${loads.mkString("[", ",", "]")},""" +
-        s""""metrics":${metrics.mkString("{", ",", "}")},"plan":${planFacts(runs.last._2)}}"""
+      val s = sampled(spark, build)
+      s"""{$head,${s.json},"plan":${planFacts(s.last)}}"""
     } catch {
-      case NonFatal(e) =>
-        s"""{$head,"loadavg":${loads.mkString("[", ",", "]")},"error":${str(e.toString)}}"""
-    } finally spark.sparkContext.removeSparkListener(l)
+      case NonFatal(e) => s"""{$head,"error":${str(e.toString)}}"""
+    }
   }
 
-  private def str(s: String): String = "\"" + s.flatMap {
+  private[tools] def str(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"

@@ -122,50 +122,6 @@ class WinnowSpec extends SparkTestBase {
     assert(fromDf == fromExpr, "kernel and fused-HOF forms agree")
   }
 
-  test("fast (xxhash64) keys: selection matches the reference over the same keys") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(47)
-    val texts = (0 until 40).map { _ =>
-      val n = K + rnd.nextInt(120)
-      (0 until n).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
-    }
-    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text")
-
-    // the window-min pass never looks inside the hash, so the right
-    // parity check is: selection from the fast keys == the reference
-    // window scan applied to THOSE SAME keys (not to md5 keys)
-    val keyRows = df
-      .select(col("id"), TextOps.winnowKeysFast(col("text"), K).as("hk"))
-      .as[(Int, Seq[Long])].collect().toMap
-    def refSelect(hkeys: Seq[Long]): Set[Long] = {
-      if (hkeys.isEmpty) return Set.empty
-      val starts = 0 to math.max(0, hkeys.length - W)
-      starts.map(s => hkeys.slice(s, s + W).min).toSet
-    }
-    val got = TextOps.winnowFingerprints(df, "text", K, W, fast = true)
-      .select(col("id"), col("winnow"))
-      .as[(Int, Seq[(Long, Long)])].collect().toMap
-    texts.indices.foreach { i =>
-      val want = refSelect(keyRows(i))
-        .map(hk => (2097151L - (hk & 2097151L), hk >> 21))
-      assert(got(i).toSet == want, s"doc $i fast-key selection")
-    }
-
-    // coverage guarantee holds for ANY content hash: equal grams hash
-    // equal, so a shared span of k+w-1 chars still shares a fingerprint
-    def randText(n: Int) = (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val shared = randText(K + W - 1)
-    val pair = Seq((0, randText(30) + shared + randText(30)),
-                   (1, randText(30) + shared + randText(30))).toDF("id", "text")
-    val fps = TextOps.winnowFingerprints(pair, "text", K, W, fast = true)
-      .select(col("id"), col("winnow"))
-      .as[(Int, Seq[(Long, Long)])].collect().toMap
-    val f0 = fps(0).map(_._2).toSet
-    val f1 = fps(1).map(_._2).toSet
-    assert((f0 & f1).nonEmpty, "shared span shares a fast fingerprint")
-  }
-
   test("winnowPairs: planted partial dups found; boilerplate df-capped away") {
     val s = spark
     import s.implicits._

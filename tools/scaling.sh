@@ -10,8 +10,16 @@
 # bias the ratio.
 set -e
 cd "$(dirname "$0")/.."
-N="${SPARK_GRAFT_N:-4}"
+# N is a quarter of this box's processors, so the 4N leg gets 4N cores
+# of its own: a taskset list naming CPUs the box lacks pins the leg to
+# the ones it has, and the efficiency would then measure no scaling.
+NPROC=$(nproc)
+N=$((NPROC / 4 > 1 ? NPROC / 4 : 1))
 N4=$((4 * N))
+if [ "$N4" -gt "$NPROC" ]; then
+  echo "[scaling] the 4N leg needs $N4 processors, this box has $NPROC" >&2
+  exit 1
+fi
 ROWS="${SPARK_GRAFT_SCALE_ROWS:-800000}"
 PER_CORE="${SPARK_GRAFT_MEM_PER_CORE:-2}"
 
@@ -42,4 +50,4 @@ SPARK_DRIVER_MEM="$((N * PER_CORE))g" SPARK_GRAFT_APC=$N \
 wait_quiet
 SPARK_DRIVER_MEM="$((N4 * PER_CORE))g" SPARK_GRAFT_APC=$N4 \
   taskset -c "0-$((N4 - 1))" sbt -batch "runMain graft.ScalingBench solo $N4 $ROWS"
-sbt -batch "runMain graft.ScalingBench combine" | grep '"metric"'
+SPARK_GRAFT_N=$N sbt -batch "runMain graft.ScalingBench combine" | grep '"metric"'
