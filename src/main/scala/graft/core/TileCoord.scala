@@ -38,8 +38,6 @@ final case class TileCoord(z: Int, x: Long, y: Long, n: Int = 1)
       j <- Iterator.range(0, n)
     } yield TileCoord(z, x + i, y + j)
 
-  def tuple: (Int, Long, Long, Int) = (z, x, y, n)
-
   override def toString: String =
     if (n == 1) s"$z/$x/$y" else s"$z/$x/$y:+$n/+$n"
 }

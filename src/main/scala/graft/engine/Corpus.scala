@@ -27,11 +27,6 @@ object Corpus {
     z ^ (z >>> 31)
   }
 
-  /** Fraction in [0, 1) from the low 30 bits of a hash half. */
-  def fracLow(h: Long): Double = (h & 0x3fffffffL).toDouble / (1L << 30).toDouble
-  def fracHigh(h: Long): Double =
-    ((h >>> 30) & 0x3fffffffL).toDouble / (1L << 30).toDouble
-
   def captionFor(i: Long, phash: Long): String =
     f"caption-$i-${phash}%016x"
 

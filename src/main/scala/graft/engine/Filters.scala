@@ -52,19 +52,11 @@ object Filters {
   def collectErrors(df: DataFrame): (DataFrame, DataFrame) =
     (df.where(col("error").isNull), df.where(col("error").isNotNull))
 
-  /** Named observation of tile/error counts — the distributed analogue
-    * of MaximumErrors/MaximumErrorRate guards (filter/error.py:37-113):
-    * read the metrics after the action and abort the *job* if exceeded
-    * (per-row exceptions are order-dependent and meaningless on a
-    * cluster). */
-  def observeErrors(df: DataFrame, name: String = "tile_metrics"): DataFrame =
-    df.observe(
-      name,
-      count(lit(1)).as("tiles"),
-      count(col("error")).as("errors"))
-
-  /** Enforce an error-rate policy after an action has populated the
-    * observation (reference filter/error.py:63-92 semantics, job-level). */
+  /** Enforce an error-rate policy on a job's tile and error totals,
+    * read after the action (e.g. `Checkpoint.report`'s rows and errors)
+    * — the distributed analogue of MaximumErrorRate
+    * (reference filter/error.py:63-92 semantics, job-level: per-row
+    * exceptions are order-dependent and meaningless on a cluster). */
   def checkErrorRate(
       metrics: Map[String, Any],
       maxRate: Double,

@@ -256,64 +256,49 @@ object Stores {
     * exactly like the reference (most frequent `.png`/`.jpe?g` wins,
     * zip.py:20-31); entries that don't parse as `z/x/y[.ext]` are
     * dropped (reference list() swallows ValueError, zip.py:57-62). */
-  def readZip(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.zip")
-      .option("recursiveFileLookup", "true")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (archivePath, bytes) =>
-        val entries = zipEntries(bytes)
-        val extCounts = entries
-          .groupBy(e => extensionOf(e._1)).view.mapValues(_.size).toMap
-        val preferredExt = extCounts.toSeq
-          .sortBy { case (ext, cnt) => (-cnt, ext) }
-          .collectFirst {
-            case (ext, _) if ext.matches("""(?i)\.(jpe?g|png)""") => ext
-          }
-        val ct = preferredExt.map {
-          case e if e.toLowerCase.startsWith(".j") => "image/jpeg"
-          case _                                   => "image/png"
-        }.orNull
-        entries.flatMap { case (name, data) =>
-          name match {
-            case ZipEntryRegex(z, x, y, _) =>
-              Some((z.toInt, x.toLong, y.toLong, data, ct, archivePath, name))
-            case _ => None
-          }
+  def readZip(spark: SparkSession, path: String): DataFrame =
+    graft.sources.Archives.read(spark, path, "zip") { (archivePath, bytes) =>
+      val entries = zipEntries(bytes)
+      val extCounts = entries
+        .groupBy(e => extensionOf(e._1)).view.mapValues(_.size).toMap
+      val preferredExt = extCounts.toSeq
+        .sortBy { case (ext, cnt) => (-cnt, ext) }
+        .collectFirst {
+          case (ext, _) if ext.matches("""(?i)\.(jpe?g|png)""") => ext
+        }
+      val ct = preferredExt.map {
+        case e if e.toLowerCase.startsWith(".j") => "image/jpeg"
+        case _                                   => "image/png"
+      }.orNull
+      entries.flatMap { case (name, data) =>
+        name match {
+          case ZipEntryRegex(z, x, y, _) =>
+            Some((z.toInt, x.toLong, y.toLong, data, ct, archivePath, name))
+          case _ => None
         }
       }
-      .toDF("z", "x", "y", "data", "content_type", "archive", "entry")
-  }
+    }.toDF("z", "x", "y", "data", "content_type", "archive", "entry")
 
   /** ZipTileStore sink (reference store/zip.py:65-76 put_one): the
-    * distributed analogue writes one archive per partition (the
-    * reference appends to a single driver-local zip — a serialization
-    * point that cannot scale), entries named by the OSM layout. */
-  def writeZip(tiles: DataFrame, dir: String, ext: String = "png"): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    tiles.select("z", "x", "y", "data")
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+    * distributed analogue writes one archive per partition
+    * ([[graft.sources.Archives.writeSharded]]; the reference appends to
+    * a single driver-local zip — a serialization point that cannot
+    * scale), entries named by the OSM layout. */
+  def writeZip(tiles: DataFrame, dir: String, ext: String = "png"): Unit =
+    graft.sources.Archives.writeSharded(tiles.select("z", "x", "y", "data"), dir, "zip") {
+      (it, shard) =>
         // stream rows straight into the archive — it.toSeq would buffer
         // the partition's every tile payload on the heap first, and a
         // z-partitioned blob partition is GBs at scale
-        if (it.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val out = new java.util.zip.ZipOutputStream(
-            java.nio.file.Files.newOutputStream(
-              java.nio.file.Paths.get(dir, f"part-$pid%05d.zip")))
-          try it.foreach { r =>
-            val e = new java.util.zip.ZipEntry(
-              s"${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}.$ext")
-            out.putNextEntry(e)
-            out.write(r.getAs[Array[Byte]]("data"))
-            out.closeEntry()
-          } finally out.close()
+        val out = new java.util.zip.ZipOutputStream(shard)
+        it.foreach { r =>
+          out.putNextEntry(new java.util.zip.ZipEntry(
+            s"${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}.$ext"))
+          out.write(r.getAs[Array[Byte]]("data"))
+          out.closeEntry()
         }
-      }
-  }
+        out.finish() // the shard stream itself is closed by the caller
+    }
 
   private def extensionOf(name: String): String = {
     val i = name.lastIndexOf('.')

@@ -5,9 +5,6 @@ import java.util.Base64
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types._
-
 /** Azure Storage blob tile store — the Spark-native
   * AzureStorageBlobTileStore (reference store/azure_storage_blob.py:
   * 14-118), written against the public Azure Blob REST API + Shared
@@ -15,23 +12,12 @@ import org.apache.spark.sql.types._
   * the canonicalization is fully documented). Works against any
   * Azurite-style endpoint via `http(s)://host:port/account/container`.
   *
-  * Semantics, faithfully to the reference:
-  *   - get_one (azure_storage_blob.py:71-86): a missing blob → the
-  *     row is DROPPED (the reference returns None on not-exists);
-  *     success → data + content type/encoding from the blob
-  *     properties; other failures → error column
-  *   - put_one (:99-118): Put Blob (BlockBlob) with
-  *     x-ms-blob-content-type / -encoding / -cache-control
-  *     (ContentSettings), overwrite always (overwrite=True)
-  *   - delete_one (:59-69): delete-if-exists — a 404 is a silent
-  *     no-op exactly like the reference's exists() guard
-  *   - __contains__ (:52-57): HEAD → boolean column
-  *   - list (:88-97): List Blobs with prefix + marker paging,
-  *     DISTRIBUTED over a prefix-shard frame like [[S3Store.list]]
-  *
-  * Scale posture identical to [[S3Store]]: keys in, payloads born on
-  * executors, zero shuffle, concurrency = partition count, signing is
-  * per-row CPU noise next to the round-trip.
+  * A [[Container]] is an [[ObjectStore]], the same shape as
+  * [[S3Store.Bucket]]: the fetch / put / delete / contains / list
+  * operators live there (get_one :71-86, put_one :99-118, delete_one
+  * :59-69, __contains__ :52-57, list :88-97); this object holds only
+  * the Shared Key signing, the blob service's headers and statuses,
+  * and its listing format.
   */
 object AzureBlobStore {
 
@@ -90,217 +76,69 @@ object AzureBlobStore {
     java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC).format(fmt)
   }
 
-  /** One signed Blob request against
-    * `endpoint/account/container/blob`. Returns (status, headers,
-    * body). */
-  private[sources] def request(
-      endpoint: String,
-      container: String,
-      blob: String,
-      method: String,
-      query: Seq[(String, String)],
-      blobHeaders: Seq[(String, String)], // x-ms-* extras
-      contentType: String,
-      body: Array[Byte],
-      creds: Creds,
-      timeoutMs: Int): (Int, Map[String, String], Array[Byte]) = {
-    val path = s"/$container" + (if (blob.isEmpty) "" else s"/$blob")
-    val xms = Seq("x-ms-date" -> gmtNow(), "x-ms-version" -> ApiVersion) ++ blobHeaders
-    val len = if (body == null) 0L else body.length.toLong
-    val sts = stringToSign(method, len, contentType, xms, creds.account, path, query)
-    val auth = s"SharedKey ${creds.account}:${sign(sts, creds)}"
-    val qs =
-      if (query.isEmpty) ""
-      else "?" + query.map { case (k, v) =>
-        s"${S3Store.uriEncode(k, keepSlash = false)}=${S3Store.uriEncode(v, keepSlash = false)}"
-      }.mkString("&")
-    val url = endpoint + s"/${creds.account}" + S3Store.uriEncode(path, keepSlash = true) + qs
-    val hdrs = xms ++
-      (if (contentType != null) Seq("Content-Type" -> contentType) else Nil) :+
-      ("Authorization" -> auth)
-    Http.exchange(url, method, hdrs, body, timeoutMs)
+  /** One blob container of `creds.account` at an Azurite-style
+    * endpoint (`endpoint/account/container/blob`); run the tile-store
+    * operators over it with [[ObjectStore]]. */
+  final case class Container(endpoint: String, container: String, creds: Creds)
+      extends ObjectStore {
+
+    /** `headers` are x-ms-* extras; a PUT body goes as
+      * application/octet-stream (the blob's own type rides in
+      * x-ms-blob-content-type). */
+    def request(
+        method: String,
+        key: String,
+        query: Seq[(String, String)],
+        headers: Seq[(String, String)],
+        body: Array[Byte],
+        timeoutMs: Int): (Int, Map[String, String], Array[Byte]) = {
+      val path = s"/$container" + (if (key.isEmpty) "" else s"/$key")
+      val contentType = if (method == "PUT") "application/octet-stream" else null
+      val xms = Seq("x-ms-date" -> gmtNow(), "x-ms-version" -> ApiVersion) ++ headers
+      val len = if (body == null) 0L else body.length.toLong
+      val sts = stringToSign(method, len, contentType, xms, creds.account, path, query)
+      val auth = s"SharedKey ${creds.account}:${sign(sts, creds)}"
+      val url = endpoint + s"/${creds.account}" + S3Store.uriEncode(path, keepSlash = true) +
+        S3Store.queryString(query)
+      val hdrs = xms ++
+        (if (contentType != null) Seq("Content-Type" -> contentType) else Nil) :+
+        ("Authorization" -> auth)
+      Http.exchange(url, method, hdrs, body, timeoutMs)
+    }
+
+    /** Put Blob (BlockBlob) with ContentSettings headers, overwrite
+      * always (azure_storage_blob.py:105-113). */
+    def putHeaders(
+        contentType: Option[String],
+        contentEncoding: Option[String],
+        cacheControl: Option[String]): Seq[(String, String)] =
+      Seq("x-ms-blob-type" -> "BlockBlob") ++
+        contentType.map("x-ms-blob-content-type" -> _) ++
+        contentEncoding.map("x-ms-blob-content-encoding" -> _) ++
+        cacheControl.map("x-ms-blob-cache-control" -> _)
+
+    def putOk(status: Int): Boolean = status == 201
+
+    /** delete-if-exists: 202 deleted, 404 silent no-op (the reference's
+      * exists() guard, azure_storage_blob.py:63-65). */
+    def deleteOk(status: Int): Boolean = status == 202 || status == 404
+
+    def listQuery(prefix: String, marker: String, pageSize: Int): Seq[(String, String)] =
+      Seq("comp" -> "list", "restype" -> "container",
+        "prefix" -> prefix, "maxresults" -> pageSize.toString) ++
+        (if (marker.nonEmpty) Seq("marker" -> marker) else Nil)
+
+    /** List Blobs: names (and the continuation marker) arrive
+      * entity-escaped. */
+    def listPage(xml: String): (Seq[(String, Long)], String) =
+      (BlobRe.findAllMatchIn(xml)
+        .map(m => (Http.xmlUnescape(m.group(1)), m.group(2).toLong)).toSeq,
+        MarkerRe.findFirstMatchIn(xml).map(m => Http.xmlUnescape(m.group(1))).getOrElse(""))
+
+    def uri(key: String): String = s"az://$container/$key"
   }
 
-  private val getFields = Seq(
-    StructField("data", BinaryType),
-    StructField("content_type", StringType),
-    StructField("content_encoding", StringType),
-    StructField("error", StringType))
-
-  /** get_one: GET the blob; 404 rows are DROPPED (the reference's
-    * not-exists → None), other failures → error column. */
-  def fetch(
-      df: DataFrame,
-      endpoint: String,
-      container: String,
-      creds: Creds,
-      keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ getFields)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val key = r.getString(keyIdx)
-        try {
-          val (status, hdrs, body) =
-            request(endpoint, container, key, "GET", Nil, Nil, null, null, creds, timeoutMs)
-          if (status == 404) None
-          else if (status == 200)
-            Some(Row.fromSeq(r.toSeq ++ Seq(body, hdrs.getOrElse("content-type", null),
-              hdrs.getOrElse("content-encoding", null), null)))
-          else Some(Row.fromSeq(r.toSeq ++ Seq(null, null, null,
-            s"az://$container/$key\n$status: ${new String(body, UTF_8)}")))
-        } catch {
-          case e: Exception =>
-            Some(Row.fromSeq(r.toSeq ++ Seq(null, null, null, s"az://$container/$key\n$e")))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  private val errField = Seq(StructField("error", StringType))
-
-  /** put_one: Put Blob (BlockBlob) with ContentSettings headers,
-    * overwrite always (azure_storage_blob.py:105-113). */
-  def put(
-      df: DataFrame,
-      endpoint: String,
-      container: String,
-      creds: Creds,
-      keyCol: String = "key",
-      dataCol: String = "data",
-      contentTypeCol: Option[String] = None,
-      contentEncodingCol: Option[String] = None,
-      cacheControl: Option[String] = None,
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val dataIdx = df.schema.fieldIndex(dataCol)
-    val ctIdx = contentTypeCol.map(df.schema.fieldIndex)
-    val ceIdx = contentEncodingCol.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields.toSeq ++ errField)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val err =
-          try {
-            val hdrs = Seq("x-ms-blob-type" -> "BlockBlob") ++
-              ctIdx.flatMap(i => Option(r.getString(i))).map("x-ms-blob-content-type" -> _) ++
-              ceIdx.flatMap(i => Option(r.getString(i))).map("x-ms-blob-content-encoding" -> _) ++
-              cacheControl.map("x-ms-blob-cache-control" -> _)
-            // null data still PUTs a zero-length blob (empty tiles are
-            // legal); Http.exchange needs non-null to send a body
-            val data = Option(r.getAs[Array[Byte]](dataIdx)).getOrElse(Array.emptyByteArray)
-            val (status, _, body) = request(endpoint, container, key, "PUT", Nil, hdrs,
-              "application/octet-stream", data, creds, timeoutMs)
-            if (status == 201) null
-            else s"az://$container/$key\n$status: ${new String(body, UTF_8)}"
-          } catch { case e: Exception => s"az://$container/$key\n$e" }
-        Row.fromSeq(r.toSeq :+ err)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** delete_one: delete-if-exists — 202 deleted, 404 silent no-op
-    * (the reference's exists() guard, azure_storage_blob.py:63-65). */
-  def delete(
-      df: DataFrame,
-      endpoint: String,
-      container: String,
-      creds: Creds,
-      keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ errField)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val err =
-          try {
-            val (status, _, body) =
-              request(endpoint, container, key, "DELETE", Nil, Nil, null, null, creds, timeoutMs)
-            if (status == 202 || status == 404) null
-            else s"az://$container/$key\n$status: ${new String(body, UTF_8)}"
-          } catch { case e: Exception => s"az://$container/$key\n$e" }
-        Row.fromSeq(r.toSeq :+ err)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  private val containsFields = Seq(
-    StructField("exists", BooleanType),
-    StructField("error", StringType))
-
-  /** __contains__: HEAD (Get Blob Properties) → exists boolean. */
-  def contains(
-      df: DataFrame,
-      endpoint: String,
-      container: String,
-      creds: Creds,
-      keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ containsFields)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val extra =
-          try {
-            val (status, _, _) =
-              request(endpoint, container, key, "HEAD", Nil, Nil, null, null, creds, timeoutMs)
-            if (status == 200) Seq(Boolean.box(true), null)
-            else if (status == 404) Seq(Boolean.box(false), null)
-            else Seq(null, s"az://$container/$key\nHEAD $status")
-          } catch { case e: Exception => Seq(null, s"az://$container/$key\n$e") }
-        Row.fromSeq(r.toSeq ++ extra)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Distributed List Blobs (azure_storage_blob.py:88-97 at scale):
-    * one row per prefix shard, marker-paged per partition, one output
-    * row per blob: (prefix, key, size). */
-  def list(
-      prefixes: DataFrame,
-      endpoint: String,
-      container: String,
-      creds: Creds,
-      maxResults: Int = 1000,
-      timeoutMs: Int = 30000): DataFrame = {
-    val pIdx = prefixes.schema.fieldIndex("prefix")
-    val outSchema = StructType(Seq(
-      StructField("prefix", StringType),
-      StructField("key", StringType),
-      StructField("size", LongType)))
-    val blobRe = "(?s)<Blob><Name>(.*?)</Name>.*?<Content-Length>(\\d+)</Content-Length>.*?</Blob>".r
-    val markerRe = "<NextMarker>([^<]+)</NextMarker>".r
-    prefixes.mapPartitions { it =>
-      it.flatMap { r =>
-        val prefix = r.getString(pIdx)
-        // stream pages lazily at O(page) memory (same hot-prefix OOM
-        // posture as S3Store.list)
-        new Iterator[Seq[Row]] {
-          private var marker = ""
-          private var more = true
-          def hasNext: Boolean = more
-          def next(): Seq[Row] = {
-            val q = Seq("comp" -> "list", "restype" -> "container",
-              "prefix" -> prefix, "maxresults" -> maxResults.toString) ++
-              (if (marker.nonEmpty) Seq("marker" -> marker) else Nil)
-            val (status, _, body) =
-              request(endpoint, container, "", "GET", q, Nil, null, null, creds, timeoutMs)
-            if (status != 200)
-              throw new RuntimeException(s"az list $container/$prefix: $status ${new String(body, UTF_8)}")
-            val xml = new String(body, UTF_8)
-            // names (and the continuation marker) arrive entity-escaped
-            val page = blobRe.findAllMatchIn(xml).map(m =>
-              Row(prefix, Http.xmlUnescape(m.group(1)), m.group(2).toLong)).toSeq
-            marker = markerRe.findFirstMatchIn(xml)
-              .map(m => Http.xmlUnescape(m.group(1))).getOrElse("")
-            more = marker.nonEmpty
-            page
-          }
-        }.flatten
-      }
-    }(Encoders.row(outSchema))
-  }
+  private val BlobRe =
+    "(?s)<Blob><Name>(.*?)</Name>.*?<Content-Length>(\\d+)</Content-Length>.*?</Blob>".r
+  private val MarkerRe = "<NextMarker>([^<]+)</NextMarker>".r
 }

@@ -298,7 +298,6 @@ object Bsddb {
       s"not a btree database (meta page type ${bytes(25)}; hash/recno/queue unsupported)")
     require(bytes(24) == 0, "encrypted or checksummed files unsupported")
     val root: Int = u32(88).toInt
-    val lastPgno: Int = u32(32).toInt
 
     private def pageOff(p: Int): Int = p * pageSize
     private def pageType(p: Int): Int = bytes(pageOff(p) + 25) & 0xff

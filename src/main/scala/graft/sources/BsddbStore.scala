@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Key/value tile archives in the Berkeley DB btree format — the
@@ -10,13 +12,11 @@ import org.apache.spark.sql.functions._
   * codec reads and writes the public file format directly — no native
   * library, no JNI.
   *
-  * Scale shape is identical to [[MBTiles]]: one archive is an
-  * indivisible unit, so `read` parallelizes over MANY archives via
-  * binaryFile + executor-side parsing, `writeSharded` writes one
-  * archive per partition through the Hadoop FileSystem (cluster-safe,
-  * object-store-capable), and `write` is the driver-streamed
-  * single-archive interchange path. The parquet tile table remains
-  * the corpus-scale format.
+  * Scale shape is the [[Archives]] one, like [[MBTiles]]: `read`
+  * parallelizes over MANY archives, `writeSharded` writes one archive
+  * per partition, and `write` is the driver-streamed single-archive
+  * interchange path. The parquet tile table remains the corpus-scale
+  * format.
   */
 object BsddbStore {
 
@@ -24,96 +24,52 @@ object BsddbStore {
 
   /** Read every `.db` archive under `path` into the canonical tile
     * relation `(z, x, y, n, data, archive)` — one task per archive. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.db")
-      .option("recursiveFileLookup", "true")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (archive, bytes) =>
-        Bsddb.decode(bytes).map { case (k, v) =>
-          new String(k, java.nio.charset.StandardCharsets.UTF_8) match {
-            case KeyRe(z, x, y, n) =>
-              (z.toInt, x.toLong, y.toLong,
-                Option(n).map(_.toInt).getOrElse(1), v, archive)
-            case other =>
-              // fail LOUDLY like MBTiles.read: a foreign key scheme
-              // silently dropped would yield a partial relation
-              throw new IllegalArgumentException(
-                s"$archive: key is not a tilecoord string: $other")
-          }
+  def read(spark: SparkSession, path: String): DataFrame =
+    Archives.read(spark, path, "db") { (archive, bytes) =>
+      Bsddb.decode(bytes).map { case (k, v) =>
+        new String(k, java.nio.charset.StandardCharsets.UTF_8) match {
+          case KeyRe(z, x, y, n) =>
+            (z.toInt, x.toLong, y.toLong,
+              Option(n).map(_.toInt).getOrElse(1), v, archive)
+          case other =>
+            // fail LOUDLY like MBTiles.read: a foreign key scheme
+            // silently dropped would yield a partial relation
+            throw new IllegalArgumentException(
+              s"$archive: key is not a tilecoord string: $other")
         }
       }
-      .toDF("z", "x", "y", "n", "data", "archive")
-  }
+    }.toDF("z", "x", "y", "n", "data", "archive")
 
-  private def keyOf(z: Int, x: Long, y: Long, n: Int): Array[Byte] = {
-    val s = if (n == 1) s"$z/$x/$y" else s"$z/$x/$y:+$n/+$n"
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** Write ONE archive from a tile relation `(z, x, y[, n], data)`.
-    * Rows stream through the driver; the archive itself is buffered
-    * as pages before the single sequential write (interior pages
-    * reference later page numbers), so size is bounded by driver heap
-    * — the small-interchange path, same contract as [[MBTiles.write]].
-    * The destination resolves through the Hadoop FileSystem, so
-    * `hdfs://` / `s3a://` URIs work. */
-  def write(tiles: DataFrame, file: String): Unit = {
-    val hasN = tiles.columns.contains("n")
-    val cols = Seq(
+  /** `(z, x, y, n, data)`, with `n` = 1 when the relation has none. */
+  private def keyed(tiles: DataFrame): DataFrame =
+    tiles.select(
       col("z").cast("int"), col("x").cast("long"), col("y").cast("long"),
-      (if (hasN) col("n") else lit(1)).cast("int"), col("data"))
-    val pairs = tiles.select(cols: _*)
-      .toLocalIterator()
-      .asInstanceOf[java.util.Iterator[org.apache.spark.sql.Row]]
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
-    pairs.forEachRemaining { r =>
-      buf += ((keyOf(r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3)),
-        Option(r.getAs[Array[Byte]]("data")).getOrElse(Array.emptyByteArray)))
-    }
-    val p = new org.apache.hadoop.fs.Path(file)
-    val out = p.getFileSystem(
-      tiles.sparkSession.sparkContext.hadoopConfiguration).create(p, true)
-    try out.write(Bsddb.encode(buf.toSeq))
-    finally out.close()
+      (if (tiles.columns.contains("n")) col("n") else lit(1)).cast("int"), col("data"))
+
+  /** The archive's (key, value) pair for one [[keyed]] row. */
+  private def pair(r: Row): (Array[Byte], Array[Byte]) = {
+    val n = r.getInt(3)
+    val key = if (n == 1) s"${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}"
+      else s"${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}:+$n/+$n"
+    (key.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      Option(r.getAs[Array[Byte]](4)).getOrElse(Array.emptyByteArray))
+  }
+
+  /** Write ONE archive from a tile relation `(z, x, y[, n], data)`
+    * ([[Archives.writeOne]]). Rows stream through the driver; the
+    * archive itself is buffered as pages before the single sequential
+    * write (interior pages reference later page numbers), so size is
+    * bounded by driver heap — the small-interchange path, same contract
+    * as [[MBTiles.write]]. */
+  def write(tiles: DataFrame, file: String): Unit = {
+    val pairs = keyed(tiles).toLocalIterator().asScala.map(pair).toSeq
+    Archives.writeOne(tiles.sparkSession, file)(_.write(Bsddb.encode(pairs)))
   }
 
   /** DISTRIBUTED export: one `part-NNNNN.db` archive per partition
-    * under `dir`, each encoded executor-side. Same Hadoop-FS shard
-    * resolution as [[MBTiles.writeSharded]]. */
-  def writeSharded(tiles: DataFrame, dir: String): Unit = {
-    val hadoopConf = tiles.sparkSession.sparkContext.hadoopConfiguration
-    val confEntries: Array[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val buf = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.result()
+    * under `dir`, each encoded executor-side ([[Archives.writeSharded]]). */
+  def writeSharded(tiles: DataFrame, dir: String): Unit =
+    Archives.writeSharded(keyed(tiles), dir, "db") { (it, out) =>
+      out.write(Bsddb.encode(it.map(pair).toSeq))
     }
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    dirPath.getFileSystem(hadoopConf).mkdirs(dirPath)
-    val hasN = tiles.columns.contains("n")
-    tiles
-      .select(
-        col("z").cast("int").as("z"), col("x").cast("long").as("x"),
-        col("y").cast("long").as("y"),
-        (if (hasN) col("n") else lit(1)).cast("int").as("n"), col("data"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val pairs = it.map { r =>
-            (keyOf(r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3)),
-              Option(r.getAs[Array[Byte]]("data")).getOrElse(Array.emptyByteArray))
-          }.toSeq
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val shard = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.db")
-          val out = shard.getFileSystem(conf).create(shard, true)
-          try out.write(Bsddb.encode(pairs))
-          finally out.close()
-        }
-      }
-  }
 }

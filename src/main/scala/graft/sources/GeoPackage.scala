@@ -28,10 +28,9 @@ import graft.sources.Sqlite._
   * byte-deterministic (reproducible corpus builds); pass the real
   * build time when interop matters more than determinism.
   *
-  * Scale shape is identical to [[MBTiles]]: one archive = one
-  * indivisible SQLite file, so `read` parallelizes over many archives
-  * (binaryFile + executor-side parse) and [[writeSharded]] exports one
-  * archive per partition through the Hadoop FileSystem API.
+  * Scale shape is the [[Archives]] one, like [[MBTiles]]: `read`
+  * parallelizes over many archives and [[writeSharded]] exports one
+  * archive per partition.
   */
 object GeoPackage {
 
@@ -201,64 +200,31 @@ object GeoPackage {
   /** Read every `.gpkg` archive under `path` into the canonical tile
     * relation `(z, x, y, data, archive)` — XYZ y directly (GeoPackage
     * rows are top-left origin), one task per archive. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gpkg")
-      .option("recursiveFileLookup", "true")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (archive, bytes) =>
-        decode(bytes).map { case (z, x, row, data) => (z, x, row, data, archive) }
-      }
-      .toDF("z", "x", "y", "data", "archive")
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    Archives.read(spark, path, "gpkg") { (archive, bytes) =>
+      decode(bytes).map { case (z, x, row, data) => (z, x, row, data, archive) }
+    }.toDF("z", "x", "y", "data", "archive")
 
   /** DISTRIBUTED GeoPackage export: one `.gpkg` per partition under
-    * `dir`, written executor-side through the Hadoop FileSystem API
-    * (shared destination on real clusters — same contract as
-    * [[MBTiles.writeSharded]]). */
+    * `dir`, written executor-side through [[Archives.writeSharded]]. */
   def writeSharded(
       tiles: DataFrame,
       dir: String,
       tableName: String = "tiles",
-      lastChange: String = "2026-01-01T00:00:00.000Z"): Unit = {
-    val hadoopConf = tiles.sparkSession.sparkContext.hadoopConfiguration
-    val confEntries: Array[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val buf = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-      buf.result()
+      lastChange: String = "2026-01-01T00:00:00.000Z"): Unit =
+    Archives.writeSharded(
+      tiles
+        .select(
+          col("z").cast("long").as("z"),
+          col("x").cast("long").as("x"),
+          col("y").cast("long").as("row"),
+          col("data"))
+        .sortWithinPartitions("z", "x", "row"),
+      dir, "gpkg") { (it, out) =>
+      // the zoom range must be known before the meta tables; rows are
+      // z-sorted, so it is the first and last row's z
+      val rows = it.map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getAs[Array[Byte]](3))).toArray
+      out.write(encode(rows.iterator, tableName, rows.head._1, rows.last._1, lastChange))
     }
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    dirPath.getFileSystem(hadoopConf).mkdirs(dirPath)
-    tiles
-      .select(
-        col("z").cast("long").as("z"),
-        col("x").cast("long").as("x"),
-        col("y").cast("long").as("row"),
-        col("data"))
-      .sortWithinPartitions("z", "x", "row")
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var minZ = Long.MaxValue
-          var maxZ = Long.MinValue
-          val rows = it.map { r =>
-            minZ = math.min(minZ, r.getLong(0))
-            maxZ = math.max(maxZ, r.getLong(0))
-            (r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getAs[Array[Byte]]("data"))
-          }.toArray // zoom range must be known before the meta tables
-          val bytes = encode(rows.iterator, tableName, minZ, maxZ, lastChange)
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val shard = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.gpkg")
-          val out = shard.getFileSystem(conf).create(shard, true)
-          try out.write(bytes)
-          finally out.close()
-        }
-      }
-  }
 }

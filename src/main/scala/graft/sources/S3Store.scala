@@ -6,9 +6,6 @@ import java.security.MessageDigest
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types._
-
 /** S3 tile store — the Spark-native S3TileStore (reference
   * store/s3.py:18-126), written against the public S3 REST API +
   * AWS Signature Version 4 spec rather than an SDK (the sandbox has
@@ -16,28 +13,12 @@ import org.apache.spark.sql.types._
   * S3-compatible endpoint (AWS, MinIO, the loopback fixture in
   * S3StoreSpec) via path-style URLs.
   *
-  * Semantics, faithfully to the reference:
-  *   - get_one (s3.py:60-72): 404 → the row is DROPPED (the reference
-  *     returns None); success → data + ContentType/ContentEncoding
-  *     from the response; any other failure → error column
-  *   - put_one (s3.py:83-105): PUT with x-amz-acl: public-read,
-  *     Content-Type / Content-Encoding from columns when present,
-  *     Cache-Control from config; failures → error column
-  *   - delete_one (s3.py:50-58): DELETE (204); failures → error column
-  *   - __contains__ (s3.py:38-48): HEAD → boolean column
-  *   - list (s3.py:74-81): ListObjects with prefix + marker paging —
-  *     but DISTRIBUTED: the caller supplies a prefix-shard frame (one
-  *     row per key prefix, e.g. one per zoom or per hex shard) and
-  *     each partition pages its own prefixes. A single driver-side
-  *     listing of a 10^12-object bucket is the anti-pattern; prefix
-  *     sharding is how production S3 inventories parallelise.
-  *
-  * Scale: same posture as [[UrlStore]] — input rows carry only keys,
-  * payloads are born on (GET) or leave from (PUT) the executors, no
-  * shuffle is introduced; request concurrency = partition count.
-  * SigV4 signing is pure per-row CPU (two SHA-256 + a short HMAC
-  * chain), negligible next to the network round-trip; the date-scoped
-  * signing key is cached per partition.
+  * A [[Bucket]] is an [[ObjectStore]]: the fetch / put / delete /
+  * contains / list operators and their reference semantics live
+  * there; this object holds only the SigV4 signing, S3's headers and
+  * statuses, and its listing format. SigV4 signing is pure per-row
+  * CPU (two SHA-256 + a short HMAC chain); the date-scoped signing key
+  * is cached per executor JVM.
   */
 object S3Store {
 
@@ -83,6 +64,13 @@ object S3Store {
     }
     sb.toString
   }
+
+  /** `?k=v&...` (uriEncoded), or "" for no query. */
+  private[sources] def queryString(query: Seq[(String, String)]): String =
+    if (query.isEmpty) ""
+    else "?" + query.map { case (k, v) =>
+      s"${uriEncode(k, keepSlash = false)}=${uriEncode(v, keepSlash = false)}"
+    }.mkString("&")
 
   /** Derived signing key (AWS4-HMAC-SHA256 key chain). */
   private[sources] def signingKey(secret: String, date: String, region: String, service: String): Array[Byte] =
@@ -139,217 +127,60 @@ object S3Store {
     java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC).format(fmt)
   }
 
-  /** One signed S3 request. Returns (status, headers, body). */
-  private[sources] def request(
-      endpoint: String, // e.g. "http://127.0.0.1:9000"
-      bucket: String,
-      key: String,
-      method: String,
-      query: Seq[(String, String)],
-      extraHeaders: Seq[(String, String)],
-      body: Array[Byte],
-      creds: Creds,
-      timeoutMs: Int): (Int, Map[String, String], Array[Byte]) = {
-    val path = s"/$bucket" + (if (key.isEmpty) "" else s"/$key")
-    val uri = URI.create(endpoint)
-    val host = uri.getHost + (if (uri.getPort > 0) s":${uri.getPort}" else "")
-    val payloadHash = hex(sha256(if (body == null) Array.emptyByteArray else body))
-    val amzDate = amzNow()
-    val signed = Seq("host" -> host, "x-amz-date" -> amzDate,
-      "x-amz-content-sha256" -> payloadHash) ++ extraHeaders
-    val auth = authorization(method, path, query, signed, payloadHash, creds, "s3", amzDate)
-    val qs =
-      if (query.isEmpty) ""
-      else "?" + query.map { case (k, v) =>
-        s"${uriEncode(k, keepSlash = false)}=${uriEncode(v, keepSlash = false)}"
-      }.mkString("&")
-    val url = endpoint + uriEncode(path, keepSlash = true) + qs
-    // host is signed but never set explicitly — HttpURLConnection owns it
-    Http.exchange(url, method,
-      signed.filterNot(_._1 == "host") :+ ("Authorization" -> auth),
-      body, timeoutMs)
+  /** One S3 bucket at an S3-compatible endpoint (e.g.
+    * "http://127.0.0.1:9000"), addressed path-style; run the tile-store
+    * operators over it with [[ObjectStore]]. */
+  final case class Bucket(endpoint: String, bucket: String, creds: Creds) extends ObjectStore {
+
+    def request(
+        method: String,
+        key: String,
+        query: Seq[(String, String)],
+        headers: Seq[(String, String)],
+        body: Array[Byte],
+        timeoutMs: Int): (Int, Map[String, String], Array[Byte]) = {
+      val path = s"/$bucket" + (if (key.isEmpty) "" else s"/$key")
+      val uri = URI.create(endpoint)
+      val host = uri.getHost + (if (uri.getPort > 0) s":${uri.getPort}" else "")
+      val payloadHash = hex(sha256(if (body == null) Array.emptyByteArray else body))
+      val amzDate = amzNow()
+      val signed = Seq("host" -> host, "x-amz-date" -> amzDate,
+        "x-amz-content-sha256" -> payloadHash) ++ headers
+      val auth = authorization(method, path, query, signed, payloadHash, creds, "s3", amzDate)
+      val url = endpoint + uriEncode(path, keepSlash = true) + queryString(query)
+      // host is signed but never set explicitly — HttpURLConnection owns it
+      Http.exchange(url, method,
+        signed.filterNot(_._1 == "host") :+ ("Authorization" -> auth),
+        body, timeoutMs)
+    }
+
+    /** public-read ACL + content headers (s3.py:83-105). */
+    def putHeaders(
+        contentType: Option[String],
+        contentEncoding: Option[String],
+        cacheControl: Option[String]): Seq[(String, String)] =
+      Seq("x-amz-acl" -> "public-read") ++ contentType.map("content-type" -> _) ++
+        contentEncoding.map("content-encoding" -> _) ++ cacheControl.map("cache-control" -> _)
+
+    def putOk(status: Int): Boolean = status == 200
+    def deleteOk(status: Int): Boolean = status == 204 || status == 200
+
+    def listQuery(prefix: String, marker: String, pageSize: Int): Seq[(String, String)] =
+      Seq("prefix" -> prefix, "max-keys" -> pageSize.toString) ++
+        (if (marker.nonEmpty) Seq("marker" -> marker) else Nil)
+
+    /** ListObjects (v1): a truncated page continues after its last key.
+      * Keys arrive entity-escaped in the XML; unescape before use (both
+      * as the output column and as the paging marker). */
+    def listPage(xml: String): (Seq[(String, Long)], String) = {
+      val page = KeyRe.findAllMatchIn(xml)
+        .map(m => (Http.xmlUnescape(m.group(1)), m.group(2).toLong)).toSeq
+      val more = xml.contains("<IsTruncated>true</IsTruncated>") && page.nonEmpty
+      (page, if (more) page.last._1 else "")
+    }
+
+    def uri(key: String): String = s"s3://$bucket/$key"
   }
 
-  // ---------------------------------------------------------- operations
-
-  private val getFields = Seq(
-    StructField("data", BinaryType),
-    StructField("content_type", StringType),
-    StructField("content_encoding", StringType),
-    StructField("error", StringType))
-
-  /** get_one for every row: GET the key; 404 rows are DROPPED
-    * (s3.py:68-69 returns None), other failures land in `error`. */
-  def fetch(
-      df: DataFrame,
-      endpoint: String,
-      bucket: String,
-      creds: Creds,
-      keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ getFields)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val key = r.getString(keyIdx)
-        try {
-          val (status, hdrs, body) = request(endpoint, bucket, key, "GET", Nil, Nil, null, creds, timeoutMs)
-          if (status == 404) None
-          else if (status == 200)
-            Some(Row.fromSeq(r.toSeq ++ Seq(body, hdrs.getOrElse("content-type", null),
-              hdrs.getOrElse("content-encoding", null), null)))
-          else
-            Some(Row.fromSeq(r.toSeq ++ Seq(null, null, null,
-              s"s3://$bucket/$key\n$status: ${new String(body, UTF_8)}")))
-        } catch {
-          case e: Exception =>
-            Some(Row.fromSeq(r.toSeq ++ Seq(null, null, null, s"s3://$bucket/$key\n$e")))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  private val errField = Seq(StructField("error", StringType))
-
-  /** put_one for every row: PUT dataCol under keyCol with
-    * public-read ACL + content headers (s3.py:83-105). */
-  def put(
-      df: DataFrame,
-      endpoint: String,
-      bucket: String,
-      creds: Creds,
-      keyCol: String = "key",
-      dataCol: String = "data",
-      contentTypeCol: Option[String] = None,
-      contentEncodingCol: Option[String] = None,
-      cacheControl: Option[String] = None,
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val dataIdx = df.schema.fieldIndex(dataCol)
-    val ctIdx = contentTypeCol.map(df.schema.fieldIndex)
-    val ceIdx = contentEncodingCol.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields.toSeq ++ errField)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val err =
-          try {
-            val hdrs = Seq("x-amz-acl" -> "public-read") ++
-              ctIdx.flatMap(i => Option(r.getString(i))).map("content-type" -> _) ++
-              ceIdx.flatMap(i => Option(r.getString(i))).map("content-encoding" -> _) ++
-              cacheControl.map("cache-control" -> _)
-            // null data still PUTs a zero-length object (empty tiles
-            // are legal); Http.exchange needs non-null to send a body
-            val data = Option(r.getAs[Array[Byte]](dataIdx)).getOrElse(Array.emptyByteArray)
-            val (status, _, body) = request(endpoint, bucket, key, "PUT", Nil, hdrs,
-              data, creds, timeoutMs)
-            if (status == 200) null
-            else s"s3://$bucket/$key\n$status: ${new String(body, UTF_8)}"
-          } catch { case e: Exception => s"s3://$bucket/$key\n$e" }
-        Row.fromSeq(r.toSeq :+ err)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** delete_one for every row (s3.py:50-58). */
-  def delete(
-      df: DataFrame,
-      endpoint: String,
-      bucket: String,
-      creds: Creds,
-      keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ errField)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val err =
-          try {
-            val (status, _, body) = request(endpoint, bucket, key, "DELETE", Nil, Nil, null, creds, timeoutMs)
-            if (status == 204 || status == 200) null
-            else s"s3://$bucket/$key\n$status: ${new String(body, UTF_8)}"
-          } catch { case e: Exception => s"s3://$bucket/$key\n$e" }
-        Row.fromSeq(r.toSeq :+ err)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  private val containsFields = Seq(
-    StructField("exists", BooleanType),
-    StructField("error", StringType))
-
-  /** __contains__ for every row: HEAD → exists boolean (s3.py:38-48). */
-  def contains(
-      df: DataFrame,
-      endpoint: String,
-      bucket: String,
-      creds: Creds,
-      keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ containsFields)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val extra =
-          try {
-            val (status, _, _) = request(endpoint, bucket, key, "HEAD", Nil, Nil, null, creds, timeoutMs)
-            if (status == 200) Seq(Boolean.box(true), null)
-            else if (status == 404) Seq(Boolean.box(false), null)
-            else Seq(null, s"s3://$bucket/$key\nHEAD $status")
-          } catch { case e: Exception => Seq(null, s"s3://$bucket/$key\n$e") }
-        Row.fromSeq(r.toSeq ++ extra)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Distributed ListObjects (s3.py:74-81 at scale): `prefixes` has
-    * one row per key prefix (column `prefix`); each partition pages
-    * its own prefixes with marker continuation. Output one row per
-    * object: (prefix, key, size). maxKeys is the page size. */
-  def list(
-      prefixes: DataFrame,
-      endpoint: String,
-      bucket: String,
-      creds: Creds,
-      maxKeys: Int = 1000,
-      timeoutMs: Int = 30000): DataFrame = {
-    val pIdx = prefixes.schema.fieldIndex("prefix")
-    val outSchema = StructType(Seq(
-      StructField("prefix", StringType),
-      StructField("key", StringType),
-      StructField("size", LongType)))
-    val keyRe = "(?s)<Key>(.*?)</Key>.*?<Size>(\\d+)</Size>".r
-    val truncRe = "<IsTruncated>true</IsTruncated>".r
-    prefixes.mapPartitions { it =>
-      it.flatMap { r =>
-        val prefix = r.getString(pIdx)
-        // stream pages lazily at O(page) memory: buffering the whole
-        // listing first would OOM the task on one hot prefix (the
-        // 10^12-object posture means tens of millions of keys CAN land
-        // under a single prefix shard)
-        new Iterator[Seq[Row]] {
-          private var marker = ""
-          private var more = true
-          def hasNext: Boolean = more
-          def next(): Seq[Row] = {
-            val q = Seq("prefix" -> prefix, "max-keys" -> maxKeys.toString) ++
-              (if (marker.nonEmpty) Seq("marker" -> marker) else Nil)
-            val (status, _, body) = request(endpoint, bucket, "", "GET", q, Nil, null, creds, timeoutMs)
-            if (status != 200)
-              throw new RuntimeException(s"s3 list $bucket/$prefix: $status ${new String(body, UTF_8)}")
-            val xml = new String(body, UTF_8)
-            // keys arrive entity-escaped in the XML; unescape before use
-            // (both as the output column and as the paging marker)
-            val page = keyRe.findAllMatchIn(xml)
-              .map(m => (Http.xmlUnescape(m.group(1)), m.group(2).toLong)).toSeq
-            more = truncRe.findFirstIn(xml).isDefined && page.nonEmpty
-            if (more) marker = page.last._1
-            page.map { case (k, sz) => Row(prefix, k, sz) }
-          }
-        }.flatten
-      }
-    }(Encoders.row(outSchema))
-  }
+  private val KeyRe = "(?s)<Key>(.*?)</Key>.*?<Size>(\\d+)</Size>".r
 }

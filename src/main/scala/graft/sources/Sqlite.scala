@@ -532,17 +532,6 @@ object Sqlite {
     kids.head
   }
 
-  /** Write a fresh SQLite database file containing `tables`. */
-  def writeDatabase(path: String, tables: Seq[Table]): Unit =
-    writeDatabase(path, tables, Nil)
-
-  /** Write a fresh SQLite database file with index b-trees. */
-  def writeDatabase(path: String, tables: Seq[Table], indexes: Seq[IndexDef]): Unit = {
-    val out = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path))
-    try writeDatabase(out, tables, indexes = indexes)
-    finally out.close()
-  }
-
   /** Defer an iterator so it is constructed only when first pulled —
     * index-entry iterators read buffers that fill while the TABLE
     * b-tree consumes its row iterator, so they must not touch the
@@ -550,14 +539,14 @@ object Sqlite {
   def deferred[A](mk: => Iterator[A]): Iterator[A] = Iterator.empty ++ mk
 
   /** Write a fresh SQLite database to an already-open stream (caller
-    * closes) — the form executor tasks use to target a Hadoop
-    * FileSystem (HDFS/S3A/ABFSS) destination. The page image is built
-    * fully in memory before the single sequential write: the b-tree
-    * interior pages and the page-1 header both reference page numbers
-    * allocated after them, so the format itself forces either
-    * buffering or a seekable re-patch — an archive is therefore
-    * bounded by the writer's heap (use [[graft.sources.MBTiles
-    * .writeSharded]]'s many-archives form for corpus-scale exports). */
+    * closes; [[Archives]] opens archives on the Hadoop FileSystem).
+    * The page image is built fully in memory before the single
+    * sequential write: the b-tree interior pages and the page-1 header
+    * both reference page numbers allocated after them, so the format
+    * itself forces either buffering or a seekable re-patch — an
+    * archive is therefore bounded by the writer's heap (use
+    * [[Archives.writeSharded]]'s many-archives form for corpus-scale
+    * exports). */
   def writeDatabase(
       out: java.io.OutputStream,
       tables: Seq[Table],

@@ -48,9 +48,6 @@ object HashKernels {
     }
     v
   }
-
-  def md5Prefix(bytes: Array[Byte], nibbles: Int): Long =
-    md5Slice(bytes, 1, nibbles)
 }
 
 /** `md5_prefix_long(bin, nibbles)` — the md5-derived integer hash the
@@ -791,18 +788,6 @@ object SpatialKernels {
       a += 1
     }
     new GenericArrayData(out.toArray)
-  }
-}
-
-private[sql] object SpatialExprHelper {
-  /** Resolve the x/y field positions of an array<struct<...>> vertex
-    * column so kernels can read by ordinal. */
-  def xyIdx(dt: DataType): (Int, Int) = dt match {
-    case ArrayType(st: StructType, _) =>
-      (st.fieldIndex("x"), st.fieldIndex("y"))
-    case other =>
-      throw new IllegalArgumentException(
-        s"expected array<struct<x,y>> vertices, got $other")
   }
 }
 

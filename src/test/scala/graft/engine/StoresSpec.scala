@@ -74,6 +74,21 @@ class StoresSpec extends SparkTestBase {
     assert(Stores.open(spark, s"zip://$dir").count() == 10)
   }
 
+  test("archive sinks accept Hadoop URIs: zip and mbtiles written to file:// read back") {
+    // java.nio reads "file:///d" as the RELATIVE path "file:/d"; the
+    // sinks must resolve it through the Hadoop FileSystem instead
+    val uri = new java.io.File(tmp()).toURI.toString.stripSuffix("/")
+    assert(uri.startsWith("file:/"))
+    Stores.writeZip(Stores.dict(spark, someTiles(6)).repartition(2), s"$uri/zips")
+    graft.sources.MBTiles.write(Stores.dict(spark, someTiles(5)), s"$uri/mb/a.mbtiles")
+    val zips = Stores.open(spark, s"zip://$uri/zips").collect()
+    assert(zips.map(r => (r.getAs[Long]("x"), r.getAs[Long]("y"))).toSet ==
+      (0 until 6).map(i => (i.toLong % 8, i.toLong / 8)).toSet)
+    val mb = Stores.open(spark, s"mbtiles://$uri/mb").collect()
+    assert(mb.map(r => (r.getAs[Long]("x"), r.getAs[Long]("y"))).toSet ==
+      (0 until 5).map(i => (i.toLong % 8, i.toLong / 8)).toSet)
+  }
+
   test("zip reader drops non-layout entries (ref zip.py list ValueError)") {
     val dir = tmp() + "/zips2"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))

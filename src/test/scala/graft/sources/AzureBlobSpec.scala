@@ -177,20 +177,20 @@ class AzureBlobSpec extends SparkTestBase {
         .withColumn("data", concat(lit("blob-"), col("key")).cast("binary"))
         .withColumn("ct", lit("image/png"))
 
-      val put = AzureBlobStore.put(tiles, az.endpoint, "tiles", creds,
+      val put = ObjectStore.put(tiles, AzureBlobStore.Container(az.endpoint, "tiles", creds),
         contentTypeCol = Some("ct"), cacheControl = Some("max-age=3600"))
       assert(put.where(col("error").isNotNull).count() == 0)
       assert(az.store.size() == 12)
       assert(az.authFailures == 0, "every request passed server-side SharedKey re-derivation")
 
-      val ex = AzureBlobStore.contains(Seq("4/2/1.png", "9/9/9.png").toDF("key"),
-        az.endpoint, "tiles", creds)
+      val ex = ObjectStore.contains(Seq("4/2/1.png", "9/9/9.png").toDF("key"),
+        AzureBlobStore.Container(az.endpoint, "tiles", creds))
         .select("key", "exists").as[(String, Boolean)].collect().toMap
       assert(ex("4/2/1.png") && !ex("9/9/9.png"))
 
       // fetch: missing blob dropped (reference returns None), content headers round-trip
-      val got = AzureBlobStore.fetch(Seq("4/2/1.png", "gone.png").toDF("key"),
-        az.endpoint, "tiles", creds).cache()
+      val got = ObjectStore.fetch(Seq("4/2/1.png", "gone.png").toDF("key"),
+        AzureBlobStore.Container(az.endpoint, "tiles", creds)).cache()
       assert(got.count() == 1)
       val one = got.head()
       assert(new String(one.getAs[Array[Byte]]("data"), UTF_8) == "blob-4/2/1.png")
@@ -198,8 +198,8 @@ class AzureBlobSpec extends SparkTestBase {
       got.unpersist()
 
       // delete-if-exists: both the present and the absent key are error-free
-      val del = AzureBlobStore.delete(Seq("4/2/1.png", "gone.png").toDF("key"),
-        az.endpoint, "tiles", creds)
+      val del = ObjectStore.delete(Seq("4/2/1.png", "gone.png").toDF("key"),
+        AzureBlobStore.Container(az.endpoint, "tiles", creds))
       assert(del.where(col("error").isNotNull).count() == 0)
       assert(!az.store.containsKey("4/2/1.png"))
     }
@@ -210,13 +210,13 @@ class AzureBlobSpec extends SparkTestBase {
     import s.implicits._
     withAzure { az =>
       val keys = for (z <- Seq(5, 6); i <- 0 until 7) yield s"$z/0/$i.png"
-      val put = AzureBlobStore.put(
+      val put = ObjectStore.put(
         keys.toDF("key").withColumn("data", col("key").cast("binary")),
-        az.endpoint, "tiles", creds)
+        AzureBlobStore.Container(az.endpoint, "tiles", creds))
       assert(put.where(col("error").isNotNull).count() == 0)
 
-      val listed = AzureBlobStore.list(Seq("5/", "6/").toDF("prefix"),
-        az.endpoint, "tiles", creds, maxResults = 3).cache()
+      val listed = ObjectStore.list(Seq("5/", "6/").toDF("prefix"),
+        AzureBlobStore.Container(az.endpoint, "tiles", creds), pageSize = 3).cache()
       assert(listed.count() == 14)
       assert(listed.select("key").as[String].collect().toSet == keys.toSet)
       assert(listed.where(col("prefix") === "6/").count() == 7)
@@ -230,25 +230,26 @@ class AzureBlobSpec extends SparkTestBase {
     import s.implicits._
     withAzure { az =>
       val keys = Seq("7/a&b.png", "7/c<d>.png", "7/plain.png")
-      val put = AzureBlobStore.put(
+      val put = ObjectStore.put(
         keys.toDF("key").withColumn("data", col("key").cast("binary")),
-        az.endpoint, "tiles", creds)
+        AzureBlobStore.Container(az.endpoint, "tiles", creds))
       assert(put.where(col("error").isNotNull).count() == 0)
 
-      // maxResults=1: the NextMarker itself is an escaped name — the
+      // pageSize=1: the NextMarker itself is an escaped name — the
       // client must unescape it before sending it back
-      val listed = AzureBlobStore.list(Seq("7/").toDF("prefix"),
-        az.endpoint, "tiles", creds, maxResults = 1).cache()
+      val listed = ObjectStore.list(Seq("7/").toDF("prefix"),
+        AzureBlobStore.Container(az.endpoint, "tiles", creds), pageSize = 1).cache()
       assert(listed.select("key").as[String].collect().toSet == keys.toSet)
-      val refetch = AzureBlobStore.fetch(listed.select("key"), az.endpoint, "tiles", creds)
+      val refetch = ObjectStore.fetch(listed.select("key"),
+        AzureBlobStore.Container(az.endpoint, "tiles", creds))
       assert(refetch.count() == 3 && refetch.where(col("error").isNotNull).count() == 0)
       listed.unpersist()
 
       // zero-length blobs: Content-Length: 0 sent, CL line empty in the
       // signature (2015-02-21+ rule) — fixture 411s when CL is missing
-      val empty = AzureBlobStore.put(
+      val empty = ObjectStore.put(
         Seq(("z.png", Array.emptyByteArray), ("zn.png", null)).toDF("key", "data"),
-        az.endpoint, "tiles", creds)
+        AzureBlobStore.Container(az.endpoint, "tiles", creds))
       assert(empty.where(col("error").isNotNull).count() == 0)
       assert(az.store.get("z.png")._1.isEmpty && az.store.get("zn.png")._1.isEmpty)
       assert(az.authFailures == 0, "zero-length CL-line signing matches server re-derivation")
@@ -261,12 +262,15 @@ class AzureBlobSpec extends SparkTestBase {
     withAzure { az =>
       val bad = creds.copy(accountKeyB64 =
         java.util.Base64.getEncoder.encodeToString("wrong-key".getBytes(UTF_8)))
-      val r = AzureBlobStore.fetch(Seq("a.png").toDF("key"), az.endpoint, "tiles", bad).collect()
+      val r = ObjectStore.fetch(Seq("a.png").toDF("key"),
+        AzureBlobStore.Container(az.endpoint, "tiles", bad)).collect()
       assert(r.length == 1 && r(0).getAs[String]("error").contains("403"))
+      assert(r(0).getAs[String]("error").startsWith("az://tiles/a.png\n"))
     }
     val dead = { val ss = new java.net.ServerSocket(0); val p = ss.getLocalPort; ss.close(); p }
-    val got = AzureBlobStore.fetch(Seq("a.png").toDF("key"),
-      s"http://127.0.0.1:$dead", "tiles", creds, timeoutMs = 500).collect()
+    val got = ObjectStore.fetch(Seq("a.png").toDF("key"),
+      AzureBlobStore.Container(s"http://127.0.0.1:$dead", "tiles", creds), timeoutMs = 500).collect()
     assert(got.length == 1 && got(0).getAs[String]("error") != null)
+    assert(got(0).getAs[String]("error").startsWith("az://tiles/a.png\n"))
   }
 }

@@ -176,20 +176,21 @@ class S3StoreSpec extends SparkTestBase {
         .withColumn("data", concat(lit("png-"), col("key")).cast("binary"))
         .withColumn("ct", lit("image/png"))
 
-      val put = S3Store.put(tiles, s3.endpoint, "tiles", creds,
+      val put = ObjectStore.put(tiles, S3Store.Bucket(s3.endpoint, "tiles", creds),
         contentTypeCol = Some("ct"), cacheControl = Some("max-age=3600"))
       assert(put.where(col("error").isNotNull).count() == 0)
       assert(s3.store.size() == 12)
       assert(s3.authFailures == 0, "every request passed server-side SigV4 re-derivation")
 
       // contains: HEAD true/false
-      val ex = S3Store.contains(Seq("4/1/0.png", "9/9/9.png").toDF("key"), s3.endpoint, "tiles", creds)
+      val ex = ObjectStore.contains(Seq("4/1/0.png", "9/9/9.png").toDF("key"),
+        S3Store.Bucket(s3.endpoint, "tiles", creds))
         .select("key", "exists").as[(String, Boolean)].collect().toMap
       assert(ex("4/1/0.png") && !ex("9/9/9.png"))
 
       // fetch: 404 rows dropped (s3.py:68-69), others carry data + headers
       val req = (Seq("4/1/0.png", "4/3/2.png") ++ Seq("nope.png")).toDF("key")
-      val got = S3Store.fetch(req, s3.endpoint, "tiles", creds).cache()
+      val got = ObjectStore.fetch(req, S3Store.Bucket(s3.endpoint, "tiles", creds)).cache()
       assert(got.count() == 2, "the 404 row is dropped like the reference's None")
       val one = got.where(col("key") === "4/3/2.png").head()
       assert(new String(one.getAs[Array[Byte]]("data"), UTF_8) == "png-4/3/2.png")
@@ -198,7 +199,8 @@ class S3StoreSpec extends SparkTestBase {
       got.unpersist()
 
       // delete then gone
-      assert(S3Store.delete(Seq("4/1/0.png").toDF("key"), s3.endpoint, "tiles", creds)
+      assert(ObjectStore.delete(Seq("4/1/0.png").toDF("key"),
+        S3Store.Bucket(s3.endpoint, "tiles", creds))
         .where(col("error").isNotNull).count() == 0)
       assert(!s3.store.containsKey("4/1/0.png"))
     }
@@ -210,13 +212,13 @@ class S3StoreSpec extends SparkTestBase {
     withS3 { s3 =>
       // 2 zoom prefixes x 7 keys, page size 3 -> 3 pages per prefix
       val keys = for (z <- Seq(3, 4); i <- 0 until 7) yield s"$z/0/$i.png"
-      val put = S3Store.put(
+      val put = ObjectStore.put(
         keys.toDF("key").withColumn("data", col("key").cast("binary")),
-        s3.endpoint, "tiles", creds)
+        S3Store.Bucket(s3.endpoint, "tiles", creds))
       assert(put.where(col("error").isNotNull).count() == 0)
 
-      val listed = S3Store.list(Seq("3/", "4/").toDF("prefix"),
-        s3.endpoint, "tiles", creds, maxKeys = 3).cache()
+      val listed = ObjectStore.list(Seq("3/", "4/").toDF("prefix"),
+        S3Store.Bucket(s3.endpoint, "tiles", creds), pageSize = 3).cache()
       assert(listed.count() == 14)
       assert(listed.where(col("prefix") === "3/").count() == 7)
       assert(listed.select("key").as[String].collect().toSet == keys.toSet)
@@ -232,19 +234,20 @@ class S3StoreSpec extends SparkTestBase {
     withS3 { s3 =>
       // keys with XML-significant characters (all legal S3 key bytes)
       val keys = Seq("4/a&b.png", "4/c<d>.png", "4/plain.png")
-      val put = S3Store.put(
+      val put = ObjectStore.put(
         keys.toDF("key").withColumn("data", col("key").cast("binary")),
-        s3.endpoint, "tiles", creds)
+        S3Store.Bucket(s3.endpoint, "tiles", creds))
       assert(put.where(col("error").isNotNull).count() == 0)
 
-      // maxKeys=1 forces marker continuation THROUGH an escaped key —
+      // pageSize=1 forces marker continuation THROUGH an escaped key —
       // an escaped marker would mis-page; an escaped output key would
       // 404 on re-fetch
-      val listed = S3Store.list(Seq("4/").toDF("prefix"),
-        s3.endpoint, "tiles", creds, maxKeys = 1).cache()
+      val listed = ObjectStore.list(Seq("4/").toDF("prefix"),
+        S3Store.Bucket(s3.endpoint, "tiles", creds), pageSize = 1).cache()
       assert(listed.select("key").as[String].collect().toSet == keys.toSet,
         "keys come back unescaped")
-      val refetch = S3Store.fetch(listed.select("key"), s3.endpoint, "tiles", creds)
+      val refetch =
+        ObjectStore.fetch(listed.select("key"), S3Store.Bucket(s3.endpoint, "tiles", creds))
       assert(refetch.count() == 3, "every listed key re-fetches (no silent 404 drop)")
       assert(refetch.where(col("error").isNotNull).count() == 0)
       listed.unpersist()
@@ -259,10 +262,11 @@ class S3StoreSpec extends SparkTestBase {
       // (like real S3) answers 411 when Content-Length is missing
       val rows = Seq(("e.png", Array.emptyByteArray), ("n.png", null))
         .toDF("key", "data")
-      val put = S3Store.put(rows, s3.endpoint, "tiles", creds)
+      val put = ObjectStore.put(rows, S3Store.Bucket(s3.endpoint, "tiles", creds))
       assert(put.where(col("error").isNotNull).count() == 0)
       assert(s3.store.get("e.png")._1.isEmpty && s3.store.get("n.png")._1.isEmpty)
-      val got = S3Store.fetch(Seq("e.png").toDF("key"), s3.endpoint, "tiles", creds).head()
+      val got = ObjectStore.fetch(Seq("e.png").toDF("key"),
+        S3Store.Bucket(s3.endpoint, "tiles", creds)).head()
       assert(got.getAs[Array[Byte]]("data").isEmpty && got.getAs[String]("error") == null)
     }
   }
@@ -272,16 +276,19 @@ class S3StoreSpec extends SparkTestBase {
     import s.implicits._
     // dead port
     val dead = { val ss = new java.net.ServerSocket(0); val p = ss.getLocalPort; ss.close(); p }
-    val got = S3Store.fetch(Seq("a.png").toDF("key"), s"http://127.0.0.1:$dead", "tiles", creds,
-      timeoutMs = 500).collect()
+    val got = ObjectStore.fetch(Seq("a.png").toDF("key"),
+      S3Store.Bucket(s"http://127.0.0.1:$dead", "tiles", creds), timeoutMs = 500).collect()
     assert(got.length == 1 && got(0).getAs[String]("error") != null)
+    assert(got(0).getAs[String]("error").startsWith("s3://tiles/a.png\n"))
 
     // wrong secret -> fixture 403s; fetch surfaces the error, no drop, no task failure
     withS3 { s3 =>
       val bad = creds.copy(secretKey = "wrong")
-      val r = S3Store.fetch(Seq("a.png").toDF("key"), s3.endpoint, "tiles", bad).collect()
+      val r = ObjectStore.fetch(Seq("a.png").toDF("key"),
+        S3Store.Bucket(s3.endpoint, "tiles", bad)).collect()
       assert(r.length == 1)
       assert(r(0).getAs[String]("error").contains("403"))
+      assert(r(0).getAs[String]("error").startsWith("s3://tiles/a.png\n"))
     }
   }
 }
