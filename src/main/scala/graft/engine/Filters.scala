@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -171,8 +173,30 @@ object Filters {
 
   private val gzipUdf = udf((data: Array[Byte]) =>
     if (data == null) null else ImageCodec.gzip(data))
+  /** null when the payload is null or not gzip. */
   private val gunzipUdf = udf((data: Array[Byte]) =>
-    if (data == null) null else ImageCodec.gunzip(data))
+    if (data == null) null
+    else try ImageCodec.gunzip(data) catch { case NonFatal(_) => null })
+
+  /** `df` with `data` replaced by `value` in one select. A row whose
+    * non-null `data` becomes null gets `message` in `error` (appended
+    * when `df` has none) unless it already has an error; `also`
+    * rewrites other columns in the same select. `value` is one common
+    * subexpression of `data` and `error`, so each row computes it once
+    * (with whole-stage codegen on and off). */
+  private def replaceData(df: DataFrame, value: Column, message: String,
+      also: Map[String, Column] = Map.empty): DataFrame = {
+    val hasError = df.columns.contains("error")
+    val prior = if (hasError) col("error") else lit(null: String)
+    val error = when(value.isNull && col("data").isNotNull && prior.isNull, lit(message))
+      .otherwise(prior).as("error")
+    val cols = df.columns.toSeq.map {
+      case "data" => value.as("data")
+      case "error" => error
+      case c => also.get(c).fold(col(c))(_.as(c))
+    }
+    df.select((if (hasError) cols else cols :+ error): _*)
+  }
 
   /** GzipCompressor (reference filter/gzip_.py:7-29). */
   def gzipCompress(df: DataFrame): DataFrame =
@@ -185,16 +209,18 @@ object Filters {
         when(col("content_encoding").isNull, lit("gzip"))
           .otherwise(col("content_encoding")))
 
-  /** GzipDecompressor (reference filter/gzip_.py:32-38). */
-  def gzipDecompress(df: DataFrame): DataFrame =
-    df.withColumn(
-        "data",
-        when(col("content_encoding") === "gzip", gunzipUdf(col("data")))
-          .otherwise(col("data")))
-      .withColumn(
-        "content_encoding",
-        when(col("content_encoding") === "gzip", lit(null: String))
-          .otherwise(col("content_encoding")))
+  /** GzipDecompressor (reference filter/gzip_.py:32-38). A `gzip`
+    * payload that does not decompress gets a null `data`, keeps its
+    * `content_encoding` and gets an `error` (the column is appended
+    * when the input has none); an existing error is kept. */
+  def gzipDecompress(df: DataFrame): DataFrame = {
+    val gzip = col("content_encoding") === "gzip"
+    val data = when(gzip, gunzipUdf(col("data"))).otherwise(col("data"))
+    val failed = data.isNull && col("data").isNotNull
+    replaceData(df, data, "gzip decompression failed",
+      Map("content_encoding" ->
+        when(gzip && !failed, lit(null: String)).otherwise(col("content_encoding"))))
+  }
 
   /** ImageFormatConverter (reference filter/image.py:17-41): re-encode
     * to the target content type; conversion failures land in the error
@@ -235,19 +261,10 @@ object Filters {
         try ImageCodec.optimizePng(data)
         catch { case _: Exception => null }
     }
-    df.withColumn(
-        "optimized",
-        when(col("content_type") === "image/png" && col("error").isNull,
-          optUdf(col("data")))
-          .otherwise(col("data")))
-      .withColumn(
-        "error",
-        when(
-          col("error").isNull && col("data").isNotNull && col("optimized").isNull,
-          lit("png optimization failed"))
-          .otherwise(col("error")))
-      .withColumn("data", col("optimized"))
-      .drop("optimized")
+    replaceData(df,
+      when(col("content_type") === "image/png" && col("error").isNull, optUdf(col("data")))
+        .otherwise(col("data")),
+      "png optimization failed")
   }
 
   /** Named convolution kernels analogous to PIL's ImageFilter constants
@@ -286,14 +303,6 @@ object Filters {
             dst, ImageCodec.formatOf(if (ct == null) "image/png" else ct))
         } catch { case _: Exception => null }
     }
-    df.withColumn("filtered", filterUdf(col("data"), col("content_type")))
-      .withColumn(
-        "error",
-        when(
-          col("error").isNull && col("data").isNotNull && col("filtered").isNull,
-          lit(s"image filter $kernel failed"))
-          .otherwise(col("error")))
-      .withColumn("data", col("filtered"))
-      .drop("filtered")
+    replaceData(df, filterUdf(col("data"), col("content_type")), s"image filter $kernel failed")
   }
 }

@@ -1,15 +1,15 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.image.ImageCodec
+import graft.sql.RowOp
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata, processed in partition-sized batches
-  * (the Scala analogue of `mapInPandas` batch UDFs). The image path is
-  * REAL (javax.imageio decode/resize), audio metadata is REAL
+  * columns with typed metadata, each extractor one row operator (the
+  * Scala analogue of `mapInPandas` UDFs). The image path is REAL
+  * (javax.imageio decode/resize), audio metadata is REAL
   * (javax.sound WAV/AIFF/AU header parsing), and video metadata +
   * frame byte ranges are REAL (a from-scratch parse of the public ISO
   * BMFF / MP4 box structure — mvhd v0/v1, stsz, stco/co64, stsc).
@@ -17,8 +17,18 @@ import graft.image.ImageCodec
   * stays out of scope (no such codec exists in this container);
   * [[frameSampleStub]] remains as the documented fallback shape for
   * containers with no in-JVM parser.
+  *
+  * Every extractor is one [[graft.sql.RowOp]] over `media`: the output
+  * is `media_id` followed by the extractor's schema, and a row the body
+  * throws on gets its `error`, or is dropped when the schema has none.
   */
 object Multimodal {
+
+  /** `media_id` followed by `schema`'s other fields, from `body` over
+    * each row's `reads` columns. */
+  private def extract(media: DataFrame, schema: StructType, reads: Seq[String] = Seq("bytes"))(
+      body: Row => IterableOnce[Seq[Any]]): DataFrame =
+    RowOp(media, reads, schema.fields.toSeq.tail, keep = Some(Seq("media_id")))(body)
 
   val imageMetaSchema: StructType = StructType(Seq(
     StructField("media_id", StringType),
@@ -27,26 +37,14 @@ object Multimodal {
     StructField("content_type", StringType),
     StructField("error", StringType)))
 
-  /** Real image decode: per-partition batch, one ImageIO reader loop —
-    * dimensions + sniffed content type; failures land in the error
-    * column. */
-  def imageMeta(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        val bytes = r.getAs[Array[Byte]](bIdx)
-        try {
-          val img = ImageCodec.decode(bytes)
-          Row(id, img.getWidth, img.getHeight,
-            ImageCodec.sniffContentType(bytes).orNull, null)
-        } catch {
-          case e: Exception => Row(id, null, null, null, e.toString)
-        }
-      }
-    }(Encoders.row(imageMetaSchema))
-  }
+  /** Real image decode (ImageIO) — dimensions + sniffed content type;
+    * failures land in the error column. */
+  def imageMeta(media: DataFrame): DataFrame =
+    extract(media, imageMetaSchema) { r =>
+      val bytes = r.getAs[Array[Byte]](0)
+      val img = ImageCodec.decode(bytes)
+      Some(Seq(img.getWidth, img.getHeight, ImageCodec.sniffContentType(bytes).orNull, null))
+    }
 
   val imagePhashSchema: StructType = StructType(Seq(
     StructField("media_id", StringType),
@@ -54,8 +52,8 @@ object Multimodal {
     StructField("error", StringType)))
 
   /** 64-bit DCT perceptual hash per image ([[graft.image.Phash]]):
-    * decode → luma 32×32 → DCT → median-threshold 8×8 block. Same
-    * partition-batch + error-column shape as [[imageMeta]]; pair
+    * decode → luma 32×32 → DCT → median-threshold 8×8 block. One
+    * [[graft.sql.RowOp]] like [[imageMeta]]; pair
     * generation over the output is [[graft.dedup.Dedup.phashPairs]]
     * (hamming-banded join — hashes shuffle, pixels never do). */
   def imagePhash(media: DataFrame): DataFrame = imageHash64(media, "phash")
@@ -65,18 +63,9 @@ object Multimodal {
     * so [[graft.dedup.Dedup.phashPairs]] composes with every algo. */
   def imageHash64(media: DataFrame, algo: String): DataFrame = {
     require(Seq("phash", "dhash", "ahash").contains(algo), algo)
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        try {
-          Row(id, graft.image.Phash.hashOf(r.getAs[Array[Byte]](bIdx), algo), null)
-        } catch {
-          case e: Exception => Row(id, null, e.toString)
-        }
-      }
-    }(Encoders.row(imagePhashSchema))
+    extract(media, imagePhashSchema) { r =>
+      Some(Seq(graft.image.Phash.hashOf(r.getAs[Array[Byte]](0), algo), null))
+    }
   }
 
   val imagePhash256Schema: StructType = StructType(Seq(
@@ -92,47 +81,32 @@ object Multimodal {
     * 256/(t+1)-bit band keys keep buckets O(1) where 64-bit keys are
     * measured candidate-quadratic (BENCH/DEDUP_SCALE.md). Same
     * error-column shape as [[imagePhash]]. */
-  def imagePhash256(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        try {
-          Row(id, graft.image.Phash.phash256Of(r.getAs[Array[Byte]](bIdx)).toSeq, null)
-        } catch {
-          case e: Exception => Row(id, null, e.toString)
-        }
-      }
-    }(Encoders.row(imagePhash256Schema))
-  }
+  def imagePhash256(media: DataFrame): DataFrame =
+    extract(media, imagePhash256Schema) { r =>
+      Some(Seq(graft.image.Phash.phash256Of(r.getAs[Array[Byte]](0)), null))
+    }
 
-  /** Real image resize (area-preserving scale to `target` max edge). */
+  /** Real image resize (area-preserving scale to `target` max edge);
+    * undecodable rows are dropped. */
   def resizeImages(media: DataFrame, target: Int): DataFrame = {
     val schema = StructType(Seq(
       StructField("media_id", StringType),
       StructField("bytes", BinaryType),
       StructField("w", IntegerType),
       StructField("h", IntegerType)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        try {
-          val img = ImageCodec.decode(r.getAs[Array[Byte]](bIdx))
-          val scale = target.toDouble / math.max(img.getWidth, img.getHeight)
-          val (w, h) =
-            (math.max(1, (img.getWidth * scale).toInt),
-              math.max(1, (img.getHeight * scale).toInt))
-          val out = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = out.createGraphics()
-          g.drawImage(img, 0, 0, w, h, null)
-          g.dispose()
-          Some(Row(r.getString(idIdx), ImageCodec.encode(out, "png"), w, h))
-        } catch { case _: Exception => None }
-      }
-    }(Encoders.row(schema))
+    extract(media, schema) { r =>
+      val img = ImageCodec.decode(r.getAs[Array[Byte]](0))
+      val scale = target.toDouble / math.max(img.getWidth, img.getHeight)
+      val (w, h) =
+        (math.max(1, (img.getWidth * scale).toInt),
+          math.max(1, (img.getHeight * scale).toInt))
+      val out = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g = out.createGraphics()
+      g.drawImage(img, 0, 0, w, h, null)
+      g.dispose()
+      Some(Seq(ImageCodec.encode(out, "png"), w, h))
+    }
   }
 
   val audioMetaSchema: StructType = StructType(Seq(
@@ -146,32 +120,20 @@ object Multimodal {
   /** REAL audio metadata extraction: WAV/AIFF/AU header parsing via
     * `javax.sound.sampled.AudioSystem` (pure JDK, no external codec) —
     * duration from frame count / frame rate, plus rate/channels/
-    * encoding. Same partition-batch + error-column shape as
-    * [[imageMeta]]; unparseable bytes land in `error`, never throw. */
-  def audioMeta(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        val bytes = r.getAs[Array[Byte]](bIdx)
-        try {
-          val aff = javax.sound.sampled.AudioSystem.getAudioFileFormat(
-            new java.io.ByteArrayInputStream(bytes))
-          val fmt = aff.getFormat
-          val frames = aff.getFrameLength.toLong
-          val durMs =
-            if (frames >= 0 && fmt.getFrameRate > 0)
-              (frames * 1000.0 / fmt.getFrameRate).toLong
-            else -1L
-          Row(id, durMs, fmt.getSampleRate.toInt, fmt.getChannels,
-            fmt.getEncoding.toString, null)
-        } catch {
-          case e: Exception => Row(id, null, null, null, null, e.toString)
-        }
-      }
-    }(Encoders.row(audioMetaSchema))
-  }
+    * encoding. One [[graft.sql.RowOp]] like [[imageMeta]];
+    * unparseable bytes land in `error`, never throw. */
+  def audioMeta(media: DataFrame): DataFrame =
+    extract(media, audioMetaSchema) { r =>
+      val aff = javax.sound.sampled.AudioSystem.getAudioFileFormat(
+        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](0)))
+      val fmt = aff.getFormat
+      val frames = aff.getFrameLength.toLong
+      val durMs =
+        if (frames >= 0 && fmt.getFrameRate > 0)
+          (frames * 1000.0 / fmt.getFrameRate).toLong
+        else -1L
+      Some(Seq(durMs, fmt.getSampleRate.toInt, fmt.getChannels, fmt.getEncoding.toString, null))
+    }
 
   /** Deterministic mono 16-bit PCM WAV of `durationMs` at `sampleRate`
     * (a pure-JDK synthesizer for tests/benchmarks — sine of `freqHz`). */
@@ -362,21 +324,11 @@ object Multimodal {
 
   /** REAL video (MP4) metadata: duration/timescale/frame count from
     * the container tables; no codec involved. */
-  def videoMeta(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        try {
-          val info = parseMp4(r.getAs[Array[Byte]](bIdx))
-          Row(id, info.durationMs, info.timescale, info.frameSizes.length, null)
-        } catch {
-          case e: Exception => Row(id, null, null, null, e.toString)
-        }
-      }
-    }(Encoders.row(videoMetaSchema))
-  }
+  def videoMeta(media: DataFrame): DataFrame =
+    extract(media, videoMetaSchema) { r =>
+      val info = parseMp4(r.getAs[Array[Byte]](0))
+      Some(Seq(info.durationMs, info.timescale, info.frameSizes.length, null))
+    }
 
   /** REAL MP4 frame sampling: every k-th frame's TRUE byte range from
     * stsz + stco/co64 + stsc (samples pack sequentially within each
@@ -391,22 +343,13 @@ object Multimodal {
       StructField("offset", LongType),
       StructField("length", IntegerType),
       StructField("error", StringType)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getString(idIdx)
-        try {
-          val info = parseMp4(r.getAs[Array[Byte]](bIdx))
-          val offsets = info.sampleOffsets
-          (0 until info.frameSizes.length by everyK).map { f =>
-            Row(id, f, offsets(f), info.frameSizes(f).toInt, null)
-          }
-        } catch {
-          case e: Exception => Seq(Row(id, null, null, null, e.toString))
-        }
+    extract(media, schema) { r =>
+      val info = parseMp4(r.getAs[Array[Byte]](0))
+      val offsets = info.sampleOffsets
+      (0 until info.frameSizes.length by everyK).map { f =>
+        Seq(f, offsets(f), info.frameSizes(f).toInt, null)
       }
-    }(Encoders.row(schema))
+    }
   }
 
   /** Deterministic minimal valid MP4 (ftyp + mdat + moov with
@@ -522,32 +465,23 @@ object Multimodal {
     * projection directly above this (e.g. `md5(frame_bytes)`) so the
     * downstream shuffle carries 16-byte digests and frame payloads
     * never leave the partition. */
-  def mp4FrameBytes(media: DataFrame, everyK: Int = 30): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getString(idIdx)
-        val bytes = r.getAs[Array[Byte]](bIdx)
-        try {
-          val info = parseMp4(bytes)
-          val offsets = info.sampleOffsets
-          (0 until info.frameSizes.length by everyK).map { f =>
-            val off = offsets(f).toInt
-            val len = info.frameSizes(f).toInt
-            // copyOfRange silently zero-pads past the array end — a
-            // truncated container would then hash identically to other
-            // truncated files and fabricate near-dup pairs
-            require(off >= 0 && len >= 0 && off + len <= bytes.length,
-              f"frame $f range [$off,${off + len}) outside ${bytes.length}-byte container")
-            Row(id, f, java.util.Arrays.copyOfRange(bytes, off, off + len), null)
-          }
-        } catch {
-          case e: Exception => Seq(Row(id, null, null, e.toString))
-        }
+  def mp4FrameBytes(media: DataFrame, everyK: Int = 30): DataFrame =
+    extract(media, mp4FrameBytesSchema) { r =>
+      val bytes = r.getAs[Array[Byte]](0)
+      val info = parseMp4(bytes)
+      val offsets = info.sampleOffsets
+      // strict (a Range's map), so a bad frame errors the whole row
+      (0 until info.frameSizes.length by everyK).map { f =>
+        val off = offsets(f).toInt
+        val len = info.frameSizes(f).toInt
+        // copyOfRange silently zero-pads past the array end — a
+        // truncated container would then hash identically to other
+        // truncated files and fabricate near-dup pairs
+        require(off >= 0 && len >= 0 && off + len <= bytes.length,
+          f"frame $f range [$off,${off + len}) outside ${bytes.length}-byte container")
+        Seq(f, java.util.Arrays.copyOfRange(bytes, off, off + len), null)
       }
-    }(Encoders.row(mp4FrameBytesSchema))
-  }
+    }
 
   /** STUB video frame sampling for non-MP4 containers — emits every
     * k-th "frame" as a deterministic 8-byte slice reference (offset,
@@ -560,17 +494,11 @@ object Multimodal {
       StructField("frame_idx", IntegerType),
       StructField("offset", LongType),
       StructField("length", IntegerType)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](bIdx)
-        val n = if (bytes == null) 0 else bytes.length / 64
-        (0 until n by everyK).map { f =>
-          Row(r.getString(idIdx), f, f.toLong * 64L, 64)
-        }
-      }
-    }(Encoders.row(schema))
+    extract(media, schema) { r =>
+      val bytes = r.getAs[Array[Byte]](0)
+      val n = if (bytes == null) 0 else bytes.length / 64
+      (0 until n by everyK).map(f => Seq[Any](f, f.toLong * 64L, 64)) // no widening to Long
+    }
   }
 
   // ------------------------------------------------------------------ //
@@ -604,28 +532,16 @@ object Multimodal {
     StructField("lon", DoubleType),
     StructField("error", StringType)))
 
-  /** EXIF fields from a JPEG's APP1 segment, per-partition batch like
-    * the other parsers. Missing tags are nulls (a JPEG without EXIF is
-    * DATA, not an error); structural violations — not a JPEG,
+  /** EXIF fields from a JPEG's APP1 segment, one [[graft.sql.RowOp]]
+    * like the other parsers. Missing tags are nulls (a JPEG without EXIF
+    * is DATA, not an error); structural violations — not a JPEG,
     * truncated TIFF, bad magic — land in the error column. */
-  def exifMeta(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        val bytes = r.getAs[Array[Byte]](bIdx)
-        try {
-          val e = parseExif(bytes)
-          Row(id, e.orientation.map(Int.box).orNull, e.model.orNull,
-            e.takenAt.orNull, e.lat.map(Double.box).orNull,
-            e.lon.map(Double.box).orNull, null)
-        } catch {
-          case e: Exception => Row(id, null, null, null, null, null, e.toString)
-        }
-      }
-    }(Encoders.row(exifMetaSchema))
-  }
+  def exifMeta(media: DataFrame): DataFrame =
+    extract(media, exifMetaSchema) { r =>
+      val e = parseExif(r.getAs[Array[Byte]](0))
+      Some(Seq(e.orientation.map(Int.box).orNull, e.model.orNull, e.takenAt.orNull,
+        e.lat.map(Double.box).orNull, e.lon.map(Double.box).orNull, null))
+    }
 
   /** Orientation, model, dateTime, and GPS position from the first
     * APP1 Exif segment; all-None when the JPEG simply has no EXIF.
@@ -880,37 +796,26 @@ object Multimodal {
     * 2-8 re-encode in the sniffed format. Pixels stay inside the
     * partition — nothing here shuffles. */
   def orientNormalize(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    val oIdx =
-      if (media.schema.fieldNames.contains("orientation"))
-        media.schema.fieldIndex("orientation")
-      else -1
-    media.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getString(idIdx)
-        val bytes = r.getAs[Array[Byte]](bIdx)
-        try {
-          val o =
-            if (oIdx >= 0) { if (r.isNullAt(oIdx)) 1 else r.getInt(oIdx) }
-            else parseExif(bytes).orientation.getOrElse(1)
-          if (o == 1) {
-            val (w, h) = ImageCodec.dimsOf(bytes).getOrElse {
-              val img = ImageCodec.decode(bytes)
-              (img.getWidth, img.getHeight)
-            }
-            Row(id, bytes, w, h, null)
-          } else {
-            val up = ImageCodec.applyOrientation(ImageCodec.decode(bytes), o)
-            val fmt = ImageCodec.formatOf(
-              ImageCodec.sniffContentType(bytes).getOrElse("image/png"))
-            Row(id, ImageCodec.encode(up, fmt), up.getWidth, up.getHeight, null)
-          }
-        } catch {
-          case e: Exception => Row(id, null, null, null, e.toString)
+    val hasOrientation = media.schema.fieldNames.contains("orientation")
+    extract(media, orientNormalizeSchema,
+        if (hasOrientation) Seq("bytes", "orientation") else Seq("bytes")) { r =>
+      val bytes = r.getAs[Array[Byte]](0)
+      val o =
+        if (hasOrientation) { if (r.isNullAt(1)) 1 else r.getInt(1) }
+        else parseExif(bytes).orientation.getOrElse(1)
+      if (o == 1) {
+        val (w, h) = ImageCodec.dimsOf(bytes).getOrElse {
+          val img = ImageCodec.decode(bytes)
+          (img.getWidth, img.getHeight)
         }
+        Some(Seq(bytes, w, h, null))
+      } else {
+        val up = ImageCodec.applyOrientation(ImageCodec.decode(bytes), o)
+        val fmt = ImageCodec.formatOf(
+          ImageCodec.sniffContentType(bytes).getOrElse("image/png"))
+        Some(Seq(ImageCodec.encode(up, fmt), up.getWidth, up.getHeight, null))
       }
-    }(Encoders.row(orientNormalizeSchema))
+    }
   }
 
   val pixelRowsSchema: StructType = StructType(Seq(
@@ -926,26 +831,19 @@ object Multimodal {
     * oracles (q79), per-channel stats, rasterize round-trips. Row
     * volume is w·h per image, so this belongs after a crop/resize
     * stage, not on raw corpus rasters. */
-  def pixelRows(media: DataFrame): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getString(idIdx)
-        // undecodable/null payloads (e.g. an upstream error row with
-        // bytes = null) contribute zero pixel rows rather than failing
-        // the task — the resizeImages skip posture; callers that need
-        // the error detail read it off the upstream operator's column
-        try {
-          val img = ImageCodec.decode(r.getAs[Array[Byte]](bIdx))
-          val w = img.getWidth
-          val px = img.getRGB(0, 0, w, img.getHeight, null, 0, w)
-          px.indices.iterator.map { i =>
-            val p = px(i)
-            Row(id, i % w, i / w, (p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
-          }
-        } catch { case _: Exception => Iterator.empty }
+  def pixelRows(media: DataFrame): DataFrame =
+    // undecodable/null payloads (e.g. an upstream error row with
+    // bytes = null) contribute zero pixel rows rather than failing the
+    // task — the resizeImages skip posture (the schema has no `error`);
+    // callers that need the error detail read it off the upstream
+    // operator's column
+    extract(media, pixelRowsSchema) { r =>
+      val img = ImageCodec.decode(r.getAs[Array[Byte]](0))
+      val w = img.getWidth
+      val px = img.getRGB(0, 0, w, img.getHeight, null, 0, w)
+      px.indices.iterator.map { i =>
+        val p = px(i)
+        Seq(i % w, i / w, (p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
       }
-    }(Encoders.row(pixelRowsSchema))
-  }
+    }
 }

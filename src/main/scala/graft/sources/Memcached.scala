@@ -4,8 +4,12 @@ import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+import graft.sql.RowOp
 
 /** Memcached tile cache — the Spark-native MemcachedTileStore
   * (reference store/memcached.py:7-44 over the from-scratch text
@@ -165,10 +169,10 @@ object MemcachedStore {
       hosts: Seq[(String, Int)],
       keyCol: String = "key",
       timeoutMs: Int = 30000): DataFrame =
-    perPartition(df, hosts, keyCol, timeoutMs, getFields) { (client, key) =>
-      val (flags, value, cas) = client.get(key)
+    perPartition(df, hosts, Seq(keyCol), timeoutMs, getFields) { (client, r) =>
+      val (flags, value, cas) = client.get(r.getString(0))
       Seq(value.orNull, flags.map(Int.box).orNull, cas.map(Long.box).orNull, null)
-    } { (e, _) => Seq(null, null, null, e) }
+    }
 
   private val putFields = Seq(StructField("error", StringType))
 
@@ -181,23 +185,11 @@ object MemcachedStore {
       dataCol: String = "data",
       flags: Int = 0,
       exptime: Int = 0,
-      timeoutMs: Int = 30000): DataFrame = {
-    require(hosts.nonEmpty, "memcached: at least one host")
-    val dataIdx = df.schema.fieldIndex(dataCol)
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ putFields)
-    df.mapPartitions { it =>
-      withClients(hosts, timeoutMs) { pool =>
-        it.map { r =>
-          val key = r.getString(keyIdx)
-          val res =
-            try { pool.clientFor(key).set(key, flags, exptime, r.getAs[Array[Byte]](dataIdx)); null }
-            catch { case e: Exception => pool.evict(key); s"memcached: $key\n$e" }
-          Row.fromSeq(r.toSeq :+ res)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+      timeoutMs: Int = 30000): DataFrame =
+    perPartition(df, hosts, Seq(keyCol, dataCol), timeoutMs, putFields) { (client, r) =>
+      client.set(r.getString(0), flags, exptime, r.getAs[Array[Byte]](1))
+      Seq(null)
+    }
 
   private val delFields = Seq(
     StructField("deleted", BooleanType),
@@ -209,89 +201,55 @@ object MemcachedStore {
       hosts: Seq[(String, Int)],
       keyCol: String = "key",
       timeoutMs: Int = 30000): DataFrame =
-    perPartition(df, hosts, keyCol, timeoutMs, delFields) { (client, key) =>
-      Seq(Boolean.box(client.delete(key)), null)
-    } { (e, _) => Seq(null, e) }
+    perPartition(df, hosts, Seq(keyCol), timeoutMs, delFields) { (client, r) =>
+      Seq(Boolean.box(client.delete(r.getString(0))), null)
+    }
 
-  /** Shared per-partition client pool + error-channel wrapper. One
-    * lazily-opened connection per distinct shard host per partition;
-    * closed when the partition iterator drains. */
+  /** The one path of fetch, put and delete: a [[graft.sql.RowOp]] over
+    * `df` reading the key (first of `reads`), with one [[Pool]] per
+    * partition. A failed row gets `memcached: <key>\n<throwable>`. */
   private def perPartition(
       df: DataFrame,
       hosts: Seq[(String, Int)],
-      keyCol: String,
+      reads: Seq[String],
       timeoutMs: Int,
-      extraFields: Seq[StructField])(
-      body: (Client, String) => Seq[Any])(
-      onError: (String, String) => Seq[Any]): DataFrame = {
+      fields: Seq[StructField])(
+      body: (Client, Row) => Seq[Any]): DataFrame = {
     require(hosts.nonEmpty, "memcached: at least one host")
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ extraFields)
-    df.mapPartitions { it =>
-      withClients(hosts, timeoutMs) { pool =>
-        it.map { r =>
-          val key = r.getString(keyIdx)
-          val extra =
-            try {
-              // validation failures happen BEFORE any bytes hit the wire:
-              // error-column the row but keep the shard's connection (an
-              // evict here would degrade interleaved-bad-key sweeps to
-              // connect-per-row)
-              checkKey(key)
-              try body(pool.clientFor(key), key)
-              catch {
-                case e: Exception =>
-                  pool.evict(key)
-                  onError(s"memcached: $key\n$e", key)
-              }
-            } catch {
-              case e: IllegalArgumentException =>
-                onError(s"memcached: $key\n$e", key)
-            }
-          Row.fromSeq(r.toSeq ++ extra)
-        }
-      }
-    }(Encoders.row(outSchema))
+    RowOp.perPartition(df, reads, fields, prefix = r => s"memcached: ${r.getString(0)}\n") {
+      () => new Pool(hosts, timeoutMs, body)
+    }
   }
 
-  /** Per-partition connection pool. A failed request leaves the ASCII
-    * stream in an undefined position (e.g. EOF mid-value), so callers
-    * MUST [[evict]] on error — the next row for that shard reconnects
-    * instead of misparsing a desynced reply. */
-  private final class Pool(hosts: Seq[(String, Int)], timeoutMs: Int) {
+  /** One partition's lazily-opened connections, one per distinct shard
+    * host, applying `body` to each row. The operator closes them when
+    * the partition drains and at task completion (a `limit`/`take`
+    * stops pulling mid-iterator); close is idempotent. A failed request
+    * leaves the ASCII stream in an undefined position (e.g. EOF
+    * mid-value), so the shard's connection is evicted — the next row
+    * for that shard reconnects instead of misparsing a desynced reply. */
+  private final class Pool(hosts: Seq[(String, Int)], timeoutMs: Int, body: (Client, Row) => Seq[Any])
+      extends (Row => IterableOnce[Seq[Any]]) with AutoCloseable {
     private val open = scala.collection.mutable.Map.empty[(String, Int), Client]
-    def clientFor(key: String): Client = {
-      val hp = hostFor(key, hosts)
-      open.getOrElseUpdate(hp, new Client(hp._1, hp._2, timeoutMs))
-    }
-    def evict(key: String): Unit =
-      open.remove(hostFor(key, hosts))
-        .foreach(c => try c.close() catch { case _: Exception => () })
-    def closeAll(): Unit = {
-      open.values.foreach(c => try c.close() catch { case _: Exception => () })
-      open.clear()
-    }
-  }
 
-  /** Lazy per-shard connections for one partition. Closed promptly
-    * when the iterator drains AND unconditionally at task completion
-    * (the listener) — a `limit`/`take` stops pulling mid-iterator and
-    * an exception skips the drain path entirely, so drain-close alone
-    * would leak one socket per shard per partition. closeAll is
-    * idempotent, so the double close is safe. */
-  private def withClients[T](hosts: Seq[(String, Int)], timeoutMs: Int)(
-      f: Pool => Iterator[T]): Iterator[T] = {
-    val pool = new Pool(hosts, timeoutMs)
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => pool.closeAll()))
-    val inner = f(pool)
-    new Iterator[T] {
-      def hasNext: Boolean = {
-        val h = inner.hasNext
-        if (!h) pool.closeAll()
-        h
+    def apply(r: Row): IterableOnce[Seq[Any]] = {
+      val key = r.getString(0)
+      // validation failures happen BEFORE any bytes hit the wire: the
+      // row errors but the shard keeps its connection (an evict here
+      // would degrade interleaved-bad-key sweeps to connect-per-row)
+      checkKey(key)
+      val hp = hostFor(key, hosts)
+      try Some(body(open.getOrElseUpdate(hp, new Client(hp._1, hp._2, timeoutMs)), r))
+      catch {
+        case NonFatal(e) =>
+          open.remove(hp).foreach(c => try c.close() catch { case NonFatal(_) => () })
+          throw e
       }
-      def next(): T = inner.next()
+    }
+
+    def close(): Unit = {
+      open.values.foreach(c => try c.close() catch { case NonFatal(_) => () })
+      open.clear()
     }
   }
 }

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
+import graft.sql.RowOp
+
 /** One REST object store (an S3 bucket, an Azure blob container): how
   * to sign a request and read the service's answers. The five tile-store
   * operators are written once, in the companion, over this.
@@ -62,11 +64,22 @@ trait ObjectStore extends Serializable {
   * payloads are born on (GET) or leave from (PUT) the executors, no
   * shuffle is introduced; request concurrency = partition count.
   * Signing is per-row CPU noise next to the network round-trip.
+  *
+  * All but `list` are one [[graft.sql.RowOp]] each: every input column
+  * passes through, and a request that throws puts
+  * `<uri of the key>\n<throwable>` in `error`.
   */
 object ObjectStore {
 
   private def failure(store: ObjectStore, key: String, status: Int, body: Array[Byte]): String =
     s"${store.uri(key)}\n$status: ${new String(body, UTF_8)}"
+
+  /** `body` per row of `df`, reading `keyCol` first and then `more`. */
+  private def perKey(df: DataFrame, store: ObjectStore, keyCol: String, fields: Seq[StructField],
+      more: Seq[String] = Nil)(body: (String, Row) => IterableOnce[Seq[Any]]): DataFrame =
+    RowOp(df, keyCol +: more, fields, prefix = r => s"${store.uri(r.getString(0))}\n") { r =>
+      body(r.getString(0), r)
+    }
 
   private val getFields = Seq(
     StructField("data", BinaryType),
@@ -80,26 +93,15 @@ object ObjectStore {
       df: DataFrame,
       store: ObjectStore,
       keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ getFields)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val key = r.getString(keyIdx)
-        try {
-          val (status, hdrs, body) = store.request("GET", key, Nil, Nil, null, timeoutMs)
-          if (status == 404) None
-          else if (status == 200)
-            Some(Row.fromSeq(r.toSeq ++ Seq(body, hdrs.getOrElse("content-type", null),
-              hdrs.getOrElse("content-encoding", null), null)))
-          else Some(Row.fromSeq(r.toSeq ++ Seq(null, null, null, failure(store, key, status, body))))
-        } catch {
-          case e: Exception =>
-            Some(Row.fromSeq(r.toSeq ++ Seq(null, null, null, s"${store.uri(key)}\n$e")))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+      timeoutMs: Int = 30000): DataFrame =
+    perKey(df, store, keyCol, getFields) { (key, _) =>
+      val (status, hdrs, body) = store.request("GET", key, Nil, Nil, null, timeoutMs)
+      if (status == 404) None
+      else if (status == 200)
+        Some(Seq(body, hdrs.getOrElse("content-type", null),
+          hdrs.getOrElse("content-encoding", null), null))
+      else Some(Seq(null, null, null, failure(store, key, status, body)))
+    }
 
   private val errField = Seq(StructField("error", StringType))
 
@@ -115,28 +117,18 @@ object ObjectStore {
       contentEncodingCol: Option[String] = None,
       cacheControl: Option[String] = None,
       timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val dataIdx = df.schema.fieldIndex(dataCol)
-    val ctIdx = contentTypeCol.map(df.schema.fieldIndex)
-    val ceIdx = contentEncodingCol.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields.toSeq ++ errField)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val err =
-          try {
-            val hdrs = store.putHeaders(
-              ctIdx.flatMap(i => Option(r.getString(i))),
-              ceIdx.flatMap(i => Option(r.getString(i))),
-              cacheControl)
-            // Http.exchange needs a non-null body to send Content-Length
-            val data = Option(r.getAs[Array[Byte]](dataIdx)).getOrElse(Array.emptyByteArray)
-            val (status, _, body) = store.request("PUT", key, Nil, hdrs, data, timeoutMs)
-            if (store.putOk(status)) null else failure(store, key, status, body)
-          } catch { case e: Exception => s"${store.uri(key)}\n$e" }
-        Row.fromSeq(r.toSeq :+ err)
-      }
-    }(Encoders.row(outSchema))
+    val ceAt = 2 + contentTypeCol.size
+    perKey(df, store, keyCol, errField, dataCol +: (contentTypeCol ++ contentEncodingCol).toSeq) {
+      (key, r) =>
+        val hdrs = store.putHeaders(
+          contentTypeCol.flatMap(_ => Option(r.getString(2))),
+          contentEncodingCol.flatMap(_ => Option(r.getString(ceAt))),
+          cacheControl)
+        // Http.exchange needs a non-null body to send Content-Length
+        val data = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
+        val (status, _, body) = store.request("PUT", key, Nil, hdrs, data, timeoutMs)
+        Some(Seq(if (store.putOk(status)) null else failure(store, key, status, body)))
+    }
   }
 
   /** delete_one for every row. */
@@ -144,21 +136,11 @@ object ObjectStore {
       df: DataFrame,
       store: ObjectStore,
       keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ errField)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val err =
-          try {
-            val (status, _, body) = store.request("DELETE", key, Nil, Nil, null, timeoutMs)
-            if (store.deleteOk(status)) null else failure(store, key, status, body)
-          } catch { case e: Exception => s"${store.uri(key)}\n$e" }
-        Row.fromSeq(r.toSeq :+ err)
-      }
-    }(Encoders.row(outSchema))
-  }
+      timeoutMs: Int = 30000): DataFrame =
+    perKey(df, store, keyCol, errField) { (key, _) =>
+      val (status, _, body) = store.request("DELETE", key, Nil, Nil, null, timeoutMs)
+      Some(Seq(if (store.deleteOk(status)) null else failure(store, key, status, body)))
+    }
 
   private val containsFields = Seq(
     StructField("exists", BooleanType),
@@ -169,23 +151,13 @@ object ObjectStore {
       df: DataFrame,
       store: ObjectStore,
       keyCol: String = "key",
-      timeoutMs: Int = 30000): DataFrame = {
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ containsFields)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getString(keyIdx)
-        val extra =
-          try {
-            val (status, _, _) = store.request("HEAD", key, Nil, Nil, null, timeoutMs)
-            if (status == 200) Seq(Boolean.box(true), null)
-            else if (status == 404) Seq(Boolean.box(false), null)
-            else Seq(null, s"${store.uri(key)}\nHEAD $status")
-          } catch { case e: Exception => Seq(null, s"${store.uri(key)}\n$e") }
-        Row.fromSeq(r.toSeq ++ extra)
-      }
-    }(Encoders.row(outSchema))
-  }
+      timeoutMs: Int = 30000): DataFrame =
+    perKey(df, store, keyCol, containsFields) { (key, _) =>
+      val (status, _, _) = store.request("HEAD", key, Nil, Nil, null, timeoutMs)
+      if (status == 200) Some(Seq(true, null))
+      else if (status == 404) Some(Seq(false, null))
+      else Some(Seq(null, s"${store.uri(key)}\nHEAD $status"))
+    }
 
   /** Distributed listing: `prefixes` has one row per key prefix (column
     * `prefix`); each partition pages its own prefixes, `pageSize` keys

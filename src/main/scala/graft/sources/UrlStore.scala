@@ -1,17 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+
+import graft.sql.RowOp
 
 /** HTTP tile fetch — the Spark-native URLTileStore / WMTSTileStore
   * (reference store/url.py:29-70, store/wmts.py:9-26). URL
   * construction is the column forms in [[graft.sql.TileFunctions]]
   * (`templateUrl` / `mirrorUrl` / `wmtsUrl` — mirrorUrl IS the
   * reference's hash(tilecoord)-based layout rotation, url.py:34); this
-  * operator adds the fetch leg as per-partition imperative I/O
-  * (mapPartitions: JDK HttpURLConnection, keep-alive pooled per
-  * executor JVM — network I/O has no declarative Spark form, the one
-  * case the build plan reserves mapPartitions for).
+  * operator adds the fetch leg as per-row imperative I/O in one
+  * [[graft.sql.RowOp]] (JDK HttpURLConnection, keep-alive pooled per
+  * executor JVM — network I/O has no declarative Spark form).
   *
   * get_one semantics (url.py:44-66), faithfully:
   *   - 404 / 204 → the row is DROPPED (the reference returns None)
@@ -48,51 +49,41 @@ object UrlStore {
       headers: Map[String, String] = Map.empty,
       allowsNoContentType: Boolean = false,
       timeoutMs: Int = 30000): DataFrame = {
-    val urlIdx = df.schema.fieldIndex(urlCol)
-    val outSchema = StructType(df.schema.fields.toSeq ++ fetchFields)
     val hdrs = headers.toSeq
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val url = r.getString(urlIdx)
-        fetchOne(url, hdrs, allowsNoContentType, timeoutMs).map {
-          case (data, ct, ce, err) => Row.fromSeq(r.toSeq ++ Seq(data, ct, ce, err))
-        }
-      }
-    }(Encoders.row(outSchema))
+    RowOp(df, Seq(urlCol), fetchFields, prefix = r => s"URL: ${r.getString(0)}\n") { r =>
+      fetchOne(r.getString(0), hdrs, allowsNoContentType, timeoutMs)
+    }
   }
 
   /** One GET with the reference's exact error-channel contract.
     * Returns None for the drop statuses (404/204), else
-    * Some((data, content_type, content_encoding, error)). */
-  private[sources] def fetchOne(
+    * Some(Seq(data, content_type, content_encoding, error)); a failed
+    * exchange throws, and [[fetch]]'s operator puts it in `error`. */
+  private def fetchOne(
       url: String,
       headers: Seq[(String, String)],
       allowsNoContentType: Boolean,
-      timeoutMs: Int): Option[(Array[Byte], String, String, String)] = {
-    try {
-      val (status, reason, hdrs, body) =
-        Http.exchangeFull(url, "GET", headers, null, timeoutMs)
-      if (status == 404 || status == 204) None
-      else {
-        val ct = hdrs.getOrElse("content-type", null)
-        val ce = hdrs.getOrElse("content-encoding", null)
-        if (status < 300) {
-          val statusErr =
-            if (status != 200)
-              s"URL: $url\nUnsupported status code $status: $reason"
-            else null
-          if (ct != null && ct.nonEmpty) {
-            if (ct.startsWith("image/")) Some((body, ct, ce, statusErr))
-            else Some((null, ct, ce, s"URL: $url\n${new String(body, "UTF-8")}"))
-          } else if (allowsNoContentType) Some((body, ct, ce, statusErr))
-          else Some((null, ct, ce, s"URL: $url\nThe Content-Type header is missing"))
-        } else {
-          Some((null, ct, ce,
-            s"URL: $url\n$status: $reason\n${new String(body, "UTF-8")}"))
-        }
+      timeoutMs: Int): Option[Seq[Any]] = {
+    val (status, reason, hdrs, body) =
+      Http.exchangeFull(url, "GET", headers, null, timeoutMs)
+    if (status == 404 || status == 204) None
+    else {
+      val ct = hdrs.getOrElse("content-type", null)
+      val ce = hdrs.getOrElse("content-encoding", null)
+      if (status < 300) {
+        val statusErr =
+          if (status != 200)
+            s"URL: $url\nUnsupported status code $status: $reason"
+          else null
+        if (ct != null && ct.nonEmpty) {
+          if (ct.startsWith("image/")) Some(Seq(body, ct, ce, statusErr))
+          else Some(Seq(null, ct, ce, s"URL: $url\n${new String(body, "UTF-8")}"))
+        } else if (allowsNoContentType) Some(Seq(body, ct, ce, statusErr))
+        else Some(Seq(null, ct, ce, s"URL: $url\nThe Content-Type header is missing"))
+      } else {
+        Some(Seq(null, ct, ce,
+          s"URL: $url\n$status: $reason\n${new String(body, "UTF-8")}"))
       }
-    } catch {
-      case e: Exception => Some((null, null, null, s"URL: $url\n$e"))
     }
   }
 

@@ -47,7 +47,7 @@ object TileMetrics {
   /** `df` under a new metrics node, and the node's counters. */
   def over(df: DataFrame, countErrors: Boolean): (DataFrame, TileMetricsProbe) = {
     val spark = df.sparkSession
-    TileMetricsStrategy.install(spark)
+    GraftStrategy.install(spark)
     val plan = GraftPlanBridge.plan(df)
     val error = if (countErrors) plan.output.find(_.name == "error") else None
     val probe = new TileMetricsProbe(spark.sparkContext)
@@ -103,11 +103,13 @@ case class TileMetricsExec(error: Option[Attribute], probe: TileMetricsProbe, ch
   override protected def withNewChildInternal(c: SparkPlan): TileMetricsExec = copy(child = c)
 }
 
-/** Plans [[TileMetrics]] (the custom-`Strategy` pattern). Installed by
-  * [[TileMetrics.over]], the one builder of the node, on its session. */
-object TileMetricsStrategy extends SparkStrategy {
+/** Plans [[TileMetrics]] and [[RowOp]] (the custom-`Strategy` pattern).
+  * Installed on a session by `TileMetrics.over` and `RowOp.perPartition`. */
+object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TileMetrics(error, probe, child) => TileMetricsExec(error, probe, planLater(child)) :: Nil
+    case RowOp(reads, pass, fields, prefix, open, child) =>
+      RowOpExec(reads, pass, fields, prefix, open, planLater(child)) :: Nil
     case _ => Nil
   }
 

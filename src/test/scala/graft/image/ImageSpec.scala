@@ -139,6 +139,30 @@ class ImageSpec extends SparkTestBase {
     assert(unzipped.getAs[String]("content_encoding") == null)
   }
 
+  test("gzipDecompress routes a payload that is not gzip to the error column") {
+    val s = spark
+    import s.implicits._
+    val data = "tile-bytes-0123456789".getBytes
+    val df = Seq(
+      ("bad", Array[Byte](1, 2, 3, 4, 5), "gzip"),
+      ("good", ImageCodec.gzip(data), "gzip"))
+      .toDF("id", "data", "content_encoding")
+    val out = Filters.gzipDecompress(df)
+    val rows = out.collect().map(r => r.getString(0) -> r).toMap
+    // no error column in: one is appended
+    assert(out.columns.toSeq == Seq("id", "data", "content_encoding", "error"))
+    assert(rows("bad").getAs[String]("error") != null)
+    assert(rows("bad").getAs[String]("content_encoding") == "gzip")
+    assert(rows("good").getAs[String]("error") == null)
+    assert(rows("good").getAs[Array[Byte]]("data").sameElements(data))
+    assert(rows("good").getAs[String]("content_encoding") == null)
+    // an existing error is kept as it is
+    val upstream = Filters.gzipDecompress(
+      df.withColumn("error", org.apache.spark.sql.functions.lit("upstream")))
+    assert(upstream.columns.toSeq == Seq("id", "data", "content_encoding", "error"))
+    assert(upstream.collect().forall(_.getAs[String]("error") == "upstream"))
+  }
+
   test("optiPng shrinks or passes through, pixels bit-identical (ref filter/optipng.py)") {
     val img = ImageCodec.gradientImage(32, 7L)
     val png = ImageCodec.encode(img, "png")

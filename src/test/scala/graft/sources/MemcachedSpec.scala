@@ -183,6 +183,15 @@ class MemcachedSpec extends SparkTestBase {
       res.unpersist()
       assert(srv.opened.get() - before <= 1,
         s"bad keys must not churn connections: ${srv.opened.get() - before} opens")
+
+      // the same on put: bad keys are rejected before a connection opens
+      val beforePut = srv.opened.get()
+      val putMixed = MemcachedStore.put(
+        mixed.toDF("key").withColumn("data", col("key").cast("binary")).coalesce(1), hosts).cache()
+      assert(putMixed.where(col("error").isNotNull).count() == 10)
+      putMixed.unpersist()
+      assert(srv.opened.get() - beforePut <= 1,
+        s"bad keys must not churn connections on put: ${srv.opened.get() - beforePut} opens")
     }
   }
 

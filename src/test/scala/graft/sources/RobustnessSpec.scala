@@ -57,4 +57,38 @@ class RobustnessSpec extends SparkTestBase {
       assert(out.where(col("error").isNull).count() === 0L)
     }
   }
+
+  test("every multimodal extractor routes garbage and null bytes to the error column or drops them") {
+    import graft.multimodal.Multimodal
+    val s = spark
+    import s.implicits._
+    val junk = Seq(
+      ("m1", Array.tabulate[Byte](64)(i => (i * 13).toByte)),
+      ("m2", Array.emptyByteArray),
+      ("m3", "RIFF\u0000\u0000\u0000\u0000WAVE".getBytes("ISO-8859-1")),
+      ("m4", "ftyp".getBytes("UTF-8")),
+      ("m5", null: Array[Byte]))
+      .toDF("media_id", "bytes")
+    val withError = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "imageMeta" -> Multimodal.imageMeta,
+      "audioMeta" -> Multimodal.audioMeta,
+      "videoMeta" -> Multimodal.videoMeta,
+      "imagePhash" -> Multimodal.imagePhash,
+      "exifMeta" -> Multimodal.exifMeta,
+      "dhash" -> (Multimodal.imageHash64(_, "dhash")),
+      "ahash" -> (Multimodal.imageHash64(_, "ahash")),
+      "imagePhash256" -> Multimodal.imagePhash256,
+      "mp4FrameSample" -> (Multimodal.mp4FrameSample(_)),
+      "mp4FrameBytes" -> (Multimodal.mp4FrameBytes(_)),
+      "orientNormalize" -> Multimodal.orientNormalize)
+    for ((name, op) <- withError) {
+      val out = op(junk).collect()
+      assert(out.length === 5, name)
+      assert(out.map(_.getAs[String]("media_id")).toSet === Set("m1", "m2", "m3", "m4", "m5"), name)
+      assert(out.forall(_.getAs[String]("error") != null), name)
+    }
+    // no error column: bad rows are dropped
+    assert(Multimodal.resizeImages(junk, 8).count() === 0L)
+    assert(Multimodal.pixelRows(junk).count() === 0L)
+  }
 }
