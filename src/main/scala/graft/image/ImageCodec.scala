@@ -4,6 +4,10 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
+import scala.util.Try
+
+import graft.core.ByteSlice
+
 /** Deterministic JVM image codecs (javax.imageio): PNG is lossless and
   * used for bit-exact fixtures; JPEG is the lossy path guarded by the
   * PSNR >= 40 dB invariant. All functions are pure and executor-safe
@@ -175,40 +179,49 @@ object ImageCodec {
     * [[graft.multimodal.Multimodal.orientNormalize]]'s orientation-1
     * rows, the dominant case in a real photo corpus) report dims at
     * header-peek cost instead of decoding the raster. The JPEG walk
-    * skips APP/COM segments, so EXIF-carrying files resolve too. */
+    * skips APP/COM segments, so EXIF-carrying files resolve too; a
+    * header it cannot read is None. */
   def dimsOf(data: Array[Byte]): Option[(Int, Int)] = {
-    if (data.length >= 24 && (data(0) & 0xff) == 0x89 && data(1) == 'P')
+    val s = ByteSlice(data)
+    if (data.length >= 24 && s.u8(0) == 0x89 && s.u8(1) == 'P')
       // PNG: IHDR is mandated first; width/height big-endian at 16/20
-      Some((
-        ((data(16) & 0xff) << 24) | ((data(17) & 0xff) << 16) |
-          ((data(18) & 0xff) << 8) | (data(19) & 0xff),
-        ((data(20) & 0xff) << 24) | ((data(21) & 0xff) << 16) |
-          ((data(22) & 0xff) << 8) | (data(23) & 0xff)))
-    else if (data.length >= 4 && (data(0) & 0xff) == 0xff &&
-        (data(1) & 0xff) == 0xd8) {
-      var p = 2
-      while (p < data.length && (data(p) & 0xff) == 0xff) {
-        // skip spec-legal 0xFF fill bytes before the marker
-        var q = p + 1
-        while (q < data.length && (data(q) & 0xff) == 0xff) q += 1
-        if (q >= data.length) return None
-        val m = data(q) & 0xff
-        // SOF0-15 minus the non-frame DHT/JPG/DAC markers
-        if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-          if (q + 8 > data.length) return None
-          return Some((
-            ((data(q + 6) & 0xff) << 8) | (data(q + 7) & 0xff),
-            ((data(q + 4) & 0xff) << 8) | (data(q + 5) & 0xff)))
-        }
-        if (m == 0xd9 || m == 0xda) return None
-        if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) p = q + 1
-        else {
-          if (q + 2 >= data.length) return None
-          p = q + 1 + (((data(q + 1) & 0xff) << 8) | (data(q + 2) & 0xff))
-        }
+      Some((s.u32(16).toInt, s.u32(20).toInt))
+    else
+      Try(jpegSegments(s) { (m, seg) =>
+        // SOF0-15 minus the non-frame DHT/JPG/DAC markers: precision,
+        // then height and width
+        if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
+          Some((seg.u16(3), seg.u16(1)))
+        else None
+      }).toOption.flatten
+  }
+
+  /** The one JPEG marker walk, after SOI: skips spec-legal 0xFF fill
+    * bytes and the standalone TEM/RSTn markers, and hands `visit` each
+    * other marker with its segment's payload (the bytes after the length
+    * field) until `visit` returns a result. None when SOS, EOI or the end
+    * of the data comes first. Throws when the data does not start with
+    * SOI or a segment's length field runs past the data. */
+  private[graft] def jpegSegments[A](data: ByteSlice)(visit: (Int, ByteSlice) => Option[A]): Option[A] = {
+    require(data.length >= 4 && data.u8(0) == 0xff && data.u8(1) == 0xd8,
+      "not a JPEG (no SOI)")
+    var p = 2L
+    while (p < data.length && data.u8(p) == 0xff) {
+      var q = p + 1
+      while (q < data.length && data.u8(q) == 0xff) q += 1
+      if (q >= data.length) return None // trailing fill only
+      val marker = data.u8(q)
+      if (marker == 0xd9 || marker == 0xda) return None
+      if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd7)) p = q + 1
+      else {
+        val len = data.u16(q + 1)
+        require(len >= 2 && q + 1 + len <= data.length, f"truncated segment 0x$marker%02x")
+        val found = visit(marker, data.slice(q + 3, len - 2))
+        if (found.isDefined) return found
+        p = q + 1 + len
       }
-      None
-    } else None
+    }
+    None
   }
 
   /** EXIF orientation 1-8 applied to a STORED raster, producing the
@@ -323,13 +336,23 @@ object ImageCodec {
     bos.toByteArray
   }
 
-  /** Gzip decompress (reference filter/gzip_.py:32-38). */
+  /** The most bytes [[gunzip]] inflates one payload to. Deflate
+    * reaches about 1000:1, so a gzip row of a few MB can claim more than
+    * an executor's heap and end the task with `OutOfMemoryError`, which
+    * no error channel catches. A tile is at most a few MB decompressed;
+    * 64 MiB leaves a wide margin above that while four concurrent tasks
+    * stay well inside a 2 GB heap. */
+  private val GunzipLimit: Int = 64 << 20
+
+  /** Gzip decompress (reference filter/gzip_.py:32-38). Output past
+    * `GunzipLimit` throws `IllegalArgumentException`. */
   def gunzip(data: Array[Byte]): Array[Byte] = {
     val in = new java.util.zip.GZIPInputStream(new ByteArrayInputStream(data))
     val out = new ByteArrayOutputStream()
     val buf = new Array[Byte](8192)
     var n = in.read(buf)
     while (n >= 0) {
+      require(out.size <= GunzipLimit - n, s"gzip payload inflates past $GunzipLimit bytes")
       out.write(buf, 0, n)
       n = in.read(buf)
     }

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import graft.core.ByteSlice
 import graft.image.ImageCodec
 import graft.sql.RowOp
 
@@ -164,45 +165,23 @@ object Multimodal {
   // of scope (no video codec in this container).
   // ------------------------------------------------------------------ //
 
-  private def be32(b: Array[Byte], p: Int): Long =
-    ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-      ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], p: Int): Long =
-    (be32(b, p) << 32) | be32(b, p + 4)
-
-  /** Walk top-level or nested boxes, returning (type -> (payloadOffset,
-    * payloadLen)) for the FIRST occurrence of each type in the range. */
-  private def boxes(b: Array[Byte], from: Long, to: Long): Map[String, (Long, Long)] = {
-    val m = Map.newBuilder[String, (Long, Long)]
-    val seen = scala.collection.mutable.Set.empty[String]
-    var p = from
-    while (p + 8 <= to) {
-      val size = be32(b, p.toInt)
-      val tpe = new String(b, p.toInt + 4, 4, "ISO-8859-1")
-      if (size < 8 || p + size > to) return m.result() // corrupt tail
-      if (!seen.contains(tpe)) {
-        seen += tpe
-        m += tpe -> ((p + 8, size - 8))
-      }
+  /** The payload of the first box of type `name` directly inside `s`.
+    * A box whose size field is below its header or runs past `s` ends
+    * the walk (a corrupt tail). */
+  private def child(s: ByteSlice, name: String): Option[ByteSlice] = {
+    var p = 0L
+    while (p + 8 <= s.length) {
+      val size = s.u32(p)
+      if (size < 8 || p + size > s.length) return None
+      if (s.string(p + 4, 4, "ISO-8859-1") == name) return Some(s.slice(p + 8, size - 8))
       p += size
     }
-    m.result()
+    None
   }
-
-  private val Containers = Set("moov", "trak", "mdia", "minf", "stbl")
 
   /** Find a box by path (e.g. moov/trak/mdia/minf/stbl/stsz). */
-  private def findBox(b: Array[Byte], path: Seq[String]): Option[(Long, Long)] = {
-    var range = (0L, b.length.toLong)
-    for (name <- path) {
-      boxes(b, range._1, range._1 + range._2).get(name) match {
-        case Some(r) => range = r
-        case None    => return None
-      }
-    }
-    Some(range)
-  }
+  private def findBox(b: ByteSlice, path: Seq[String]): Option[ByteSlice] =
+    path.foldLeft(Option(b))((in, name) => in.flatMap(child(_, name)))
 
   final case class Mp4Info(
       timescale: Long,
@@ -244,60 +223,56 @@ object Multimodal {
     * multi-chunk sample layouts via stsc run-length mapping (a missing
     * stsc means the single-chunk layout: every sample in chunk 0). */
   def parseMp4(b: Array[Byte]): Mp4Info = {
-    // Every entry-array read below is bounded to ITS BOX's payload
-    // length (the second element findBox returns): a corrupt count that
-    // stays inside the file would otherwise read the neighboring box's
-    // bytes as frame sizes/offsets with no exception — silently wrong
-    // byte ranges instead of an error-channel row. Same posture as the
-    // hardened JPEG/TIFF walkers.
-    def boundedCount(n: Long, headerLen: Long, entryLen: Long,
-        payloadLen: Long, what: String): Int = {
-      require(n >= 0 && headerLen + entryLen * n <= payloadLen,
-        s"$what entry count $n exceeds its box payload ($payloadLen bytes)")
-      n.toInt
+    val file = ByteSlice(b)
+    // The `count` entries of `width` bytes after a table box's count
+    // field at `at`: the slice rejects a count its box cannot hold, so a
+    // corrupt count never reads the neighbouring box's bytes as frame
+    // sizes or offsets.
+    def table(box: ByteSlice, at: Int, width: Int): (ByteSlice, Int) = {
+      val n = box.u32(at)
+      (box.slice(at + 4, width * n), n.toInt)
     }
-    val (mvOff, mvLen) = findBox(b, Seq("moov", "mvhd"))
+    val mvhd = findBox(file, Seq("moov", "mvhd"))
       .getOrElse(throw new IllegalArgumentException("no moov/mvhd box"))
-    val version = b(mvOff.toInt) & 0xff
+    val version = mvhd.u8(0)
     require(version == 0 || version == 1, s"mvhd version $version unsupported")
-    require(mvLen >= (if (version == 0) 20L else 32L), "truncated mvhd box")
     // v0: flags(4) creation(4) modification(4) timescale(4) duration(4)
     // v1: flags(4) creation(8) modification(8) timescale(4) duration(8)
     val (timescale, duration) =
-      if (version == 0) (be32(b, mvOff.toInt + 12), be32(b, mvOff.toInt + 16))
-      else (be32(b, mvOff.toInt + 20), be64(b, mvOff.toInt + 24))
+      if (version == 0) (mvhd.u32(12), mvhd.u32(16))
+      else (mvhd.u32(20), mvhd.u64(24))
     val stblPath = Seq("moov", "trak", "mdia", "minf", "stbl")
-    val (szOff, szLen) = findBox(b, stblPath :+ "stsz")
+    val stsz = findBox(file, stblPath :+ "stsz")
       .getOrElse(throw new IllegalArgumentException("no stsz box"))
-    require(szLen >= 12L, "truncated stsz box")
-    val uniform = be32(b, szOff.toInt + 4)
-    val rawCount = be32(b, szOff.toInt + 8)
-    val count =
-      if (uniform != 0) boundedCount(rawCount, 12L, 0L, szLen, "stsz")
-      else boundedCount(rawCount, 12L, 4L, szLen, "stsz")
+    val uniform = stsz.u32(4)
     val sizes =
-      if (uniform != 0) Array.fill(count)(uniform)
-      else Array.tabulate(count)(i => be32(b, szOff.toInt + 12 + 4 * i))
-    val chunks = findBox(b, stblPath :+ "stco") match {
-      case Some((coOff, coLen)) =>
-        val n = boundedCount(be32(b, coOff.toInt + 4), 8L, 4L, coLen, "stco")
-        Array.tabulate(n)(i => be32(b, coOff.toInt + 8 + 4 * i))
+      if (uniform != 0) {
+        // no table to bound the count: the samples must fit in the file
+        val count = stsz.u32(8)
+        require(count <= b.length / uniform,
+          s"stsz: $count samples of $uniform bytes exceed the file (${b.length} bytes)")
+        Array.fill(count.toInt)(uniform)
+      } else {
+        val (t, n) = table(stsz, 8, 4)
+        Array.tabulate(n)(i => t.u32(4L * i))
+      }
+    val chunks = findBox(file, stblPath :+ "stco") match {
+      case Some(co) =>
+        val (t, n) = table(co, 4, 4)
+        Array.tabulate(n)(i => t.u32(4L * i))
       case None =>
-        val (coOff, coLen) = findBox(b, stblPath :+ "co64")
+        val co = findBox(file, stblPath :+ "co64")
           .getOrElse(throw new IllegalArgumentException("no stco/co64 box"))
-        val n = boundedCount(be32(b, coOff.toInt + 4), 8L, 8L, coLen, "co64")
-        Array.tabulate(n)(i => be64(b, coOff.toInt + 8 + 8 * i))
+        val (t, n) = table(co, 4, 8)
+        Array.tabulate(n)(i => t.u64(8L * i))
     }
     // stsc: (first_chunk 1-based, samples_per_chunk, desc_idx) runs;
     // expand to one entry per chunk. Absent table (or no chunks) =
     // everything in the first chunk.
-    val spc: Array[Int] = findBox(b, stblPath :+ "stsc") match {
-      case Some((scOff, scLen)) if chunks.nonEmpty =>
-        val n = boundedCount(be32(b, scOff.toInt + 4), 8L, 12L, scLen, "stsc")
-        val runs = Array.tabulate(n) { i =>
-          val p = scOff.toInt + 8 + 12 * i
-          (be32(b, p).toInt, be32(b, p + 4).toInt)
-        }
+    val spc: Array[Int] = findBox(file, stblPath :+ "stsc") match {
+      case Some(sc) if chunks.nonEmpty =>
+        val (t, n) = table(sc, 4, 12)
+        val runs = Array.tabulate(n)(i => (t.u32(12L * i).toInt, t.u32(12L * i + 4).toInt))
         val out = new Array[Int](chunks.length)
         var r = 0
         var c = 1
@@ -379,29 +354,10 @@ object Multimodal {
         (framePayloads.length == frames &&
           framePayloads.forall(_.length == frameSize)),
       s"framePayloads must be $frames × $frameSize bytes")
-    def box(tpe: String, payload: Array[Byte]): Array[Byte] = {
-      val out = new Array[Byte](8 + payload.length)
-      val size = out.length.toLong
-      out(0) = ((size >> 24) & 0xff).toByte
-      out(1) = ((size >> 16) & 0xff).toByte
-      out(2) = ((size >> 8) & 0xff).toByte
-      out(3) = (size & 0xff).toByte
-      System.arraycopy(tpe.getBytes("ISO-8859-1"), 0, out, 4, 4)
-      System.arraycopy(payload, 0, out, 8, payload.length)
-      out
-    }
-    def u32s(vs: Long*): Array[Byte] = {
-      val out = new Array[Byte](4 * vs.length)
-      vs.zipWithIndex.foreach { case (v, i) =>
-        out(4 * i) = ((v >> 24) & 0xff).toByte
-        out(4 * i + 1) = ((v >> 16) & 0xff).toByte
-        out(4 * i + 2) = ((v >> 8) & 0xff).toByte
-        out(4 * i + 3) = (v & 0xff).toByte
-      }
-      out
-    }
-    def u64s(vs: Long*): Array[Byte] =
-      vs.flatMap(v => u32s((v >>> 32) & 0xffffffffL, v & 0xffffffffL)).toArray
+    def box(tpe: String, payload: Array[Byte]): Array[Byte] =
+      ByteSlice.pack(4)(8L + payload.length) ++ tpe.getBytes("ISO-8859-1") ++ payload
+    def u32s(vs: Long*): Array[Byte] = ByteSlice.pack(4)(vs: _*)
+    def u64s(vs: Long*): Array[Byte] = ByteSlice.pack(8)(vs: _*)
     val ftyp = box("ftyp", "isomiso2".getBytes("ISO-8859-1"))
     // frame f's payload is the deterministic global run sliced at
     // [f*frameSize, (f+1)*frameSize); chunks pack those slices
@@ -470,16 +426,12 @@ object Multimodal {
       val bytes = r.getAs[Array[Byte]](0)
       val info = parseMp4(bytes)
       val offsets = info.sampleOffsets
-      // strict (a Range's map), so a bad frame errors the whole row
+      val file = ByteSlice(bytes)
+      // strict (a Range's map), so a bad frame errors the whole row: a
+      // range outside the container throws rather than reading short,
+      // so truncated files cannot hash alike and fabricate near-dup pairs
       (0 until info.frameSizes.length by everyK).map { f =>
-        val off = offsets(f).toInt
-        val len = info.frameSizes(f).toInt
-        // copyOfRange silently zero-pads past the array end — a
-        // truncated container would then hash identically to other
-        // truncated files and fabricate near-dup pairs
-        require(off >= 0 && len >= 0 && off + len <= bytes.length,
-          f"frame $f range [$off,${off + len}) outside ${bytes.length}-byte container")
-        Seq(f, java.util.Arrays.copyOfRange(bytes, off, off + len), null)
+        Seq(f, file.bytes(offsets(f), info.frameSizes(f)), null)
       }
     }
 
@@ -546,86 +498,54 @@ object Multimodal {
   /** Orientation, model, dateTime, and GPS position from the first
     * APP1 Exif segment; all-None when the JPEG simply has no EXIF.
     * Throws on structural violations. */
-  def parseExif(b: Array[Byte]): ExifInfo = {
-    require(b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8,
-      "not a JPEG (no SOI)")
-    var p = 2
-    while (p < b.length && (b(p) & 0xff) == 0xff) {
-      // the spec allows any number of 0xFF fill bytes before a marker
-      var q = p + 1
-      while (q < b.length && (b(q) & 0xff) == 0xff) q += 1
-      if (q >= b.length) return ExifInfo.Empty // trailing fill only
-      val marker = b(q) & 0xff
-      if (marker == 0xd9 || marker == 0xda) return ExifInfo.Empty
-      if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd7)) {
-        p = q + 1 // standalone TEM/RSTn markers carry no length field
-      } else {
-        require(q + 2 < b.length, f"truncated segment header 0x$marker%02x")
-        val len = ((b(q + 1) & 0xff) << 8) | (b(q + 2) & 0xff)
-        require(len >= 2 && q + 1 + len <= b.length,
-          f"truncated segment 0x$marker%02x")
-        if (marker == 0xe1 && len >= 8 &&
-            b(q + 3) == 'E' && b(q + 4) == 'x' && b(q + 5) == 'i' &&
-            b(q + 6) == 'f' && b(q + 7) == 0 && b(q + 8) == 0)
-          return parseTiff(b, q + 9, len - 8)
-        p = q + 1 + len
-      }
-    }
-    ExifInfo.Empty
-  }
+  def parseExif(b: Array[Byte]): ExifInfo =
+    ImageCodec.jpegSegments(ByteSlice(b)) { (marker, seg) =>
+      if (marker == 0xe1 && seg.length >= 6 && seg.string(0, 6, "ISO-8859-1") == "Exif\u0000\u0000")
+        Some(parseTiff(seg.slice(6, seg.length - 6)))
+      else None
+    }.getOrElse(ExifInfo.Empty)
 
-  private def parseTiff(
-      b: Array[Byte], base: Int,
-      tiffLen: Int): ExifInfo = {
-    require(tiffLen >= 8, "truncated TIFF header")
-    val le = (b(base) & 0xff, b(base + 1) & 0xff) match {
-      case ('I', 'I') => true
-      case ('M', 'M') => false
+  /** IFD0 (and its GPS sub-IFD) of the TIFF structure `tiff`, read in
+    * the byte order its `II`/`MM` header names. Offsets inside the TIFF
+    * are relative to its header, so every value read is bounded by the
+    * structure itself. */
+  private def parseTiff(tiff: ByteSlice): ExifInfo = {
+    val t = (tiff.u8(0), tiff.u8(1)) match {
+      case ('I', 'I') => tiff.withOrder(bigEndian = false)
+      case ('M', 'M') => tiff
       case _ => throw new IllegalArgumentException("bad TIFF byte order")
     }
-    def u16(p: Int): Int =
-      if (le) (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-      else ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
-    def u32(p: Int): Long =
-      if (le) (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-      else ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-        ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-    require(u16(base + 2) == 42, "bad TIFF magic")
-    val ifd = base + u32(base + 4).toInt
-    // both bounds: a corrupt 32-bit offset can wrap negative after
-    // .toInt and would otherwise read JPEG bytes BEFORE the TIFF
-    // header as silently-wrong field values
-    require(ifd >= base + 8 && ifd + 2 <= base + tiffLen,
-      "IFD0 offset out of range")
-    val n = u16(ifd)
-    require(ifd + 2 + 12 * n + 4 <= base + tiffLen, "truncated IFD0")
+    require(t.u16(2) == 42, "bad TIFF magic")
+    /** The `n` 12-byte entries of the IFD at `off`, which may not
+      * overlap the 8-byte header. */
+    def ifd(off: Long, what: String): (ByteSlice, Int) = {
+      require(off >= 8, s"$what offset out of range")
+      val n = t.u16(off)
+      (t.slice(off + 2, 12L * n + 4), n)
+    }
+    val (entries, n) = ifd(t.u32(4), "IFD0")
     var orientation: Option[Int] = None
     var model: Option[String] = None
     var taken: Option[String] = None
-    def ascii(cnt: Int, valuePos: Int): String = {
-      // a count >= 2^31 wraps negative after .toInt and must not slip
-      // through the <= 4 inline branch
-      require(cnt >= 0 && cnt <= tiffLen, s"bad ASCII count $cnt")
-      val at = if (cnt <= 4) valuePos else base + u32(valuePos).toInt
-      require(at >= base && at + cnt <= base + tiffLen,
-        "ASCII value out of range")
-      val end = at + cnt
-      val stop = if (end > at && b(end - 1) == 0) end - 1 else end
-      new String(b, at, stop - at, "US-ASCII")
+    /** The ASCII value of entry `e`: inline in its 4-byte value slot
+      * when it fits, else at the offset the slot holds; one trailing
+      * NUL is dropped. */
+    def ascii(e: ByteSlice): String = {
+      val cnt = e.u32(4)
+      val v = if (cnt <= 4) e.slice(8, cnt) else t.slice(e.u32(8), cnt)
+      v.string(0, if (cnt > 0 && v.u8(cnt - 1) == 0) cnt - 1 else cnt, "US-ASCII")
     }
-    var gpsOff: Option[Int] = None
+    var gpsOff: Option[Long] = None
     var i = 0
     while (i < n) {
-      val e = ifd + 2 + 12 * i
-      val tag = u16(e)
-      val typ = u16(e + 2)
-      val cnt = u32(e + 4).toInt
-      tag match {
-        case 0x0112 if typ == 3 && cnt == 1 => orientation = Some(u16(e + 8))
-        case 0x0110 if typ == 2 => model = Some(ascii(cnt, e + 8))
-        case 0x0132 if typ == 2 => taken = Some(ascii(cnt, e + 8))
-        case 0x8825 if typ == 4 && cnt == 1 => gpsOff = Some(u32(e + 8).toInt)
+      val e = entries.slice(12L * i, 12)
+      val typ = e.u16(2)
+      val cnt = e.u32(4)
+      e.u16(0) match {
+        case 0x0112 if typ == 3 && cnt == 1 => orientation = Some(e.u16(8))
+        case 0x0110 if typ == 2 => model = Some(ascii(e))
+        case 0x0132 if typ == 2 => taken = Some(ascii(e))
+        case 0x8825 if typ == 4 && cnt == 1 => gpsOff = Some(e.u32(8))
         case _ => ()
       }
       i += 1
@@ -637,37 +557,31 @@ object Multimodal {
     var lat: Option[Double] = None
     var lon: Option[Double] = None
     gpsOff.foreach { off =>
-      val g = base + off
-      require(g >= base + 8 && g + 2 <= base + tiffLen,
-        "GPS IFD offset out of range")
-      val gn = u16(g)
-      require(g + 2 + 12 * gn + 4 <= base + tiffLen, "truncated GPS IFD")
-      def rational3(valuePos: Int): Double = {
-        val at = base + u32(valuePos).toInt
-        require(at >= base && at + 24 <= base + tiffLen,
-          "GPS rational out of range")
+      val (gps, gn) = ifd(off, "GPS IFD")
+      def rational3(e: ByteSlice): Double = {
+        val r = t.slice(e.u32(8), 24)
         // A zero denominator is a structural violation, not a value:
         // x/0.0 would emit Infinity (0/0.0 NaN) into the lat/lon DATA
         // column with error=null, and mercator math downstream turns
         // that NaN into poisoned tile coordinates. Route it to the
         // error channel like every other malformed-TIFF case.
-        require(u32(at + 4) != 0L && u32(at + 12) != 0L && u32(at + 20) != 0L,
+        require(r.u32(4) != 0L && r.u32(12) != 0L && r.u32(20) != 0L,
           "GPS rational zero denominator")
-        val dv = u32(at).toDouble / u32(at + 4).toDouble
-        val mv = u32(at + 8).toDouble / u32(at + 12).toDouble
-        val sv = u32(at + 16).toDouble / u32(at + 20).toDouble
+        val dv = r.u32(0).toDouble / r.u32(4).toDouble
+        val mv = r.u32(8).toDouble / r.u32(12).toDouble
+        val sv = r.u32(16).toDouble / r.u32(20).toDouble
         dv + mv / 60.0 + sv / 3600.0
       }
       var latRef, lonRef = "N"
       var latRaw, lonRaw: Option[Double] = None
       var j = 0
       while (j < gn) {
-        val e = g + 2 + 12 * j
-        (u16(e), u16(e + 2)) match {
-          case (0x0001, 2) => latRef = ascii(u32(e + 4).toInt, e + 8)
-          case (0x0002, 5) if u32(e + 4) == 3L => latRaw = Some(rational3(e + 8))
-          case (0x0003, 2) => lonRef = ascii(u32(e + 4).toInt, e + 8)
-          case (0x0004, 5) if u32(e + 4) == 3L => lonRaw = Some(rational3(e + 8))
+        val e = gps.slice(12L * j, 12)
+        (e.u16(0), e.u16(2)) match {
+          case (0x0001, 2) => latRef = ascii(e)
+          case (0x0002, 5) if e.u32(4) == 3L => latRaw = Some(rational3(e))
+          case (0x0003, 2) => lonRef = ascii(e)
+          case (0x0004, 5) if e.u32(4) == 3L => lonRaw = Some(rational3(e))
           case _ => ()
         }
         j += 1
@@ -706,11 +620,8 @@ object Multimodal {
     val gpsDataOff = gpsIfdOff + 2 + 4 * 12 + 4
     val tiff = new java.io.ByteArrayOutputStream()
     def t8(v: Int): Unit = tiff.write(v & 0xff)
-    def t16(v: Int): Unit =
-      if (littleEndian) { t8(v); t8(v >> 8) } else { t8(v >> 8); t8(v) }
-    def t32(v: Long): Unit =
-      if (littleEndian) { t8(v.toInt); t8((v >> 8).toInt); t8((v >> 16).toInt); t8((v >> 24).toInt) }
-      else { t8((v >> 24).toInt); t8((v >> 16).toInt); t8((v >> 8).toInt); t8(v.toInt) }
+    def t16(v: Int): Unit = tiff.write(ByteSlice.pack(2, !littleEndian)(v.toLong))
+    def t32(v: Long): Unit = tiff.write(ByteSlice.pack(4, !littleEndian)(v))
     t8(if (littleEndian) 'I' else 'M'); t8(if (littleEndian) 'I' else 'M')
     t16(42); t32(8L) // IFD0 directly after the header
     t16(nE0) // entry count, tags ascending (the spec's ordering rule)
@@ -769,10 +680,8 @@ object Multimodal {
     * fixture writer for pipelines that exercise [[exifMeta]] and
     * [[orientNormalize]] end to end. */
   def spliceExif(carrier: Array[Byte], exifJpeg: Array[Byte]): Array[Byte] = {
-    require(
-      carrier.length >= 2 && (carrier(0) & 0xff) == 0xff &&
-        (carrier(1) & 0xff) == 0xd8, "carrier is not a JPEG")
-    val app1Len = 2 + (((exifJpeg(4) & 0xff) << 8) | (exifJpeg(5) & 0xff))
+    require(ImageCodec.sniffContentType(carrier).contains("image/jpeg"), "carrier is not a JPEG")
+    val app1Len = 2 + ByteSlice(exifJpeg).u16(4)
     carrier.take(2) ++ exifJpeg.slice(2, 2 + app1Len) ++ carrier.drop(2)
   }
 

@@ -2,6 +2,8 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.core.ByteSlice
+
 /** Minimal pure-JVM Berkeley DB **btree** file codec — enough of the
   * public on-disk format to read and write the key/value archives the
   * reference's BSDDBTileStore keeps (reference store/bsddb.py:9-60:
@@ -70,50 +72,29 @@ object Bsddb {
 
   // ---------------------------------------------------------------- write
 
+  /** Pages as written: the native little-endian layout. */
   private final class PageBuf {
     val pages = ArrayBuffer.empty[Array[Byte]]
     def alloc(): Int = { pages += new Array[Byte](PageSize); pages.size - 1 }
-    def apply(p: Int): Array[Byte] = pages(p)
-  }
-
-  private def putU16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-  }
-  private def putU32(b: Array[Byte], off: Int, v: Long): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
-    b(off + 2) = ((v >> 16) & 0xff).toByte
-    b(off + 3) = ((v >> 24) & 0xff).toByte
+    def apply(p: Int): ByteSlice = ByteSlice(pages(p), bigEndian = false)
   }
 
   private def header(
-      b: Array[Byte], pgno: Int, prev: Int, next: Int,
+      b: ByteSlice, pgno: Int, prev: Int, next: Int,
       entries: Int, hfOffset: Int, level: Int, tpe: Int): Unit = {
-    putU32(b, 8, pgno.toLong)
-    putU32(b, 12, prev.toLong)
-    putU32(b, 16, next.toLong)
-    putU16(b, 20, entries)
-    putU16(b, 22, hfOffset)
-    b(24) = level.toByte
-    b(25) = tpe.toByte
+    b.putU32(8, pgno.toLong)
+    b.putU32(12, prev.toLong)
+    b.putU32(16, next.toLong)
+    b.putU16(20, entries)
+    b.putU16(22, hfOffset)
+    b.putU8(24, level)
+    b.putU8(25, tpe)
   }
 
   /** Encode a complete btree archive from (key, value) pairs. Input
     * need not be sorted; the bulk load sorts by unsigned byte order. */
   def encode(pairs: Seq[(Array[Byte], Array[Byte])]): Array[Byte] = {
-    val ord = new Ordering[Array[Byte]] {
-      def compare(a: Array[Byte], b: Array[Byte]): Int = {
-        val n = math.min(a.length, b.length)
-        var i = 0
-        while (i < n) {
-          val d = (a(i) & 0xff) - (b(i) & 0xff)
-          if (d != 0) return d
-          i += 1
-        }
-        a.length - b.length
-      }
-    }
-    val sorted = pairs.sortBy(_._1)(ord)
+    val sorted = pairs.sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
     val buf = new PageBuf
     buf.alloc() // page 0 = meta, filled last
 
@@ -129,7 +110,7 @@ object Bsddb {
           prev = if (i == 0) 0 else pgs(i - 1),
           next = if (i == nPages - 1) 0 else pgs(i + 1),
           entries = 1, hfOffset = len, level = 0, tpe = POverflow)
-        System.arraycopy(data, off, b, HeaderSize, len)
+        b.put(HeaderSize, data.slice(off, off + len))
       }
       pgs.head
     }
@@ -153,22 +134,22 @@ object Bsddb {
       def putItem(e: Either[Array[Byte], (Int, Int)]): Unit = e match {
         case Left(inline) =>
           top -= align4(3 + inline.length)
-          putU16(b, top, inline.length)
-          b(top + 2) = BKeyData.toByte
-          System.arraycopy(inline, 0, b, top + 3, inline.length)
+          b.putU16(top, inline.length)
+          b.putU8(top + 2, BKeyData)
+          b.put(top + 3, inline)
           inx += top
         case Right((ovPgno, tlen)) =>
           top -= 12
-          putU16(b, top, 0)
-          b(top + 2) = BOverflow.toByte
-          b(top + 3) = 0
-          putU32(b, top + 4, ovPgno.toLong)
-          putU32(b, top + 8, tlen.toLong)
+          b.putU16(top, 0)
+          b.putU8(top + 2, BOverflow)
+          b.putU8(top + 3, 0)
+          b.putU32(top + 4, ovPgno.toLong)
+          b.putU32(top + 8, tlen.toLong)
           inx += top
       }
       cur.foreach { case (k, v) => putItem(Left(k)); putItem(v) }
       var o = HeaderSize
-      inx.foreach { off => putU16(b, o, off); o += 2 }
+      inx.foreach { off => b.putU16(o, off); o += 2 }
       header(b, pgno, prev = 0, next = 0,
         entries = inx.size, hfOffset = top, level = 1, tpe = PBtreeLeaf)
       leaves += Leaf(pgno, cur.head._1)
@@ -196,8 +177,8 @@ object Bsddb {
     // sibling chain
     for (i <- leaves.indices) {
       val b = buf(leaves(i).pgno)
-      putU32(b, 12, (if (i == 0) 0 else leaves(i - 1).pgno).toLong)
-      putU32(b, 16, (if (i == leaves.size - 1) 0 else leaves(i + 1).pgno).toLong)
+      b.putU32(12, (if (i == 0) 0 else leaves(i - 1).pgno).toLong)
+      b.putU32(16, (if (i == leaves.size - 1) 0 else leaves(i + 1).pgno).toLong)
     }
 
     // internal levels bottom-up
@@ -216,16 +197,16 @@ object Bsddb {
         group.zipWithIndex.foreach { case ((child, key), i) =>
           val k = if (i == 0) Array.emptyByteArray else key // leftmost: empty
           top -= align4(12 + k.length)
-          putU16(b, top, k.length)
-          b(top + 2) = BKeyData.toByte
-          b(top + 3) = 0
-          putU32(b, top + 4, child.toLong)
-          putU32(b, top + 8, 0L) // nrecs: only maintained with record counts
-          System.arraycopy(k, 0, b, top + 12, k.length)
+          b.putU16(top, k.length)
+          b.putU8(top + 2, BKeyData)
+          b.putU8(top + 3, 0)
+          b.putU32(top + 4, child.toLong)
+          b.putU32(top + 8, 0L) // nrecs: only maintained with record counts
+          b.put(top + 12, k)
           inx += top
         }
         var o = HeaderSize
-        inx.foreach { off => putU16(b, o, off); o += 2 }
+        inx.foreach { off => b.putU16(o, off); o += 2 }
         header(b, pgno, 0, 0, inx.size, top, level, PBtreeInternal)
         parents += ((pgno, group.head._2))
         group = ArrayBuffer.empty
@@ -245,16 +226,16 @@ object Bsddb {
 
     // meta page (DBMETA then BTMETA extension; offsets per db_page.h)
     val m = buf(0)
-    putU32(m, 8, 0L) // pgno
-    putU32(m, 12, Magic.toLong)
-    putU32(m, 16, Version.toLong)
-    putU32(m, 20, PageSize.toLong)
-    m(24) = 0 // encrypt_alg
-    m(25) = PBtreeMeta.toByte
-    putU32(m, 28, 0L) // free list: none
-    putU32(m, 32, (buf.pages.size - 1).toLong) // last_pgno
-    putU32(m, 76, 2L) // minkey
-    putU32(m, 88, root.toLong)
+    m.putU32(8, 0L) // pgno
+    m.putU32(12, Magic.toLong)
+    m.putU32(16, Version.toLong)
+    m.putU32(20, PageSize.toLong)
+    m.putU8(24, 0) // encrypt_alg
+    m.putU8(25, PBtreeMeta)
+    m.putU32(28, 0L) // free list: none
+    m.putU32(32, (buf.pages.size - 1).toLong) // last_pgno
+    m.putU32(76, 2L) // minkey
+    m.putU32(88, root.toLong)
     // concatenate pages with arraycopy: ArrayBuffer.flatten would box
     // every byte (~16x the archive size in transient object overhead)
     // before toArray — an executor OOM at writeSharded archive sizes
@@ -270,93 +251,94 @@ object Bsddb {
   /** Parsed archive view; `entries` walks the leaf chain in key order
     * resolving overflow chains. */
   final class BtreeFile(bytes: Array[Byte]) {
-    private val swapped = {
-      val le = u32le(12)
-      if (le == Magic) false
-      else if (java.lang.Integer.reverseBytes(le.toInt).toLong == Magic) true
+    /** The file in its producer's byte order, told by the magic. */
+    private val file = {
+      val le = ByteSlice(bytes, bigEndian = false)
+      val magic = le.u32(12)
+      if (magic == Magic) le
+      else if (le.withOrder(bigEndian = true).u32(12) == Magic) le.withOrder(bigEndian = true)
       else throw new IllegalArgumentException(
-        f"not a Berkeley DB btree file (magic 0x$le%08x at offset 12)")
-    }
-    private def u32le(off: Int): Long =
-      ((bytes(off) & 0xffL)) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-    private def u32(off: Int): Long = {
-      val v = u32le(off)
-      if (swapped) java.lang.Integer.reverseBytes(v.toInt).toLong & 0xffffffffL
-      else v
-    }
-    private def u16(off: Int): Int = {
-      val v = ((bytes(off) & 0xff)) | ((bytes(off + 1) & 0xff) << 8)
-      if (swapped) ((v >> 8) | ((v & 0xff) << 8)) & 0xffff else v
+        f"not a Berkeley DB btree file (magic 0x$magic%08x at offset 12)")
     }
 
-    val version: Long = u32(16)
+    val version: Long = file.u32(16)
     require(version >= 8 && version <= 10,
       s"unsupported btree version $version (8-10 share this page layout)")
-    val pageSize: Int = u32(20).toInt
-    require(bytes(25) == PBtreeMeta.toByte,
-      s"not a btree database (meta page type ${bytes(25)}; hash/recno/queue unsupported)")
-    require(bytes(24) == 0, "encrypted or checksummed files unsupported")
-    val root: Int = u32(88).toInt
+    val pageSize: Int = file.u32(20).toInt
+    require(file.u8(25) == PBtreeMeta,
+      s"not a btree database (meta page type ${file.u8(25)}; hash/recno/queue unsupported)")
+    require(file.u8(24) == 0, "encrypted or checksummed files unsupported")
+    val root: Int = file.u32(88).toInt
 
-    private def pageOff(p: Int): Int = p * pageSize
-    private def pageType(p: Int): Int = bytes(pageOff(p) + 25) & 0xff
-    private def pageLevel(p: Int): Int = bytes(pageOff(p) + 24) & 0xff
-    private def nextPgno(p: Int): Int = u32(pageOff(p) + 16).toInt
-    private def entryCount(p: Int): Int = u16(pageOff(p) + 20)
-    private def hfOffset(p: Int): Int = u16(pageOff(p) + 22)
-
-    private def overflowData(head: Int, tlen: Int): Array[Byte] = {
-      val out = new Array[Byte](tlen)
-      var p = head
-      var o = 0
-      while (p != 0) {
-        require(pageType(p) == POverflow, s"page $p in overflow chain has type ${pageType(p)}")
-        val len = hfOffset(p)
-        System.arraycopy(bytes, pageOff(p) + HeaderSize, out, o, len)
-        o += len
-        p = nextPgno(p)
-      }
-      require(o == tlen, s"overflow chain length $o != declared $tlen")
-      out
-    }
-
-    private def item(p: Int, slot: Int): Array[Byte] = {
-      val off = pageOff(p) + u16(pageOff(p) + HeaderSize + 2 * slot)
-      (bytes(off + 2) & 0xff) match {
-        case BKeyData =>
-          val len = u16(off)
-          java.util.Arrays.copyOfRange(bytes, off + 3, off + 3 + len)
-        case BOverflow =>
-          overflowData(u32(off + 4).toInt, u32(off + 8).toInt)
-        case other =>
-          throw new IllegalArgumentException(
-            s"unsupported item type $other (duplicate sets are not supported)")
-      }
-    }
+    private def page(p: Long): ByteSlice = file.slice(p * pageSize, pageSize)
 
     /** Leftmost descent + sibling walk: all (key, value) pairs in key
-      * order. */
+      * order. Each page is visited at most once: a pointer back to a
+      * visited page (a cycle in the descent, the leaf chain or an
+      * overflow chain) throws instead of walking forever. */
     def entries: Iterator[(Array[Byte], Array[Byte])] = {
-      var p = root
-      while (pageLevel(p) > 1) {
-        require(pageType(p) == PBtreeInternal, s"level>1 page $p has type ${pageType(p)}")
+      val seen = scala.collection.mutable.HashSet.empty[Long]
+      def visit(p: Long): ByteSlice = {
+        require(seen.add(p), s"page $p is reached twice")
+        page(p)
+      }
+
+      /** The overflow chain from `head`, which must hold `tlen` bytes:
+        * no more than the file itself, checked before allocating. */
+      def overflowData(head: Long, tlen: Long): Array[Byte] = {
+        require(tlen <= bytes.length, s"overflow length $tlen exceeds the file (${bytes.length} bytes)")
+        val out = new Array[Byte](tlen.toInt)
+        var p = head
+        var o = 0
+        while (p != 0) {
+          val pg = visit(p)
+          require(pg.u8(25) == POverflow, s"page $p in overflow chain has type ${pg.u8(25)}")
+          val len = pg.u16(22)
+          pg.copyTo(HeaderSize, len, out, o)
+          o += len
+          p = pg.u32(16)
+        }
+        require(o == tlen, s"overflow chain length $o != declared $tlen")
+        out
+      }
+
+      def item(pg: ByteSlice, slot: Int): Array[Byte] = {
+        val off = pg.u16(HeaderSize + 2 * slot)
+        pg.u8(off + 2) match {
+          case BKeyData => pg.bytes(off + 3, pg.u16(off))
+          case BOverflow => overflowData(pg.u32(off + 4), pg.u32(off + 8))
+          case other =>
+            throw new IllegalArgumentException(
+              s"unsupported item type $other (duplicate sets are not supported)")
+        }
+      }
+
+      var p = root.toLong
+      var pg = visit(p)
+      while (pg.u8(24) > 1) {
+        require(pg.u8(25) == PBtreeInternal, s"level>1 page $p has type ${pg.u8(25)}")
         // BINTERNAL slot 0: child pgno at item offset + 4
-        val off = pageOff(p) + u16(pageOff(p) + HeaderSize)
-        p = u32(off + 4).toInt
+        p = pg.u32(pg.u16(HeaderSize) + 4)
+        pg = visit(p)
       }
       val first = p
+      val firstPage = pg
       new Iterator[(Array[Byte], Array[Byte])] {
-        private var pg = first
+        private var pgno = first
+        private var cur = firstPage
         private var slot = 0
-        def hasNext: Boolean = pg != 0 && {
-          if (slot < entryCount(pg)) true
-          else { pg = nextPgno(pg); slot = 0; hasNext }
+        def hasNext: Boolean = {
+          while (pgno != 0 && slot >= cur.u16(20)) {
+            pgno = cur.u32(16)
+            if (pgno != 0) cur = visit(pgno)
+            slot = 0
+          }
+          pgno != 0
         }
         def next(): (Array[Byte], Array[Byte]) = {
-          require(pageType(pg) == PBtreeLeaf, s"leaf chain page $pg has type ${pageType(pg)}")
-          val k = item(pg, slot)
-          val v = item(pg, slot + 1)
+          require(cur.u8(25) == PBtreeLeaf, s"leaf chain page $pgno has type ${cur.u8(25)}")
+          val k = item(cur, slot)
+          val v = item(cur, slot + 1)
           slot += 2
           (k, v)
         }

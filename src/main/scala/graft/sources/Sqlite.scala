@@ -1,7 +1,8 @@
 package graft.sources
 
-import java.nio.ByteBuffer
 import scala.collection.mutable.ArrayBuffer
+
+import graft.core.ByteSlice
 
 /** Minimal pure-JVM SQLite 3 database file codec — enough of the
   * public file format (https://www.sqlite.org/fileformat2.html) to
@@ -26,50 +27,19 @@ object Sqlite {
   // ---------------------------------------------------------------- //
 
   /** SQLite varint: big-endian base-128, 1-9 bytes; the 9th byte
-    * carries 8 payload bits. */
-  def writeVarint(out: ArrayBuffer[Byte], v0: Long): Unit = {
-    val v = v0
-    if (v >= 0 && v <= 0x7f) { out += v.toByte; return }
-    // collect 7-bit groups from the low end; 9-byte form not needed for
-    // our payload sizes but handled for completeness
+    * carries 8 payload bits (read back by [[ByteSlice.varint]]). */
+  def writeVarint(out: ArrayBuffer[Byte], v: Long): Unit =
     if ((v >>> 56) != 0) {
-      // needs the 9-byte form: 8 high-bit bytes + full low byte
-      var i = 8
-      val bytes = new Array[Byte](9)
-      bytes(8) = (v & 0xff).toByte
-      var rest = v >>> 8
-      i = 7
-      while (i >= 0) {
-        bytes(i) = ((rest & 0x7f) | 0x80).toByte
-        rest >>= 7
-        i -= 1
+      (0 until 8).foreach(i => out += (((v >>> (57 - 7 * i)) & 0x7f) | 0x80).toByte)
+      out += v.toByte
+    } else
+      (varintSize(v) - 1 to 0 by -1).foreach { i =>
+        out += (((v >>> (7 * i)) & 0x7f) | (if (i > 0) 0x80 else 0)).toByte
       }
-      out ++= bytes
-      return
-    }
-    val groups = ArrayBuffer.empty[Byte]
-    var rest = v
-    while (rest != 0) {
-      groups += (rest & 0x7f).toByte
-      rest >>>= 7
-    }
-    var i = groups.length - 1
-    while (i >= 1) { out += (groups(i) | 0x80).toByte; i -= 1 }
-    out += groups(0)
-  }
 
-  /** Read a varint at `pos`; returns (value, bytesConsumed). */
-  def readVarint(b: Array[Byte], pos: Int): (Long, Int) = {
-    var v = 0L
-    var i = 0
-    while (i < 8) {
-      val x = b(pos + i) & 0xff
-      v = (v << 7) | (x & 0x7f)
-      if ((x & 0x80) == 0) return (v, i + 1)
-      i += 1
-    }
-    ((v << 8) | (b(pos + 8) & 0xff), 9)
-  }
+  /** The bytes [[writeVarint]] writes for `v`. */
+  private def varintSize(v: Long): Int =
+    if ((v >>> 56) != 0) 9 else math.max(1, (70 - java.lang.Long.numberOfLeadingZeros(v)) / 7)
 
   sealed trait Value
   case object NullValue extends Value
@@ -95,13 +65,10 @@ object Sqlite {
           else if (v >= -140737488355328L && v <= 140737488355327L) 6
           else 8
         writeVarint(types, Seq(1, 2, 3, 4, 6, 8).indexOf(nBytes) + 1L)
-        var i = nBytes - 1
-        while (i >= 0) { body += ((v >> (8 * i)) & 0xff).toByte; i -= 1 }
+        body ++= ByteSlice.pack(nBytes)(v)
       case FloatValue(v) =>
         writeVarint(types, 7L)
-        val bits = java.lang.Double.doubleToLongBits(v)
-        var i = 7
-        while (i >= 0) { body += ((bits >> (8 * i)) & 0xff).toByte; i -= 1 }
+        body ++= ByteSlice.pack(8)(java.lang.Double.doubleToLongBits(v))
       case TextValue(s) =>
         val utf = s.getBytes("UTF-8")
         writeVarint(types, 13L + 2L * utf.length)
@@ -113,11 +80,6 @@ object Sqlite {
     // header length varint includes itself — its own encoded size can
     // bump the length across a varint width boundary; iterate to the
     // fixpoint
-    def varintSize(v: Long): Int = {
-      val probe = ArrayBuffer.empty[Byte]
-      writeVarint(probe, v)
-      probe.length
-    }
     var hdrLen = types.length + 1
     while (types.length + varintSize(hdrLen.toLong) != hdrLen)
       hdrLen = types.length + varintSize(hdrLen.toLong)
@@ -130,20 +92,19 @@ object Sqlite {
 
   /** Parse a record into values. */
   def decodeRecord(payload: Array[Byte]): IndexedSeq[Value] = {
-    val (hdrLen, n0) = readVarint(payload, 0)
-    var p = n0
+    val r = ByteSlice(payload)
+    val (hdrLen, n0) = r.varint(0)
+    var p = n0.toLong
     val types = ArrayBuffer.empty[Long]
     while (p < hdrLen) {
-      val (t, n) = readVarint(payload, p)
+      val (t, n) = r.varint(p)
       types += t
       p += n
     }
-    var body = hdrLen.toInt
+    var body = hdrLen
     types.map { t =>
       def intOf(nBytes: Int): Long = {
-        var v = if ((payload(body) & 0x80) != 0) -1L else 0L
-        var i = 0
-        while (i < nBytes) { v = (v << 8) | (payload(body + i) & 0xff); i += 1 }
+        val v = r.signed(body, nBytes)
         body += nBytes
         v
       }
@@ -159,13 +120,13 @@ object Sqlite {
         case 8 => IntValue(0)
         case 9 => IntValue(1)
         case n if n >= 12 && n % 2 == 0 =>
-          val len = ((n - 12) / 2).toInt
-          val v = java.util.Arrays.copyOfRange(payload, body, body + len)
+          val len = (n - 12) / 2
+          val v = r.bytes(body, len)
           body += len
           BlobValue(v)
         case n if n >= 13 =>
-          val len = ((n - 13) / 2).toInt
-          val v = new String(payload, body, len, "UTF-8")
+          val len = (n - 13) / 2
+          val v = r.string(body, len, "UTF-8")
           body += len
           TextValue(v)
         case other => throw new IllegalArgumentException(s"serial type $other")
@@ -181,24 +142,8 @@ object Sqlite {
   private final class Pages {
     val pages = ArrayBuffer.empty[Array[Byte]]
     def alloc(): Int = { pages += new Array[Byte](PageSize); pages.length }
-    def apply(n: Int): Array[Byte] = pages(n - 1)
+    def apply(n: Int): ByteSlice = ByteSlice(pages(n - 1))
   }
-
-  private def putU16(p: Array[Byte], off: Int, v: Int): Unit = {
-    p(off) = ((v >> 8) & 0xff).toByte
-    p(off + 1) = (v & 0xff).toByte
-  }
-  private def putU32(p: Array[Byte], off: Int, v: Long): Unit = {
-    p(off) = ((v >> 24) & 0xff).toByte
-    p(off + 1) = ((v >> 16) & 0xff).toByte
-    p(off + 2) = ((v >> 8) & 0xff).toByte
-    p(off + 3) = (v & 0xff).toByte
-  }
-  private def u16(p: Array[Byte], off: Int): Int =
-    ((p(off) & 0xff) << 8) | (p(off + 1) & 0xff)
-  private def u32(p: Array[Byte], off: Int): Long =
-    ((p(off) & 0xffL) << 24) | ((p(off + 1) & 0xffL) << 16) |
-      ((p(off + 2) & 0xffL) << 8) | (p(off + 3) & 0xffL)
 
   /** Overflow split for a TABLE LEAF cell: (localBytes, spilled). */
   private def leafLocal(payload: Int): Int = {
@@ -209,6 +154,24 @@ object Sqlite {
       val m = ((u - 12) * 32) / 255 - 23
       val k = m + (payload - m) % (u - 4)
       if (k <= x) k else m
+    }
+  }
+
+  /** Append `payload`'s first `local` bytes to `cell`; the rest goes to
+    * a chain of newly allocated overflow pages (next-page pointer, then
+    * data), and the chain's first page number ends the cell. */
+  private def spill(pages: Pages, cell: ArrayBuffer[Byte], payload: Array[Byte], local: Int): Unit = {
+    cell ++= payload.slice(0, local)
+    if (local < payload.length) {
+      val starts = local until payload.length by (PageSize - 4)
+      val first = pages.alloc()
+      starts.tail.foreach(_ => pages.alloc())
+      starts.zipWithIndex.foreach { case (off, i) =>
+        val p = pages(first + i)
+        p.putU32(0, if (i + 1 < starts.length) first + i + 1L else 0L)
+        p.put(4, payload.slice(off, off + PageSize - 4))
+      }
+      cell ++= ByteSlice.pack(4)(first.toLong)
     }
   }
 
@@ -227,32 +190,7 @@ object Sqlite {
       val cell = ArrayBuffer.empty[Byte]
       writeVarint(cell, payload.length.toLong)
       writeVarint(cell, r.rowid)
-      if (local == payload.length) cell ++= payload.slice(0, local)
-      else {
-        // overflow chain: allocate pages, chain next-pointers
-        cell ++= payload.slice(0, local)
-        var off = local
-        val chain = ArrayBuffer.empty[Int]
-        while (off < payload.length) {
-          val pn = pages.alloc()
-          chain += pn
-          off += math.min(PageSize - 4, payload.length - off)
-        }
-        var i = 0
-        off = local
-        while (i < chain.length) {
-          val p = pages(chain(i))
-          val next = if (i + 1 < chain.length) chain(i + 1) else 0
-          putU32(p, 0, next.toLong)
-          val n = math.min(PageSize - 4, payload.length - off)
-          System.arraycopy(payload, off, p, 4, n)
-          off += n
-          i += 1
-        }
-        val ptr = new Array[Byte](4)
-        putU32(ptr, 0, chain(0).toLong)
-        cell ++= ptr
-      }
+      spill(pages, cell, payload, local)
       Cell(cell.toArray, r.rowid)
     }
 
@@ -264,17 +202,17 @@ object Sqlite {
       if (pending.isEmpty) return
       val pn = pages.alloc()
       val p = pages(pn)
-      p(0) = 13
-      putU16(p, 3, pending.length)
+      p.putU8(0, 13)
+      p.putU16(3, pending.length)
       var content = PageSize
       var ptrOff = 8
       pending.foreach { c =>
         content -= c.bytes.length
-        System.arraycopy(c.bytes, 0, p, content, c.bytes.length)
-        putU16(p, ptrOff, content)
+        p.put(content, c.bytes)
+        p.putU16(ptrOff, content)
         ptrOff += 2
       }
-      putU16(p, 5, content)
+      p.putU16(5, content)
       leaves += ((pn, pending.last.rowid))
       pending.clear()
       pendingBytes = 0
@@ -292,9 +230,9 @@ object Sqlite {
       // empty table: a single empty leaf is the root
       val pn = pages.alloc()
       val p = pages(pn)
-      p(0) = 13
-      putU16(p, 3, 0)
-      putU16(p, 5, PageSize)
+      p.putU8(0, 13)
+      p.putU16(3, 0)
+      p.putU16(5, PageSize)
       return pn
     }
     // interior levels: cells are (leftChild u32, maxRowid varint)
@@ -311,9 +249,7 @@ object Sqlite {
           12 + 2 * (cells.length + 1) + bytes + 13 <= PageSize &&
           cells.length < 340) {
           val buf = ArrayBuffer.empty[Byte]
-          val ptr = new Array[Byte](4)
-          putU32(ptr, 0, level(i)._1.toLong)
-          buf ++= ptr
+          buf ++= ByteSlice.pack(4)(level(i)._1.toLong)
           writeVarint(buf, level(i)._2)
           cells += buf.toArray
           bytes += buf.length
@@ -328,18 +264,18 @@ object Sqlite {
         // level(i) becomes this page's right-most pointer
         val pn = pages.alloc()
         val p = pages(pn)
-        p(0) = 5
-        putU16(p, 3, cells.length)
-        putU32(p, 8, level(i)._1.toLong)
+        p.putU8(0, 5)
+        p.putU16(3, cells.length)
+        p.putU32(8, level(i)._1.toLong)
         var content = PageSize
         var ptrOff = 12
         cells.foreach { c =>
           content -= c.length
-          System.arraycopy(c, 0, p, content, c.length)
-          putU16(p, ptrOff, content)
+          p.put(content, c)
+          p.putU16(ptrOff, content)
           ptrOff += 2
         }
-        putU16(p, 5, content)
+        p.putU16(5, content)
         next += ((pn, level(i)._2))
         i += 1
         require(i > start, "interior packing must progress")
@@ -389,16 +325,6 @@ object Sqlite {
     * (a speculative allocation would orphan pages and fail
     * integrity_check's never-used scan). */
   private def buildIndex(pages: Pages, entries: Iterator[Array[Byte]]): Int = {
-    def varintSize(v: Long): Int = {
-      if (v >= 0 && v <= 0x7f) 1
-      else if ((v >>> 56) != 0) 9
-      else {
-        var n = 0
-        var rest = v
-        while (rest != 0) { n += 1; rest >>>= 7 }
-        n
-      }
-    }
     def cellSize(payloadLen: Int): Int = {
       val local = indexLocal(payloadLen)
       varintSize(payloadLen.toLong) + local + (if (local < payloadLen) 4 else 0)
@@ -408,29 +334,7 @@ object Sqlite {
       val local = indexLocal(payload.length)
       val cell = ArrayBuffer.empty[Byte]
       writeVarint(cell, payload.length.toLong)
-      if (local == payload.length) cell ++= payload
-      else {
-        cell ++= payload.slice(0, local)
-        var off = local
-        val chain = ArrayBuffer.empty[Int]
-        while (off < payload.length) {
-          chain += pages.alloc()
-          off += math.min(PageSize - 4, payload.length - off)
-        }
-        var i = 0
-        off = local
-        while (i < chain.length) {
-          val p = pages(chain(i))
-          putU32(p, 0, (if (i + 1 < chain.length) chain(i + 1) else 0).toLong)
-          val n = math.min(PageSize - 4, payload.length - off)
-          System.arraycopy(payload, off, p, 4, n)
-          off += n
-          i += 1
-        }
-        val ptr = new Array[Byte](4)
-        putU32(ptr, 0, chain(0).toLong)
-        cell ++= ptr
-      }
+      spill(pages, cell, payload, local)
       cell.toArray
     }
 
@@ -449,18 +353,18 @@ object Sqlite {
       }
       val pn = pages.alloc()
       val p = pages(pn)
-      p(0) = 10
-      putU16(p, 3, pending.length)
+      p.putU8(0, 10)
+      p.putU16(3, pending.length)
       var content = PageSize
       var ptrOff = 8
       pending.foreach { payload =>
         val c = cellBytes(payload)
         content -= c.length
-        System.arraycopy(c, 0, p, content, c.length)
-        putU16(p, ptrOff, content)
+        p.put(content, c)
+        p.putU16(ptrOff, content)
         ptrOff += 2
       }
-      putU16(p, 5, content)
+      p.putU16(5, content)
       children += pn
       pending.clear()
       pendingCellBytes = 0
@@ -508,20 +412,20 @@ object Sqlite {
         }
         val pn = pages.alloc()
         val p = pages(pn)
-        p(0) = 2
-        putU16(p, 3, group.length)
-        putU32(p, 8, kids(i).toLong)
+        p.putU8(0, 2)
+        p.putU16(3, group.length)
+        p.putU32(8, kids(i).toLong)
         var content = PageSize
         var ptrOff = 12
         group.foreach { gi =>
           val c = cellBytes(divs(gi))
           content -= c.length + 4
-          putU32(p, content, kids(gi).toLong)
-          System.arraycopy(c, 0, p, content + 4, c.length)
-          putU16(p, ptrOff, content)
+          p.putU32(content, kids(gi).toLong)
+          p.put(content + 4, c)
+          p.putU16(ptrOff, content)
           ptrOff += 2
         }
-        putU16(p, 5, content)
+        p.putU16(5, content)
         nextKids += pn
         if (i < kids.length - 1) nextDivs += divs(i) // divider after right-most child
         i += 1
@@ -578,8 +482,8 @@ object Sqlite {
     }
     val p1 = pages(1)
     // b-tree header at offset 100 on page 1
-    p1(100) = 13
-    putU16(p1, 103, masterRecords.length)
+    p1.putU8(100, 13)
+    p1.putU16(103, masterRecords.length)
     var content = PageSize
     var ptrOff = 108
     masterRecords.foreach { r =>
@@ -591,33 +495,29 @@ object Sqlite {
         content - cell.length >= ptrOff + 2,
         "schema too large for a single master page")
       content -= cell.length
-      System.arraycopy(cell.toArray, 0, p1, content, cell.length)
-      putU16(p1, ptrOff, content)
+      p1.put(content, cell.toArray)
+      p1.putU16(ptrOff, content)
       ptrOff += 2
     }
-    putU16(p1, 105, content)
+    p1.putU16(105, content)
     // 100-byte file header
-    val magic = "SQLite format 3".getBytes("UTF-8") :+ 0.toByte
-    System.arraycopy(magic, 0, p1, 0, 16)
-    putU16(p1, 16, PageSize)
-    p1(18) = 1 // file format write version (legacy)
-    p1(19) = 1 // read version
-    p1(20) = 0 // reserved bytes per page
-    p1(21) = 64
-    p1(22) = 32
-    p1(23) = 32
-    putU32(p1, 24, 1L) // change counter
-    putU32(p1, 28, pages.pages.length.toLong) // db size in pages
-    putU32(p1, 40, 1L) // schema cookie
+    p1.put(0, "SQLite format 3".getBytes("UTF-8") :+ 0.toByte)
+    p1.putU16(16, PageSize)
+    // write and read versions 1 (legacy), 0 reserved bytes per page,
+    // payload fractions 64/32/32
+    p1.put(18, Array[Byte](1, 1, 0, 64, 32, 32))
+    p1.putU32(24, 1L) // change counter
+    p1.putU32(28, pages.pages.length.toLong) // db size in pages
+    p1.putU32(40, 1L) // schema cookie
     // schema format 4: serial types 8/9 (integer 0/1 constants, which
     // encodeRecord emits) are only legal under format 4+ per
     // sqlite.org/fileformat2.html §Record Format
-    putU32(p1, 44, 4L)
-    putU32(p1, 56, 1L) // text encoding: UTF-8
-    putU32(p1, 60, userVersion) // e.g. GeoPackage spec version stamp
-    putU32(p1, 68, applicationId) // e.g. 0x47504B47 "GPKG"
-    putU32(p1, 92, 1L) // version-valid-for == change counter
-    putU32(p1, 96, 3045001L) // sqlite version number stamp
+    p1.putU32(44, 4L)
+    p1.putU32(56, 1L) // text encoding: UTF-8
+    p1.putU32(60, userVersion) // e.g. GeoPackage spec version stamp
+    p1.putU32(68, applicationId) // e.g. 0x47504B47 "GPKG"
+    p1.putU32(92, 1L) // version-valid-for == change counter
+    p1.putU32(96, 3045001L) // sqlite version number stamp
     pages.pages.foreach(out.write)
   }
 
@@ -629,61 +529,78 @@ object Sqlite {
     * single-file units, like zip archives — the distributed axis is
     * many archives, not one giant file). */
   final class Database(bytes: Array[Byte]) {
+    private val file = ByteSlice(bytes)
     require(bytes.length >= 100, "not a SQLite file: too short")
     require(
-      new String(bytes, 0, 15, "UTF-8") == "SQLite format 3",
+      file.string(0, 15, "UTF-8") == "SQLite format 3",
       "not a SQLite file: bad magic")
     val pageSize: Int = {
-      val v = ((bytes(16) & 0xff) << 8) | (bytes(17) & 0xff)
+      val v = file.u16(16)
       if (v == 1) 65536 else v
     }
-    val reserved: Int = bytes(20) & 0xff
+    val reserved: Int = file.u8(20)
     val usable: Int = pageSize - reserved
-    private val textEncoding = u32(bytes, 56)
+    require(pageSize >= 512 && (pageSize & (pageSize - 1)) == 0 && usable >= 480,
+      s"bad page size $pageSize with $reserved reserved bytes")
+    private val textEncoding = file.u32(56)
     require(
       textEncoding <= 1,
       s"unsupported text encoding $textEncoding (UTF-16 dbs out of scope)")
 
-    private def page(n: Int): Int = (n - 1) * pageSize // offset of page n
+    private def page(n: Long): ByteSlice = file.slice((n - 1) * pageSize, pageSize)
 
     /** Walk a table b-tree rooted at `root`, invoking f per (rowid,
-      * record payload). */
+      * record payload). Each b-tree and overflow page is visited at most
+      * once: a pointer back to a visited page (a cycle, or an overflow
+      * page shared by two cells) throws instead of walking forever. The
+      * walk keeps its own stack, in the order a recursive in-order
+      * descent would visit the pages. */
     def walkTable(root: Int)(f: (Long, Array[Byte]) => Unit): Unit = {
-      val off = page(root)
-      val hdrOff = if (root == 1) off + 100 else off
-      val pageType = bytes(hdrOff) & 0xff
-      val nCells = ((bytes(hdrOff + 3) & 0xff) << 8) | (bytes(hdrOff + 4) & 0xff)
-      pageType match {
-        case 5 =>
-          val ptrArray = hdrOff + 12
-          var i = 0
-          while (i < nCells) {
-            val cellOff = off + (((bytes(ptrArray + 2 * i) & 0xff) << 8) |
-              (bytes(ptrArray + 2 * i + 1) & 0xff))
-            walkTable(u32(bytes, cellOff).toInt)(f)
-            i += 1
-          }
-          walkTable(u32(bytes, hdrOff + 8).toInt)(f)
-        case 13 =>
-          val ptrArray = hdrOff + 8
-          var i = 0
-          while (i < nCells) {
-            val cellOff = off + (((bytes(ptrArray + 2 * i) & 0xff) << 8) |
-              (bytes(ptrArray + 2 * i + 1) & 0xff))
-            val (payloadLen, n1) = readVarint(bytes, cellOff)
-            val (rowid, n2) = readVarint(bytes, cellOff + n1)
-            val payload = readPayload(cellOff + n1 + n2, payloadLen.toInt)
-            f(rowid, payload)
-            i += 1
-          }
-        case 2 | 10 => // index pages: ignored (we only walk tables)
-        case other =>
-          throw new IllegalArgumentException(s"unexpected page type $other")
+      val seen = scala.collection.mutable.HashSet.empty[Long]
+      def visit(n: Long): ByteSlice = {
+        require(seen.add(n), s"page $n is reached twice")
+        page(n)
+      }
+      val stack = scala.collection.mutable.Stack[Long](root.toLong)
+      while (stack.nonEmpty) {
+        val n = stack.pop()
+        val p = visit(n)
+        val hdr = if (n == 1) 100 else 0
+        val nCells = p.u16(hdr + 3)
+        p.u8(hdr) match {
+          case 5 =>
+            stack.push(p.u32(hdr + 8))
+            var i = nCells - 1
+            while (i >= 0) {
+              stack.push(p.u32(p.u16(hdr + 12 + 2 * i)))
+              i -= 1
+            }
+          case 13 =>
+            var i = 0
+            while (i < nCells) {
+              val cell = p.u16(hdr + 8 + 2 * i)
+              val (payloadLen, n1) = p.varint(cell)
+              val (rowid, n2) = p.varint(cell + n1)
+              f(rowid, readPayload(p, cell + n1 + n2, payloadLen, visit))
+              i += 1
+            }
+          case 2 | 10 => // index pages: ignored (we only walk tables)
+          case other =>
+            throw new IllegalArgumentException(s"unexpected page type $other")
+        }
       }
     }
 
-    /** Reassemble a possibly-overflowing leaf payload. */
-    private def readPayload(localOff: Int, total: Int): Array[Byte] = {
+    /** Reassemble a possibly-overflowing leaf payload of `total` bytes
+      * whose local part starts at `localOff` of page `p`, reading its
+      * overflow pages through `visit`. A payload cannot hold more bytes
+      * than the file, so a larger length field is rejected before
+      * anything is allocated. */
+    private def readPayload(p: ByteSlice, localOff: Int, total0: Long,
+        visit: Long => ByteSlice): Array[Byte] = {
+      require(total0 >= 0 && total0 <= bytes.length,
+        s"payload length $total0 exceeds the file (${bytes.length} bytes)")
+      val total = total0.toInt
       val u = usable
       val x = u - 35
       val local =
@@ -693,19 +610,18 @@ object Sqlite {
           val k = m + (total - m) % (u - 4)
           if (k <= x) k else m
         }
-      if (local == total)
-        java.util.Arrays.copyOfRange(bytes, localOff, localOff + total)
+      if (local == total) p.bytes(localOff, total)
       else {
         val out = new Array[Byte](total)
-        System.arraycopy(bytes, localOff, out, 0, local)
-        var next = u32(bytes, localOff + local).toInt
+        p.copyTo(localOff, local, out, 0)
+        var next = p.u32(localOff + local)
         var off = local
         while (next != 0 && off < total) {
-          val pOff = page(next)
+          val o = visit(next)
           val n = math.min(u - 4, total - off)
-          System.arraycopy(bytes, pOff + 4, out, off, n)
+          o.copyTo(4, n, out, off)
           off += n
-          next = u32(bytes, pOff).toInt
+          next = o.u32(0)
         }
         require(off == total, s"overflow chain truncated at $off/$total")
         out

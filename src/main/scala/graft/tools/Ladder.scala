@@ -19,12 +19,14 @@ import graft.text.TextOps
   * prints one JSON line per rung, rewrites the entry's `BENCH/<doc>.md`
   * and exits 1 when a rung failed.
   *
-  * A rung is timed by Profile's sampling: `Profile.Samples` cold runs of
-  * the entry's `build` and a drain of its rows, with medians, the 1-min
-  * loadavg before each run and the layer counters. The rung is then
-  * checked once, untimed: `check` gets a fresh `build` and returns the
-  * rung's facts (pairs, candidates, planted found/expected, errors),
-  * throwing when a planted truth does not hold. An input that the timing
+  * A rung is first checked once, untimed: `check` gets a fresh `build`
+  * and returns the rung's facts (pairs, candidates, planted
+  * found/expected, errors), throwing when a planted truth does not hold.
+  * It is then timed by Profile's sampling: `Profile.Samples` runs of the
+  * entry's `build` and a drain of its rows, with medians, the 1-min
+  * loadavg before each run and the layer counters. The check runs the
+  * code once before the timing, so no sample pays JIT and class-loading
+  * warm-up. An input that the timing
   * must leave out is `localCheckpoint`ed inside `build`, so its
   * generation lands in `phase.construct_s` and `phase.exec_s` is the
   * operator alone. Cores: `SPARK_GRAFT_CPUS`, else every available
@@ -55,12 +57,14 @@ object Ladder {
         error.fold("")(e => s""","error":${Profile.str(e)}""") + "}"
   }
 
-  /** Times and checks one rung; never throws. */
+  /** Checks, then times, one rung; never throws. */
   private def rung(spark: SparkSession, name: String, entry: Entry, r: Rung): Result = {
-    val sampled = Try(Profile.sampled(spark, () => entry.build(spark, r)))
-    val facts = sampled.flatMap(_ => Try(entry.check(spark, r, entry.build(spark, r))))
+    val facts = Try(entry.check(spark, r, entry.build(spark, r)))
     spark.sharedState.cacheManager.clearCache()
-    Result(name, r, sampled.toOption, facts.getOrElse(Nil), facts.failed.toOption.map(_.toString))
+    val sampled = Try(Profile.sampled(spark, () => entry.build(spark, r)))
+    spark.sharedState.cacheManager.clearCache()
+    val error = facts.failed.toOption.orElse(sampled.failed.toOption)
+    Result(name, r, sampled.toOption, facts.getOrElse(Nil), error.map(_.toString))
   }
 
   /** Times and checks `rungs` in order, printing each rung's JSON line. */
@@ -91,11 +95,12 @@ object Ladder {
     s"""# ${entry.title}
        |
        |Generated by `sbt "runMain graft.tools.Ladder $name"` on a box
-       |with nproc ${Runtime.getRuntime.availableProcessors}, at local[$cores]. Times are medians of ${Profile.Samples} cold
+       |with nproc ${Runtime.getRuntime.availableProcessors}, at local[$cores]. Times are medians of ${Profile.Samples}
        |samples (`Profile`'s sampling): construct s is DataFrame
        |construction, including any input materialized for the timing, and
        |exec s is the drain of the result. The facts come from one untimed
-       |check run, which fails the rung when a planted truth does not hold.
+       |check run before the samples, so every sample runs warm code; the
+       |check fails the rung when a planted truth does not hold.
        |loadavg is the 1-min load before each sample.
        |
        |${entry.about}

@@ -3,13 +3,18 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.image.ImageCodec
+import graft.multimodal.Multimodal
 
 /** Hostile-input behavior of the from-scratch codecs: truncated and
   * garbage archives must raise promptly (store reads fail LOUDLY —
   * the contract argued in MBTiles.read), while the multimodal
   * extractors route the same inputs to their error column without
-  * throwing. Nothing may hang or succeed silently with wrong data. */
+  * throwing. Nothing may hang or succeed silently with wrong data:
+  * a page walk that meets a cycle and a length field larger than the
+  * file both end in an `Exception`, within a time bound. */
 class RobustnessSpec extends SparkTestBase {
+  import HostileInputSpec.{putU32, u16, within}
 
   private def tiles = (0 until 40).iterator.map { i =>
     (5L, (i % 8).toLong, (i / 8).toLong, Array.fill(50)(i.toByte))
@@ -90,5 +95,84 @@ class RobustnessSpec extends SparkTestBase {
     // no error column: bad rows are dropped
     assert(Multimodal.resizeImages(junk, 8).count() === 0L)
     assert(Multimodal.pixelRows(junk).count() === 0L)
+  }
+
+  /** `decode` ends within 10 s by throwing an `IllegalArgumentException`;
+    * run on a daemon thread, so a walk that never ends fails here
+    * instead of hanging the suite. */
+  private def rejectsInTime(decode: => Any): Unit =
+    within(10)(decode) match {
+      case None => fail("still running after 10 s")
+      case Some(r) => assert(r.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]), r)
+    }
+
+  test("a SQLite b-tree page that is its own child fails instead of walking forever") {
+    val db = GeoPackage.encode(tiles, "tiles", minZ = 5, maxZ = 5)
+    // page 1: an interior table page (type 5) with 0 cells whose
+    // right-most child is page 1
+    db(100) = 5
+    db(103) = 0
+    db(104) = 0
+    putU32(db, 108, 1L, bigEndian = true)
+    rejectsInTime(new Sqlite.Database(db).tables)
+  }
+
+  test("a Berkeley DB page chain that loops back fails instead of yielding rows forever") {
+    val one = Bsddb.encode(Seq(("k".getBytes, "v".getBytes)))
+    putU32(one, Bsddb.PageSize + 16, 1L, bigEndian = false) // leaf 1's next page: itself
+    rejectsInTime(Bsddb.decode(one).foreach(_ => ()))
+    // the internal-page descent: the root's first child is the root
+    val many = Bsddb.encode((0 until 400).map(i => (f"k$i%04d".getBytes, Array.fill(60)(i.toByte))))
+    val root = u16(many, 88, bigEndian = false)
+    val page = root * Bsddb.PageSize
+    assert(many(page + 25) == Bsddb.PBtreeInternal)
+    putU32(many, page + u16(many, page + Bsddb.HeaderSize, bigEndian = false) + 4, root.toLong, bigEndian = false)
+    rejectsInTime(Bsddb.decode(many).foreach(_ => ()))
+  }
+
+  test("length fields larger than the file are rejected before anything is allocated") {
+    // SQLite: the one tile's leaf cell declares a 0x7fffffff-byte payload
+    val gpkg = GeoPackage.encode(Iterator((5L, 0L, 0L, Array.fill(300)(0x5a.toByte))), "tiles", 5, 5)
+    val leaf = (new Sqlite.Database(gpkg).tables("tiles") - 1) * Sqlite.PageSize
+    assert(gpkg(leaf) == 13)
+    val cell = leaf + u16(gpkg, leaf + 8, bigEndian = true)
+    // varint 0x7fffffff, then rowid 1
+    Seq(0x87, 0xff, 0xff, 0xff, 0x7f, 0x01).zipWithIndex.foreach { case (v, i) => gpkg(cell + i) = v.toByte }
+    intercept[IllegalArgumentException](GeoPackage.decode(gpkg).toList)
+    // Berkeley DB: an overflow item that declares 0x7fffffff bytes
+    val bdb = Bsddb.encode(Seq(("k".getBytes, Array.fill(3000)(1.toByte))))
+    val items = for {
+      p <- 1 until bdb.length / Bsddb.PageSize
+      start = p * Bsddb.PageSize if bdb(start + 25) == Bsddb.PBtreeLeaf
+      slot <- 0 until u16(bdb, start + 20, bigEndian = false)
+      item = start + u16(bdb, start + Bsddb.HeaderSize + 2 * slot, bigEndian = false)
+      if bdb(item + 2) == Bsddb.BOverflow
+    } yield item
+    assert(items.size == 1)
+    putU32(bdb, items.head + 8, 0x7fffffffL, bigEndian = false)
+    intercept[IllegalArgumentException](Bsddb.decode(bdb).toList)
+    // MP4: 0x7fffffff uniform 64-byte samples; the parser rejects the
+    // count, and videoMeta gives the row an error
+    val mp4 = Multimodal.synthMp4(4)
+    val stsz = new String(mp4, "ISO-8859-1").indexOf("stsz") + 4
+    putU32(mp4, stsz + 4, 64L, bigEndian = true)
+    putU32(mp4, stsz + 8, 0x7fffffffL, bigEndian = true)
+    intercept[IllegalArgumentException](Multimodal.parseMp4(mp4))
+    val s = spark
+    import s.implicits._
+    val meta = Multimodal.videoMeta(Seq(("v", mp4)).toDF("media_id", "bytes")).collect()
+    assert(meta.length == 1 && meta.head.getAs[String]("error") != null)
+  }
+
+  test("a gzip payload that inflates past the cap gets an error, not an OutOfMemoryError") {
+    val cap = 64 << 20 // ImageCodec's gunzip output cap
+    val s = spark
+    import s.implicits._
+    val bomb = ImageCodec.gzip(new Array[Byte](cap + 1))
+    val out = graft.engine.Filters.gzipDecompress(
+      Seq(("bomb", bomb, "gzip")).toDF("id", "data", "content_encoding")).collect().head
+    assert(out.getAs[String]("error") == "gzip decompression failed")
+    assert(out.getAs[Array[Byte]]("data") == null)
+    assert(ImageCodec.gunzip(ImageCodec.gzip(new Array[Byte](cap))).length == cap)
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.ByteSlice
 import graft.sources.Sqlite._
 
 /** The pure-JVM SQLite codec, validated three ways: unit round-trips,
@@ -45,7 +46,7 @@ class SqliteSpec extends SparkTestBase {
     vals.foreach { v =>
       val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
       writeVarint(buf, v)
-      val (got, n) = readVarint(buf.toArray, 0)
+      val (got, n) = ByteSlice(buf.toArray).varint(0)
       assert(got == v && n == buf.length, s"varint $v")
     }
     val rec = Seq(
