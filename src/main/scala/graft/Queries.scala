@@ -1981,10 +1981,7 @@ object GraftQueries {
         val base = table(s, dir, "documents").select(col("doc_id"), col("text"))
         def chunk(c: Column, off: Int): Column =
           // kernel md5 slice — bit-identical to conv(substring(md5))
-          org.apache.spark.sql.GraftColumnBridge.column(
-            graft.sql.Md5PrefixExpr(
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                c.cast("binary")), 15, off))
+          graft.sql.Kernel.md5Prefix(c.cast("binary"), 15, off)
         val chunks = Seq(
           chunk(col("text"), 1), chunk(col("text"), 16),
           chunk(concat(col("text"), lit("#")), 1),
@@ -2206,7 +2203,7 @@ $spatialSceneSql
     // selection, the tie rule, and the pos/fp unpack in one hash.
     // md5 keys are the ORACLE-portable choice (DuckDB has no
     // xxhash64); winnowFingerprints computes them in one fused kernel
-    // (WinnowFpExpr), the same path winnowPairs runs.
+    // (graft.sql.Kernel.winnowFp), the same path winnowPairs runs.
     ("q73_winnow_fp",
       (s: SparkSession, dir: String) => {
         // explode_OUTER, then drop the null rows: a plain explode lets

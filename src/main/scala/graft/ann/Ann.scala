@@ -23,10 +23,7 @@ object Ann {
     // aggregate(zip_with(...)) fold, which was CodegenFallback and
     // allocated a product array per row — the per-row constant behind
     // every cosine/centroid distance in this module.
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.DotExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(asDouble(a)),
-        org.apache.spark.sql.GraftColumnBridge.expression(asDouble(b))))
+    graft.sql.Kernel.dot(asDouble(a), asDouble(b))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -231,10 +228,7 @@ object Ann {
     // kernel squared-L2 in ascending dimension order — identical IEEE
     // sum to the zip_with/aggregate fold (and to the oracle's list
     // comprehension)
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.L2Expr(
-        org.apache.spark.sql.GraftColumnBridge.expression(sub),
-        org.apache.spark.sql.GraftColumnBridge.expression(lit(c))))
+    graft.sql.Kernel.l2(sub, lit(c))
 
   /** Deterministic sampled codebooks: the subvectors of the `k`
     * lowest-id rows seed one centroid each per subspace (random-sample
@@ -445,10 +439,7 @@ object Ann {
       // still scans the vector column (storage I/O; a production
       // layout points nominees at an id-keyed table), but the
       // per-row distance arithmetic is nominees-only
-      val exact = org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.L2Expr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("__v")),
-          org.apache.spark.sql.GraftColumnBridge.expression(lit(query))))
+      val exact = graft.sql.Kernel.l2(col("__v"), lit(query))
       df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"))
         .join(broadcast(adc.select("id", "list_id")), "id")
         .select(col("id"), exact.as("dist2"), col("list_id"))
@@ -491,10 +482,7 @@ object Ann {
     val cand = pqAdcSearch(codes, codebooks, query, candidates).select("id")
     // exact L2 above the broadcast join: distance arithmetic runs for
     // nominated ids only (see ivfPqSearch rerank note)
-    val exact = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.L2Expr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("__v")),
-        org.apache.spark.sql.GraftColumnBridge.expression(lit(query))))
+    val exact = graft.sql.Kernel.l2(col("__v"), lit(query))
     df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"))
       .join(broadcast(cand), "id")
       .select(col("id"), exact.as("dist2"))

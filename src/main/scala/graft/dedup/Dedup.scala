@@ -24,16 +24,10 @@ object Dedup {
   /** 32-bit shingle base hash (first 8 md5 hex digits) — kernel
     * digest prefix, bit-identical to
     * `conv(substring(md5(c), 1, 8), 16, 10)`. */
-  def hash32(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.Md5PrefixExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(c.cast("binary")), 8))
+  def hash32(c: Column): Column = graft.sql.Kernel.md5Prefix(c.cast("binary"), 8)
 
   /** 60-bit token hash (15 md5 hex digits) — kernel digest prefix. */
-  def hash60(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.Md5PrefixExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(c.cast("binary")), 15))
+  def hash60(c: Column): Column = graft.sql.Kernel.md5Prefix(c.cast("binary"), 15)
 
   /** Word n-gram shingles of the lower-cased text (empty array when the
     * text has fewer than n words). */
@@ -136,10 +130,8 @@ object Dedup {
     // The per-document DISTINCT is row-local set semantics, so it runs
     // inside the kernel — the former corpus-wide `.distinct()` paid a
     // full (id, h) exchange just to dedup within each document.
-    val shingleHashes = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.ShingleHash32Expr(
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          TextOps.words(col(textCol))), n, distinct = true))
+    val shingleHashes =
+      graft.sql.Kernel.shingleHash32(TextOps.words(col(textCol)), n, distinct = true)
     val ds0 = parallelize(df)
       .select(col(idCol).as("id"), explode(shingleHashes).as("h"))
     val dfreq = ds0.groupBy("h").agg(count(lit(1)).as("__df"))
@@ -161,10 +153,8 @@ object Dedup {
     * join, never per candidate pair. Emits (da, db, common,
     * jaccard_e6) >= min. */
   def jaccardScore(cands: DataFrame, sets: DataFrame, minJaccardE6: Long): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     val byValue = sets.select(col("id"), sort_array(col("sa")).as("sv"), col("sz"))
-    val common = column(graft.sql.SortedIntersectCountExpr(
-      expression(col("__sa")), expression(col("__sb"))))
+    val common = graft.sql.Kernel.sortedIntersectCount(col("__sa"), col("__sb"))
     cands
       .join(byValue.select(col("id").as("da"), col("sv").as("__sa"), col("sz").as("na")), "da")
       .join(byValue.select(col("id").as("db"), col("sv").as("__sb"), col("sz").as("nb")), "db")
@@ -267,10 +257,8 @@ object Dedup {
       n: Int = 2): DataFrame = {
     // words -> digest-direct shingle hashes -> k mins, one kernel pass
     // (no shingle strings); values identical to
-    // MinHashSigExpr(shingles(text, n), k)
-    val sig = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.MinHashSigWordsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("__ws")), k, n))
+    // Kernel.minhashSig(shingles(text, n), k)
+    val sig = graft.sql.Kernel.minhashSigWords(col("__ws"), k, n)
     // row-set filter via the short-circuit count kernel: the collapsed
     // plan evaluates the filter and the sig projection in separate
     // operators, and size(words(text)) in the Filter paid a second full
@@ -279,9 +267,7 @@ object Dedup {
     // (KernelParitySpec property pin, Unicode included).
     parallelize(df)
       .withColumn("__ws", TextOps.words(col(textCol)))
-      .where(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.WordCountAtLeastExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)), n)))
+      .where(graft.sql.Kernel.wordCountAtLeast(col(textCol), n))
       .select(col(idCol).as("id"), sig.as("sig"))
   }
 
@@ -521,14 +507,10 @@ object Dedup {
     * (multiplicity-weighted votes, strict-positive bit rule); docs
     * with no words drop out exactly as the explode dropped them. */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sig = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.SimHash60Expr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("__ws"))))
+    val sig = graft.sql.Kernel.simhash60(col("__ws"))
     // short-circuit count kernel for the row-set filter — same rationale
     // as minhashSigArray (Filter/Project don't share the tokenization)
-    df.where(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.WordCountAtLeastExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)), 1)))
+    df.where(graft.sql.Kernel.wordCountAtLeast(col(textCol), 1))
       .select(col(idCol).as("id"), TextOps.words(col(textCol)).as("__ws"))
       .select(col("id"), sig.as("simhash"))
   }
@@ -541,11 +523,7 @@ object Dedup {
     * per-element xor popcounts summed — one codegen kernel loop
     * (values identical to the zip_with/aggregate fold it replaces,
     * which was CodegenFallback and allocated a per-row int array). */
-  def hammingWide(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.HammingWideExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(a),
-        org.apache.spark.sql.GraftColumnBridge.expression(b)))
+  def hammingWide(a: Column, b: Column): Column = graft.sql.Kernel.hammingWide(a, b)
 
   /** Per-band bit widths of the [[hammingBandExplode]] layout:
     * `maxHamming + combine` bands of `bits / bands` bits each, the

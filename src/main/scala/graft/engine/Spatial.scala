@@ -51,11 +51,7 @@ object Spatial {
     // zip_with(rot)/aggregate-XOR HOF form, which was CodegenFallback
     // and built a rotated vertex array + crossing array per candidate
     // row — the dominant refine cost of the cell-prefiltered joins.
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.PointInPolygonExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(px.cast("double")),
-        org.apache.spark.sql.GraftColumnBridge.expression(py.cast("double")),
-        org.apache.spark.sql.GraftColumnBridge.expression(vertices)))
+    graft.sql.Kernel.pointInPolygon(px.cast("double"), py.cast("double"), vertices)
 
   /** Cell id of a point at `zoom` over the planar extent
     * (minX, minY, width, height): row-major `cy * 2^z + cx`, clamped
@@ -144,8 +140,7 @@ object Spatial {
     * cells the index always keeps. One codegen kernel loop per polygon
     * ([[graft.sql.SpatialKernels.tightCover]]). */
   def tightCover(vertices: Column, index: CellIndex): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(graft.sql.CellCoverExpr(
-      org.apache.spark.sql.GraftColumnBridge.expression(vertices), index))
+    graft.sql.Kernel.tightCover(vertices, index)
 
   /** Every cell of `index` in the polygon's bbox cell range: the
     * interpreted reference covers [[polygonCells]] and [[hexCover]],
@@ -259,11 +254,7 @@ object Spatial {
     * as a composed Column expands to a ~20x-repeated expression tree:
     * the cube-rounding conditionals defeat expression CSE). */
   def hexCellOfPoint(px: Column, py: Column, size: Double): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.HexCellExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(px.cast("double")),
-        org.apache.spark.sql.GraftColumnBridge.expression(py.cast("double")),
-        size))
+    graft.sql.Kernel.hexCell(px.cast("double"), py.cast("double"), size)
 
   /** Center of the hex cell in plane coordinates — the inverse of
     * [[hexCellOfPoint]] up to cell quantization (center maps back to

@@ -43,10 +43,29 @@ object ImageCodec {
       throw new IllegalArgumentException(s"unsupported content type: $other")
   }
 
+  /** Largest raster [[decode]] allocates, in pixels (2^26: 8192 x 8192,
+    * 256 MB at 4 bytes a pixel). ImageIO allocates the raster a header
+    * declares before it reads any pixel data, so a few hundred bytes
+    * declaring 26000 x 26000 pixels cost over a second and gigabytes of
+    * heap before the read fails; the declared size is checked first. */
+  val MaxPixels: Long = 1L << 26
+
   def decode(data: Array[Byte]): BufferedImage = {
-    val img = ImageIO.read(new ByteArrayInputStream(data))
-    require(img != null, "undecodable image bytes")
-    img
+    val in = ImageIO.createImageInputStream(new ByteArrayInputStream(data))
+    try {
+      val readers = ImageIO.getImageReaders(in)
+      require(readers.hasNext, "undecodable image bytes")
+      val reader = readers.next()
+      try {
+        reader.setInput(in, true, true)
+        val (w, h) = (reader.getWidth(0).toLong, reader.getHeight(0).toLong)
+        require(w * h <= MaxPixels,
+          s"image of $w x $h pixels is over the decode cap of $MaxPixels pixels")
+        val img = reader.read(0, reader.getDefaultReadParam)
+        require(img != null, "undecodable image bytes")
+        img
+      } finally reader.dispose()
+    } finally in.close()
   }
 
   /** JPEG quality for the lossy path. The PSNR >= 40 dB invariant

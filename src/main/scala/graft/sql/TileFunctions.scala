@@ -13,13 +13,6 @@ import graft.core.{BoundingPyramid, Extent, FreeTileGrid, QuadTileGrid, TileGrid
   */
 object TileFunctions {
 
-  // Spark 4 moved Column off catalyst Expression; the classic bridge is
-  // the supported way to wrap a custom Expression as a Column.
-  private def colOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(e)
-  private def exprOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.GraftColumnBridge.expression(c)
-
   // Spark's Scala `shiftleft(Column, Int)` takes a literal shift; the SQL
   // function accepts a column — route through call_function.
   private def shiftL(c: Column, bits: Column): Column =
@@ -44,20 +37,16 @@ object TileFunctions {
     pmod(tcHash(z, x, y), lit(n.toLong)) === lit(i.toLong)
 
   /** Quadkey string (hierarchical quadtree cell index). */
-  def quadkey(z: Column, x: Column, y: Column): Column =
-    colOf(QuadKeyExpr(
-      exprOf(z.cast("int")), exprOf(x.cast("long")), exprOf(y.cast("long"))))
+  def quadkey(z: Column, x: Column, y: Column): Column = Kernel.quadkey(z, x, y)
 
   /** 64-bit Z-order cell id `(1 << 2z) | morton(x, y)`. */
-  def cellId(z: Column, x: Column, y: Column): Column =
-    colOf(CellIdExpr(
-      exprOf(z.cast("int")), exprOf(x.cast("long")), exprOf(y.cast("long"))))
+  def cellId(z: Column, x: Column, y: Column): Column = Kernel.cellId(z, x, y)
 
   /** De-interleaved x / y / z of a Z-order cell id (inverse of
     * [[cellId]]; the parent cell is simply `shiftright(cell, 2)`). */
-  def cellX(cell: Column): Column = colOf(CellXExpr(exprOf(cell.cast("long"))))
-  def cellY(cell: Column): Column = colOf(CellYExpr(exprOf(cell.cast("long"))))
-  def cellZ(cell: Column): Column = colOf(CellZExpr(exprOf(cell.cast("long"))))
+  def cellX(cell: Column): Column = Kernel.cellX(cell)
+  def cellY(cell: Column): Column = Kernel.cellY(cell)
+  def cellZ(cell: Column): Column = Kernel.cellZ(cell)
 
   /** Hilbert-curve cell id — the locality-preserving physical-layout
     * key (sort / range-partition / cluster columns): consecutive ids
@@ -65,13 +54,11 @@ object TileFunctions {
     * CONNECTED map region; use [[cellId]]/[[quadkey]] when you need
     * bit-shift hierarchy instead. Same zoom sentinel as [[cellId]], so
     * [[cellZ]] reads its zoom. See [[TileCodecs.hilbertId]]. */
-  def hilbertId(z: Column, x: Column, y: Column): Column =
-    colOf(HilbertIdExpr(
-      exprOf(z.cast("int")), exprOf(x.cast("long")), exprOf(y.cast("long"))))
+  def hilbertId(z: Column, x: Column, y: Column): Column = Kernel.hilbertId(z, x, y)
 
   /** Inverse x / y of a Hilbert cell id. */
-  def hilbertX(cell: Column): Column = colOf(HilbertXExpr(exprOf(cell.cast("long"))))
-  def hilbertY(cell: Column): Column = colOf(HilbertYExpr(exprOf(cell.cast("long"))))
+  def hilbertX(cell: Column): Column = Kernel.hilbertX(cell)
+  def hilbertY(cell: Column): Column = Kernel.hilbertY(cell)
 
   /** Meta-tile snap: `(z, n*(x/n), n*(y/n))`
     * (reference __init__.py:470-471). Returns (mx, my) columns. */

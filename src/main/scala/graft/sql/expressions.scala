@@ -1,13 +1,11 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Quadkey / quadtree-cell codecs as native codegen-capable Catalyst
-  * expressions. The quadkey digit stream is the reference's I3D quadcode
+/** Quadkey / quadtree-cell codecs, called from Catalyst through the
+  * [[Kernel]] builders. The quadkey digit stream is the reference's I3D quadcode
   * (reference layout/i3d.py:25-43) — the engine's hierarchical cell index
   * (S2/H3 analogue): prefix containment equals spatial containment, and
   * the interleaved bits give a Z-order (Morton) key for range
@@ -28,6 +26,10 @@ object TileCodecs {
     }
     new String(chars)
   }
+
+  /** [[quadkey]] as the Catalyst string a kernel call returns. */
+  def quadkeyUtf8(z: Int, x: Long, y: Long): UTF8String =
+    UTF8String.fromString(quadkey(z, x, y))
 
   /** 64-bit quadtree cell id: Morton-interleaved (y,x) bits prefixed by a
     * sentinel 1-bit so ids of different zooms never collide:
@@ -149,134 +151,6 @@ object TileCodecs {
   def hilbertY(cell: Long): Long = hilbertToCoord(cell)._3
 }
 
-/** `tc_quadkey(z, x, y)` — quadkey string, codegen-capable. */
-case class QuadKeyExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  // callers (TileFunctions.quadkey / the registry wrapper) cast inputs
-  // to (INT, BIGINT, BIGINT)
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(z: Any, x: Any, y: Any): Any =
-    UTF8String.fromString(
-      TileCodecs.quadkey(
-        z.asInstanceOf[Int],
-        x.asInstanceOf[Long],
-        y.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (z, x, y) =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.sql.TileCodecs.quadkey($z, $x, $y))")
-
-  override protected def withNewChildrenInternal(
-      f: Expression,
-      s: Expression,
-      t: Expression): Expression = copy(f, s, t)
-}
-
-/** `tc_cellid(z, x, y)` — 64-bit Z-order cell id, codegen-capable. */
-case class CellIdExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(z: Any, x: Any, y: Any): Any =
-    TileCodecs.cellId(
-      z.asInstanceOf[Int],
-      x.asInstanceOf[Long],
-      y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (z, x, y) => s"graft.sql.TileCodecs.cellId($z, $x, $y)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression,
-      s: Expression,
-      t: Expression): Expression = copy(f, s, t)
-}
-
-/** `tc_cellz(cell)` — zoom level of a Z-order cell id (sentinel-bit
-  * position / 2). */
-case class CellZExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override protected def nullSafeEval(cell: Any): Any =
-    TileCodecs.cellZ(cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.TileCodecs.cellZ($c)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `tc_cellx(cell)` — de-interleaved x of a Z-order cell id. */
-case class CellXExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(cell: Any): Any =
-    TileCodecs.cellX(cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.TileCodecs.cellX($c)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `tc_celly(cell)` — de-interleaved y of a Z-order cell id. */
-case class CellYExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(cell: Any): Any =
-    TileCodecs.cellY(cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.TileCodecs.cellY($c)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `tc_hilbert(z, x, y)` — Hilbert-curve cell id (locality-preserving
-  * physical-layout key; see [[TileCodecs.hilbertId]]). */
-case class HilbertIdExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(z: Any, x: Any, y: Any): Any =
-    TileCodecs.hilbertId(
-      z.asInstanceOf[Int],
-      x.asInstanceOf[Long],
-      y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (z, x, y) => s"graft.sql.TileCodecs.hilbertId($z, $x, $y)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression,
-      s: Expression,
-      t: Expression): Expression = copy(f, s, t)
-}
-
-/** `tc_hilbertx(cell)` — x of a Hilbert cell id (the zoom comes from
-  * the shared sentinel, so `tc_cellz` reads it). */
-case class HilbertXExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(cell: Any): Any =
-    TileCodecs.hilbertX(cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.TileCodecs.hilbertX($c)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `tc_hilberty(cell)` — y of a Hilbert cell id. */
-case class HilbertYExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(cell: Any): Any =
-    TileCodecs.hilbertY(cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.TileCodecs.hilbertY($c)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 /** MinHash signature kernel: md5-derived 32-bit base hash per shingle,
   * k universal hashes `(a_j * h + b_j) mod p`, element-wise minimum —
   * all in one tight loop per row (the declarative fold allocates a k-array
@@ -298,9 +172,8 @@ object MinHashKernel {
 
   def signature(
       shingles: org.apache.spark.sql.catalyst.util.ArrayData,
-      as: Array[Long],
-      bs: Array[Long],
-      p: Long): org.apache.spark.sql.catalyst.util.ArrayData = {
+      c: MinHashCoeffs): org.apache.spark.sql.catalyst.util.ArrayData = {
+    val as = c.as; val bs = c.bs; val p = c.p
     val k = as.length
     val mins = Array.fill(k)(Long.MaxValue)
     val n = shingles.numElements()
@@ -317,6 +190,16 @@ object MinHashKernel {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
   }
+}
+
+/** The k MinHash hash coefficients as one kernel parameter: value
+  * equality over `k`, the arrays derived once from
+  * [[graft.dedup.Dedup.minhashCoeffs]]. */
+final case class MinHashCoeffs(k: Int) {
+  private val coeffs = graft.dedup.Dedup.minhashCoeffs(k)
+  val as: Array[Long] = coeffs.map(_._1).toArray
+  val bs: Array[Long] = coeffs.map(_._2).toArray
+  val p: Long = graft.dedup.Dedup.MinhashPrime
 }
 
 /** Sorted-array set kernels for near-dup verification: merge-walk
@@ -352,69 +235,6 @@ object ArrayKernels {
   }
 }
 
-/** `sorted_intersect_count(a, b)` — |a ∩ b| for value-sorted long arrays
-  * with DISTINCT, NON-NULL elements; codegen-capable. Inputs are
-  * type-checked as ARRAY<BIGINT> at analysis (int-element arrays would
-  * stride-read garbage through ArrayData.getLong); a null slot throws
-  * at runtime instead of silently reading as 0. PRECONDITION
-  * (documented contract, not checked per row): both arrays
-  * ascending-sorted with distinct elements — e.g.
-  * `sort_array(collect_set(...))`; unsorted or duplicate inputs return
-  * counts that differ from `array_intersect` semantics. */
-case class SortedIntersectCountExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(
-      org.apache.spark.sql.types.ArrayType(LongType),
-      org.apache.spark.sql.types.ArrayType(LongType))
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayKernels.sortedIntersectCount(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.sql.ArrayKernels.sortedIntersectCount($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression,
-      r: Expression): Expression = copy(l, r)
-}
-
-/** `minhash_sig(shingles)` — ArrayType(LongType) signature of length k. */
-case class MinHashSigExpr(child: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
-
-  private lazy val coeffs: (Array[Long], Array[Long]) = {
-    val c = graft.dedup.Dedup.minhashCoeffs(k)
-    (c.map(_._1).toArray, c.map(_._2).toArray)
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(shingles: Any): Any =
-    MinHashKernel.signature(
-      shingles.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      coeffs._1,
-      coeffs._2,
-      graft.dedup.Dedup.MinhashPrime)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asRef = ctx.addReferenceObj("as", coeffs._1, "long[]")
-    val bsRef = ctx.addReferenceObj("bs", coeffs._2, "long[]")
-    defineCodeGen(ctx, ev, s =>
-      s"graft.sql.MinHashKernel.signature($s, $asRef, $bsRef, " +
-        s"${graft.dedup.Dedup.MinhashPrime}L)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 object TileExpressions {
   /** Second argument as a literal Int with a default — for SQL-facing
     * expression builders whose parameter must be plan-time constant. */
@@ -434,23 +254,21 @@ object TileExpressions {
     * tc_cellid/tc_hilbert keys needs tc_cellz/x/y and the hilbert
     * inverses to read them back. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = {
-    type Build = Seq[Expression] => Expression
-    def zxy(f: (Expression, Expression, Expression) => Expression): Build =
-      e => f(Cast(e(0), IntegerType), Cast(e(1), LongType), Cast(e(2), LongType))
-    def cell(f: Expression => Expression): Build = e => f(Cast(e(0), LongType))
+    import GraftColumnBridge.{column, expression}
+    def sql(f: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column)
+        : Seq[Expression] => Expression = e => expression(f(e.map(column)))
     Seq(
-      "tc_quadkey" -> zxy(QuadKeyExpr(_, _, _)),
-      "tc_cellid" -> zxy(CellIdExpr(_, _, _)),
-      "tc_hilbert" -> zxy(HilbertIdExpr(_, _, _)),
-      "tc_cellz" -> cell(CellZExpr(_)),
-      "tc_cellx" -> cell(CellXExpr(_)),
-      "tc_celly" -> cell(CellYExpr(_)),
-      "tc_hilbertx" -> cell(HilbertXExpr(_)),
-      "tc_hilberty" -> cell(HilbertYExpr(_)),
-      "tc_sorted_intersect_count" ->
-        ((e: Seq[Expression]) => SortedIntersectCountExpr(e(0), e(1))),
+      "tc_quadkey" -> sql(c => Kernel.quadkey(c(0), c(1), c(2))),
+      "tc_cellid" -> sql(c => Kernel.cellId(c(0), c(1), c(2))),
+      "tc_hilbert" -> sql(c => Kernel.hilbertId(c(0), c(1), c(2))),
+      "tc_cellz" -> sql(c => Kernel.cellZ(c(0))),
+      "tc_cellx" -> sql(c => Kernel.cellX(c(0))),
+      "tc_celly" -> sql(c => Kernel.cellY(c(0))),
+      "tc_hilbertx" -> sql(c => Kernel.hilbertX(c(0))),
+      "tc_hilberty" -> sql(c => Kernel.hilbertY(c(0))),
+      "tc_sorted_intersect_count" -> sql(c => Kernel.sortedIntersectCount(c(0), c(1))),
       "tc_minhash_sig" ->
-        ((e: Seq[Expression]) => MinHashSigExpr(e(0), literalInt(e, 1, 16))))
+        (e => expression(Kernel.minhashSig(column(e(0)), literalInt(e, 1, 16)))))
   }
 
   /** Register [[functions]] in the session's function registry so they

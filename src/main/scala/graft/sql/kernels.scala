@@ -1,9 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,9 +13,11 @@ import graft.core.CellIndex
   * expression-tree-at-a-time per row, with per-element array
   * allocation) and by md5 → hex-string → `conv` round trips. Each
   * kernel below computes the IDENTICAL value in one tight JVM loop and
-  * is exposed as a codegen-capable Expression, so the surrounding
-  * operators keep their exact output contracts (every consumer is
-  * oracle-checked) while the per-row constant drops by 5-50x.
+  * is called from Catalyst through one [[Kernel]] builder (a
+  * `StaticInvoke`: one static call per row in generated code), so the
+  * surrounding operators keep their exact output contracts (every
+  * consumer is oracle-checked) while the per-row constant drops by
+  * 5-50x.
   *
   * Invariant shared by every kernel: ARITHMETIC ORDER AND WIDTH match
   * the declarative form it replaces — sequential left-to-right double
@@ -48,26 +47,6 @@ object HashKernels {
     }
     v
   }
-}
-
-/** `md5_prefix_long(bin, nibbles)` — the md5-derived integer hash the
-  * dedup/text operators key on, without the hex-string round trip.
-  * Bit-identical to `conv(substring(md5(bin), 1, nibbles), 16, 10)
-  * .cast("long")` (nibbles <= 15). */
-case class Md5PrefixExpr(child: Expression, nibbles: Int, off: Int = 1)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  require(nibbles >= 1 && nibbles <= 15, s"nibbles=$nibbles out of [1,15]")
-  require(off >= 1 && off - 1 + nibbles <= 32, s"off=$off out of range")
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(bin: Any): Any =
-    HashKernels.md5Slice(bin.asInstanceOf[Array[Byte]], off, nibbles)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b =>
-      s"graft.sql.HashKernels.md5Slice($b, $off, $nibbles)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 object TextKernels {
@@ -366,12 +345,8 @@ object TextKernels {
   /** MinHash signature straight from the word array — the
     * [[MinHashKernel.signature]] update loop fed by [[shingleHash32]]'s
     * digest-direct shingle hashes (no shingle strings). */
-  def minhashSigWords(
-      words: ArrayData,
-      n: Int,
-      as: Array[Long],
-      bs: Array[Long],
-      p: Long): ArrayData = {
+  def minhashSigWords(words: ArrayData, n: Int, c: MinHashCoeffs): ArrayData = {
+    val as = c.as; val bs = c.bs; val p = c.p
     val k = as.length
     val mins = Array.fill(k)(Long.MaxValue)
     val sz = words.numElements()
@@ -403,153 +378,6 @@ object TextKernels {
     }
     new GenericArrayData(mins)
   }
-}
-
-/** `winnow_fp(text)` — fused winnowing fingerprints;
-  * array<struct<pos,fp>> identical to the staged
-  * winnowKeys → winnowWinners composition. */
-case class WinnowFpExpr(child: Expression, k: Int, w: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  require(k >= 1 && w >= 1, s"k=$k, w=$w must be positive")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("pos", LongType, nullable = false),
-      StructField("fp", LongType, nullable = false))),
-    containsNull = false)
-  override protected def nullSafeEval(text: Any): Any =
-    TextKernels.winnowFingerprints(text.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.sql.TextKernels.winnowFingerprints($t, $k, $w)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `tc_words(text)` — lower-cased [a-z0-9]+ tokens (codegen word
-  * scan). */
-case class WordsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(text: Any): Any =
-    TextKernels.words(text.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.sql.TextKernels.words($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `token_count(text)` — `size(regexp_extract_all(text, "\\S+", 0))`
-  * as a raw byte-run count (no match array, no Matcher). */
-case class TokenCountExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(text: Any): Any =
-    TextKernels.tokenCount(text.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.sql.TextKernels.tokenCount($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `alpha_count(text)` —
-  * `size(regexp_extract_all(lower(text), "[a-z]", 0))` as an a-z byte
-  * count of the lowered string. */
-case class AlphaCountExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(text: Any): Any =
-    TextKernels.alphaCount(text.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.sql.TextKernels.alphaCount($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `word_count_at_least(text, n)` — `size(words(text)) >= n` with a
-  * short-circuiting run count (no word array). */
-case class WordCountAtLeastExpr(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = BooleanType
-  override protected def nullSafeEval(text: Any): Any =
-    TextKernels.countWordsAtLeast(text.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.sql.TextKernels.countWordsAtLeast($t, $n)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `simhash60(words)` — 60-bit SimHash of the word array. */
-case class SimHash60Expr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(words: Any): Any =
-    TextKernels.simhash60(words.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, ws => s"graft.sql.TextKernels.simhash60($ws)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `tc_bigrams(words)` — adjacent word bigram strings. */
-case class BigramsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(words: Any): Any =
-    TextKernels.bigrams(words.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, ws => s"graft.sql.TextKernels.bigrams($ws)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `shingle_hash32(words, n)` — hash32 of each word n-gram, optionally
-  * deduped row-locally. */
-case class ShingleHash32Expr(child: Expression, n: Int, distinct: Boolean = false)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(n >= 1, s"n=$n must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(words: Any): Any =
-    TextKernels.shingleHash32(words.asInstanceOf[ArrayData], n, distinct)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, ws =>
-      s"graft.sql.TextKernels.shingleHash32($ws, $n, $distinct)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `minhash_sig_words(words, k, n)` — MinHash signature from the word
-  * array (digest-direct shingles; same values as
-  * `MinHashSigExpr(shingles(text, n), k)`). */
-case class MinHashSigWordsExpr(child: Expression, k: Int, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private lazy val coeffs: (Array[Long], Array[Long]) = {
-    val c = graft.dedup.Dedup.minhashCoeffs(k)
-    (c.map(_._1).toArray, c.map(_._2).toArray)
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(words: Any): Any =
-    TextKernels.minhashSigWords(
-      words.asInstanceOf[ArrayData], n, coeffs._1, coeffs._2,
-      graft.dedup.Dedup.MinhashPrime)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asRef = ctx.addReferenceObj("as", coeffs._1, "long[]")
-    val bsRef = ctx.addReferenceObj("bs", coeffs._2, "long[]")
-    defineCodeGen(ctx, ev, ws =>
-      s"graft.sql.TextKernels.minhashSigWords($ws, $n, $asRef, $bsRef, " +
-        s"${graft.dedup.Dedup.MinhashPrime}L)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 object VecKernels {
@@ -600,66 +428,6 @@ object VecKernels {
     }
     acc
   }
-}
-
-private[sql] trait ArrayPairExpr
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  protected def kernelName: String
-  protected def boxedType: String
-  protected def primType: String
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("r")
-      s"""$boxedType $r = graft.sql.VecKernels.$kernelName($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.${primType}Value(); }""".stripMargin
-    })
-}
-
-/** `vec_dot(a, b)` — sequential double dot product. */
-case class DotExpr(left: Expression, right: Expression) extends ArrayPairExpr {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override protected def kernelName: String = "dot"
-  override protected def boxedType: String = "java.lang.Double"
-  override protected def primType: String = "double"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** `vec_l2(a, b)` — sequential squared-L2 distance. */
-case class L2Expr(left: Expression, right: Expression) extends ArrayPairExpr {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override protected def kernelName: String = "l2"
-  override protected def boxedType: String = "java.lang.Double"
-  override protected def primType: String = "double"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.l2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** `hamming_wide(a, b)` — summed xor popcount over array<long>. */
-case class HammingWideExpr(left: Expression, right: Expression)
-    extends ArrayPairExpr {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override protected def kernelName: String = "hammingWide"
-  override protected def boxedType: String = "java.lang.Integer"
-  override protected def primType: String = "int"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.hammingWide(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 object SpatialKernels {
@@ -791,72 +559,6 @@ object SpatialKernels {
   }
 }
 
-/** `point_in_polygon(px, py, vertices)` — codegen even-odd ray cast.
-  * Requires the vertex struct fields named x, y IN THAT ORDER (the
-  * engine's canonical vertex layout; checked at analysis). */
-case class PointInPolygonExpr(
-    first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = first.dataType == DoubleType && second.dataType == DoubleType &&
-      (third.dataType match {
-        case ArrayType(st: StructType, _) =>
-          st.fields.length == 2 && st.fields(0).name == "x" &&
-            st.fields(1).name == "y" &&
-            st.fields.forall(_.dataType == DoubleType)
-        case _ => false
-      })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"point_in_polygon(double, double, array<struct<x:double,y:double>>) " +
-        s"got (${first.dataType}, ${second.dataType}, ${third.dataType})")
-  }
-  override protected def nullSafeEval(px: Any, py: Any, vs: Any): Any =
-    SpatialKernels.pointInPolygon(
-      px.asInstanceOf[Double], py.asInstanceOf[Double],
-      vs.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (px, py, vs) =>
-      s"graft.sql.SpatialKernels.pointInPolygon($px, $py, $vs)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `hex_cell(px, py, size)` — packed hex cell id of a point (fused
-  * axial transform + cube rounding + pack). */
-case class HexCellExpr(left: Expression, right: Expression, size: Double)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(px: Any, py: Any): Any =
-    SpatialKernels.hexCell(
-      px.asInstanceOf[Double], py.asInstanceOf[Double], size)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (px, py) =>
-      s"graft.sql.SpatialKernels.hexCell($px, $py, ${size}D)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** `cell_cover(vertices)` — tight polygon cover on a cell index
-  * ([[SpatialKernels.tightCover]]). Codegen passes the index as a
-  * reference object, so one generated class serves every index. */
-case class CellCoverExpr(child: Expression, index: CellIndex)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(vs: Any): Any =
-    SpatialKernels.tightCover(vs.asInstanceOf[ArrayData], index)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cellIndex", index, classOf[CellIndex].getName)
-    defineCodeGen(ctx, ev, vs => s"graft.sql.SpatialKernels.tightCover($vs, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 object BpeKernel {
   /** BPE-encode every word and flatten the tokens — value-identical to
     * `flatten(transform(words, w => split(trim(encodeWord(w, merges)),
@@ -864,8 +566,8 @@ object BpeKernel {
     * in rank order as one left-to-right non-overlapping pass
     * ([[graft.text.Bpe.mergeOnce]] — the replace-chain equivalence the
     * Bpe scaladoc and BpeSpec pin). */
-  def encodeTokens(
-      words: ArrayData, as: Array[String], bs: Array[String]): ArrayData = {
+  def encodeTokens(words: ArrayData, merges: BpeMerges): ArrayData = {
+    val as = merges.as; val bs = merges.bs
     val out = new java.util.ArrayList[Any]()
     val nw = words.numElements()
     var wi = 0
@@ -904,21 +606,9 @@ object BpeKernel {
   }
 }
 
-/** `bpe_encode(words)` — flattened BPE tokens for a ranked merge
-  * list. */
-case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String)])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private lazy val parts: (Array[String], Array[String]) =
-    (merges.map(_._1).toArray, merges.map(_._2).toArray)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(words: Any): Any =
-    BpeKernel.encodeTokens(words.asInstanceOf[ArrayData], parts._1, parts._2)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("as", parts._1, "java.lang.String[]")
-    val bRef = ctx.addReferenceObj("bs", parts._2, "java.lang.String[]")
-    defineCodeGen(ctx, ev, ws =>
-      s"graft.sql.BpeKernel.encodeTokens($ws, $aRef, $bRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+/** A ranked BPE merge list as one kernel parameter: value equality
+  * over `merges`, the two arrays derived once. */
+final case class BpeMerges(merges: Seq[(String, String)]) {
+  val as: Array[String] = merges.map(_._1).toArray
+  val bs: Array[String] = merges.map(_._2).toArray
 }

@@ -183,9 +183,7 @@ object Bpe {
     // so the former per-word interpreted transform (regex + replace
     // chain + trim/split PER WORD) + aggregate fold collapses to one
     // codegen size(); empty and null word arrays yield 0 both ways.
-    val tokens = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.BpeEncodeExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(ws), merges))
+    val tokens = graft.sql.Kernel.bpeEncode(ws, merges)
     df.select(
       col(idCol).as("id"),
       size(ws).as("n_words"),
@@ -214,8 +212,5 @@ object Bpe {
     // 8 string replaces + trim/split allocations.
     df.select(
       col(idCol).as("id"),
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.BpeEncodeExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            TextOps.words(col(textCol))), merges)).as("tokens"))
+      graft.sql.Kernel.bpeEncode(TextOps.words(col(textCol)), merges).as("tokens"))
 }

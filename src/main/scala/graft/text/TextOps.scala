@@ -14,18 +14,12 @@ object TextOps {
     * `regexp_extract_all(lower(text), "[a-z0-9]+", 0)` (the pattern is
     * ASCII-only, so a byte scan over the lowered string matches the
     * regex exactly; [[graft.sql.TextKernels.words]]). */
-  def words(text: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.WordsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(text)))
+  def words(text: Column): Column = graft.sql.Kernel.words(text)
 
   /** Whitespace-token count — kernel byte-run scan, value-identical to
     * `size(regexp_extract_all(text, "\\S+", 0))` without materializing
     * the match array (KernelParitySpec pin). */
-  def tokenCount(text: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.TokenCountExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(text)))
+  def tokenCount(text: Column): Column = graft.sql.Kernel.tokenCount(text)
 
   def charCount(text: Column): Column = length(text)
 
@@ -34,10 +28,7 @@ object TextOps {
     * `size(regexp_extract_all(lower(text), "[a-z]", 0))`
     * (KernelParitySpec pin). */
   def alphaRatioE6(text: Column): Column =
-    floor(lit(1000000.0) *
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.AlphaCountExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(text))) /
+    floor(lit(1000000.0) * graft.sql.Kernel.alphaCount(text) /
       greatest(length(text), lit(1))).cast("long")
 
   private val stopwords: Seq[(String, String)] = Seq(
@@ -83,10 +74,7 @@ object TextOps {
     * digits < 2^60). Kernel digest-prefix — bit-identical to
     * `conv(substring(md5(text), 1, 15), 16, 10)` without the
     * hex-string round trip. */
-  def fingerprint(text: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.Md5PrefixExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(text.cast("binary")), 15))
+  def fingerprint(text: Column): Column = graft.sql.Kernel.md5Prefix(text.cast("binary"), 15)
 
   /** Adjacent word bigrams ("a b") from a words array — the unit of
     * the Gopher-style repetition signal (q76): the fraction of a
@@ -96,9 +84,7 @@ object TextOps {
   def bigrams(ws: Column): Column =
     // kernel byte-concat — value-identical to the former
     // transform/concat_ws HOF (incl. the <2-words empty array)
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.sql.BigramsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(ws)))
+    graft.sql.Kernel.bigrams(ws)
 
   /** The Gopher-style repetition signal as a relation: per document,
     * the most frequent word bigram (ties to the lexicographically
@@ -250,10 +236,7 @@ object TextOps {
     // staged form); the staging/CSE hazards the scaladocs above
     // describe no longer apply to this path — the kernel is a single
     // codegen expression evaluated once per row.
-    df.withColumn(outCol,
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.sql.WinnowFpExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)), k, w)))
+    df.withColumn(outCol, graft.sql.Kernel.winnowFp(col(textCol), k, w))
 
   /** Single-Column winnowing — small-document convenience ONLY: the
     * fused expression re-hashes all grams once per window (quadratic;

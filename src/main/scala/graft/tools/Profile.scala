@@ -33,10 +33,14 @@ import graft.{Bench, ScalingBench, SparkEntry}
 object Profile {
   val Samples = 3
 
+  /** The kernel calls counted in the final plan, each as its rendered
+    * call `<owner>.<method>(` lower-cased: a plan prints a kernel call
+    * as `static_invoke(graft.sql.<Owner>.<method>(...))`. */
   val Kernels: Seq[String] = Seq(
-    "winnowfpexpr", "simhash60", "minhashsigwords", "shinglehash32",
-    "bpeencode", "md5prefix", "pointinpolygon", "hexcell",
-    "hammingwide", "wordsexpr", "bigrams")
+    "textkernels.winnowfingerprints(", "textkernels.simhash60(", "textkernels.minhashsigwords(",
+    "textkernels.shinglehash32(", "bpekernel.encodetokens(", "hashkernels.md5slice(",
+    "spatialkernels.pointinpolygon(", "spatialkernels.hexcell(", "veckernels.hammingwide(",
+    "textkernels.words(", "textkernels.bigrams(")
 
   /** Lowercased optimized-plan text of CodegenFallback per-row interpreters. */
   private val HofMarkers: Seq[String] = Seq(
@@ -114,20 +118,31 @@ object Profile {
     } finally sc.setLocalProperty(PhaseKey, null)
   }
 
+  // only the Final Plan section: the trailing Initial Plan dump
+  // re-prints every subtree and would inflate the counts
+  private def finalPlan(qe: QueryExecution): String =
+    qe.executedPlan.toString.split("== Initial Plan ==")(0)
+
+  private def hits(lower: String, s: String): Int =
+    lower.split(java.util.regex.Pattern.quote(s), -1).length - 1
+
+  /** Occurrences of each [[Kernels]] call in the final plan of `qe`. */
+  private[graft] def kernelCounts(qe: QueryExecution): Seq[(String, Int)] = {
+    val lower = finalPlan(qe).toLowerCase
+    Kernels.map(k => k -> hits(lower, k))
+  }
+
   /** Facts of the final adaptive plan of an executed query, as JSON. */
   private def planFacts(qe: QueryExecution): String = {
-    // only the Final Plan section: the trailing Initial Plan dump
-    // re-prints every subtree and would inflate the counts
-    val text = qe.executedPlan.toString.split("== Initial Plan ==")(0)
+    val text = finalPlan(qe)
     val lower = text.toLowerCase
-    def hits(s: String): Int = lower.split(java.util.regex.Pattern.quote(s), -1).length - 1
     // AQE prints a reused stage's subtree in full at every reference,
     // with the same id: distinct ids are the stages actually executed
     def stages(kind: String): Int = s"${kind}querystage (\\d+)".r.findAllMatchIn(lower).map(_.group(1)).toSet.size
     val optimized = qe.optimizedPlan.toString.toLowerCase
     s"""{"shuffle_stages":${stages("shuffle")},"broadcast_stages":${stages("broadcast")},""" +
-      s""""reused_exchanges":${hits("reusedexchange")},""" +
-      s""""kernels":${Kernels.map(k => s"${str(k)}:${hits(k)}").mkString("{", ",", "}")},""" +
+      s""""reused_exchanges":${hits(lower, "reusedexchange")},""" +
+      s""""kernels":${kernelCounts(qe).map { case (k, n) => s"${str(k)}:$n" }.mkString("{", ",", "}")},""" +
       s""""hof_markers":${HofMarkers.filter(optimized.contains).map(str).mkString("[", ",", "]")},""" +
       s""""text":${str(text)}}"""
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 
 import graft.tools.Profile
 
@@ -24,7 +25,36 @@ class ProfileSpec extends SparkTestBase {
 
   test("kernel occurrences are read from the final plan") {
     val kernels = records("q68_point_in_polygon").getAs[Row]("plan").getAs[Row]("kernels")
-    assert(kernels.getAs[Long]("pointinpolygon") >= 1)
+    assert(kernels.getAs[Long]("spatialkernels.pointinpolygon(") >= 1)
+  }
+
+  test("every kernel entry counts its own call") {
+    import graft.sql.Kernel
+    val df = spark.range(4).select(
+      col("id"),
+      concat(lit("ab cd "), col("id").cast("string")).as("t"),
+      col("id").cast("double").as("x"),
+      array(struct(lit(0.0).as("x"), lit(0.0).as("y")), struct(lit(2.0).as("x"), lit(0.0).as("y")),
+        struct(lit(0.0).as("x"), lit(2.0).as("y"))).as("vs"))
+    val ws = Kernel.words(col("t"))
+    val calls = Map(
+      "textkernels.winnowfingerprints(" -> Kernel.winnowFp(col("t"), 3, 2),
+      "textkernels.simhash60(" -> Kernel.simhash60(ws),
+      "textkernels.minhashsigwords(" -> Kernel.minhashSigWords(ws, 4, 2),
+      "textkernels.shinglehash32(" -> Kernel.shingleHash32(ws, 2),
+      "bpekernel.encodetokens(" -> Kernel.bpeEncode(ws, Seq("a" -> "b")),
+      "hashkernels.md5slice(" -> Kernel.md5Prefix(col("t").cast("binary"), 8),
+      "spatialkernels.pointinpolygon(" -> Kernel.pointInPolygon(col("x"), col("x"), col("vs")),
+      "spatialkernels.hexcell(" -> Kernel.hexCell(col("x"), col("x"), 1.0),
+      "veckernels.hammingwide(" -> Kernel.hammingWide(array(col("id")), array(col("id"))),
+      "textkernels.words(" -> ws,
+      "textkernels.bigrams(" -> Kernel.bigrams(ws))
+    assert(calls.keySet == Profile.Kernels.toSet)
+    for ((kernel, call) <- calls) {
+      val q = df.select(call.as("k"))
+      q.collect()
+      assert(Profile.kernelCounts(q.queryExecution).toMap.apply(kernel) >= 1, kernel)
+    }
   }
 
   test("an unknown query yields an error record") {

@@ -97,6 +97,22 @@ class RobustnessSpec extends SparkTestBase {
     assert(Multimodal.pixelRows(junk).count() === 0L)
   }
 
+  test("an image header declaring a huge raster is rejected before decoding") {
+    val s = spark
+    import s.implicits._
+    val png = ImageCodec.encode(new java.awt.image.BufferedImage(4, 4,
+      java.awt.image.BufferedImage.TYPE_INT_RGB), "png")
+    // IHDR: width and height at 16 and 20, its CRC over type and data at 29
+    putU32(png, 16, 26000L, bigEndian = true)
+    putU32(png, 20, 26000L, bigEndian = true)
+    val crc = new java.util.zip.CRC32
+    crc.update(png, 12, 17)
+    putU32(png, 29, crc.getValue, bigEndian = true)
+    val out = Multimodal.imageMeta(Seq(("m1", png)).toDF("media_id", "bytes")).collect()
+    assert(out.length == 1)
+    assert(out(0).getAs[String]("error").contains("decode cap"), out(0))
+  }
+
   /** `decode` ends within 10 s by throwing an `IllegalArgumentException`;
     * run on a daemon thread, so a walk that never ends fails here
     * instead of hanging the suite. */

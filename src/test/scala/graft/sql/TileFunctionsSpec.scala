@@ -433,6 +433,6 @@ class TileFunctionsSpec extends SparkTestBase {
       .select(quadkey(col("z"), col("x"), col("y")).as("qk"))
       .queryExecution.executedPlan.toString
     // the `*(n)` prefix marks operators inside a WholeStageCodegen span
-    assert(plan.contains("*(1) Project [quadkeyexpr"), plan)
+    assert(plan.contains("*(1) Project [static_invoke(graft.sql.TileCodecs.quadkeyUtf8("), plan)
   }
 }

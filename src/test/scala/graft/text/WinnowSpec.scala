@@ -96,11 +96,11 @@ class WinnowSpec extends SparkTestBase {
     val fused = TextOps.winnowFingerprints(df, "text", K, W)
 
     // the round-6 scale property: winnowFingerprints is ONE kernel
-    // expression per row (WinnowFpExpr — a single digest pass + O(n)
-    // deque minima), with no interpreted HOF window-min pass and no
-    // md5 hex round trip left in the plan
+    // call per row (TextKernels.winnowFingerprints — a single digest
+    // pass + O(n) deque minima), with no interpreted HOF window-min pass
+    // and no md5 hex round trip left in the plan
     val planStr = fused.queryExecution.optimizedPlan.toString
-    assert(planStr.contains("winnowfpexpr"),
+    assert(planStr.contains("TextKernels.winnowFingerprints("),
       s"plan uses the fused winnow kernel:\n$planStr")
     assert(!planStr.contains("array_min") && !planStr.contains("md5"),
       s"no interpreted window-min / md5 hex pass left in the plan:\n$planStr")
